@@ -80,10 +80,10 @@ object Caches {
     * registry lock held; the actual unpersist/delete runs on the built
     * value, outside any build.
     */
-  private def sweepPending(): Unit = {
+  private def sweepPending(blocking: Boolean = false): Unit = {
     val frames = pendingFrames.filter(_.isBuilt)
     pendingFrames --= frames
-    frames.foreach(h => h.value.unpersist(blocking = false))
+    frames.foreach(h => h.value.unpersist(blocking))
     val dirs = pendingDirs.filter(_.isBuilt)
     pendingDirs --= dirs
     dirs.foreach(h => deleteTree(h.value))
@@ -270,15 +270,18 @@ object Caches {
     }
   }
 
-  /** Release every cached frame and staged directory (test teardown /
-    * session shutdown).
+  /** Release every cached frame and staged directory, and drop the
+    * stored-index memo ([[graft.sources.StoredIndex.clearMemo]]) — test
+    * teardown / session shutdown. Unpersists BLOCK, so no block removal
+    * is still in flight when the caller stops the session.
     */
   def clear(): Unit = synchronized {
-    sweepPending()
+    sweepPending(blocking = true)
+    graft.sources.StoredIndex.clearMemo()
     // entries still mid-build stay pending — their values do not exist
     // yet; a later clear()/registry call sweeps them once built
     live.values.flatten.foreach { case (_, h) =>
-      if (h.isBuilt) h.value.unpersist(blocking = false)
+      if (h.isBuilt) h.value.unpersist(blocking = true)
       else pendingFrames += h
     }
     live.clear()

@@ -448,17 +448,16 @@ object Dedup {
 
   /** The bucket-size-cut complement — (band, bh) of buckets whose merged
     * occupancy exceeds [[maxBucketSize]] — derived from the `bcounts` LSM
-    * and CACHED per served index version (route consumers probe it
-    * every micro-batch; the tiny result is version-stable between
-    * appends, so the merge aggregation runs once per version, not once
-    * per batch).
+    * and CACHED per served commit (route consumers probe it every
+    * micro-batch; the tiny result is stable between appends, so the
+    * merge aggregation runs once per commit, not once per batch).
     */
   private[operators] def servedOversize(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       asOf: Option[Int] = None): DataFrame = {
-    val ver = asOf.orElse(graft.sources.IndexCommit
-      .resolveRoot(s"$dir/bcounts").map(_._2)).getOrElse(-1)
-    graft.Caches.cached("lsh-oversize", s"$dir|v$ver") {
+    val id = graft.sources.StoredIndex.commitId(s"$dir/bcounts", asOf)
+      .getOrElse("legacy")
+    graft.Caches.cached("lsh-oversize", s"$dir|$id") {
       mergedBcounts(spark, dir, asOf).filter(col("n") > maxBucketSize)
         .select("band", "bh")
     }

@@ -143,9 +143,9 @@ object LangModel {
     */
   private def metaOf(spark: SparkSession, dir: String,
                      asOf: Option[Int]): (Int, Long, Int, Int) =
-    // version-keyed driver memo: immutable per committed version, was one
-    // plan-time collect job per serve (StoredIndex.memoByVersion doc)
-    StoredIndex.memoByVersion("lm-meta", dir, asOf) {
+    // commit-keyed driver memo: immutable per committed version, was one
+    // plan-time collect job per serve (StoredIndex.memoByCommit doc)
+    StoredIndex.memoByCommit("lm-meta", dir, asOf) {
       val r = StoredIndex.readTable(spark, s"$dir/meta",
         "vocab_top INT, v BIGINT, nbuckets INT, ordern INT", asOf).collect()
       require(r.nonEmpty, s"no lm index meta under $dir")

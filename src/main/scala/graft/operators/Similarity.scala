@@ -460,8 +460,8 @@ object Similarity {
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
                             dir: String,
                             asOf: Option[Int] = None): Seq[Seq[Seq[Double]]] =
-    // version-keyed driver memo, same contract as readCentroids
-    graft.sources.StoredIndex.memoByVersion("ivf-codebooks", dir, asOf) {
+    // commit-keyed driver memo, same contract as readCentroids
+    graft.sources.StoredIndex.memoByCommit("ivf-codebooks", dir, asOf) {
       graft.sources.StoredIndex.readTable(spark, s"$dir/codebooks",
           "sub INT, code INT, cv ARRAY<DOUBLE>", asOf)
         .collect()
@@ -644,10 +644,10 @@ object Similarity {
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             dir: String,
                             asOf: Option[Int] = None): Seq[Seq[Double]] =
-    // version-keyed driver memo: centroids change only through commits
+    // commit-keyed driver memo: centroids change only through commits
     // (retrain/rebuild), and collecting them was one plan-time job per
-    // annRoute/pqRoute serve (StoredIndex.memoByVersion doc)
-    graft.sources.StoredIndex.memoByVersion("ivf-centroids", dir, asOf) {
+    // annRoute/pqRoute serve (StoredIndex.memoByCommit doc)
+    graft.sources.StoredIndex.memoByCommit("ivf-centroids", dir, asOf) {
       graft.sources.StoredIndex.readTable(spark, s"$dir/centroids",
           "cell BIGINT, cv ARRAY<DOUBLE>", asOf)
         .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq

@@ -165,10 +165,10 @@ object TextIndex {
     */
   private def readBpeMerges(spark: SparkSession,
                             dir: String): Seq[Bpe.Merge] =
-    // version-keyed driver memo: the trained merge table is immutable per
+    // commit-keyed driver memo: the trained merge table is immutable per
     // committed version, and collecting it was one plan-time job per
-    // bpe-index serve (StoredIndex.memoByVersion doc)
-    StoredIndex.memoByVersion("bm25-bpe-merges", dir) {
+    // bpe-index serve (StoredIndex.memoByCommit doc)
+    StoredIndex.memoByCommit("bm25-bpe-merges", dir) {
       StoredIndex.readTable(spark, s"$dir/tokmerges",
           "rank INT, `left` STRING, `right` STRING, pairCount BIGINT")
         .collect().sortBy(_.getInt(0))
@@ -232,9 +232,9 @@ object TextIndex {
     * 0) on indexes built before each option existed.
     */
   private def metaFull(spark: SparkSession, dir: String): Meta =
-    // version-keyed driver memo: the meta row is immutable per committed
+    // commit-keyed driver memo: the meta row is immutable per committed
     // manifest version, and collecting it was one plan-time job per serve
-    StoredIndex.memoByVersion("bm25-meta", dir) {
+    StoredIndex.memoByCommit("bm25-meta", dir) {
       val r = StoredIndex.readTable(spark, s"$dir/meta",
         "nbuckets INT, dlrange BIGINT, fwd BOOLEAN, pos BOOLEAN, " +
           "tok STRING, impb INT, impbs INT, impfrac DOUBLE")
@@ -335,6 +335,28 @@ object TextIndex {
     StoredIndex.readTable(spark, s"$dir/stats",
         "n BIGINT, tl BIGINT, seg INT", asOf)
       .agg(sum(col("n")).as("n"), sum(col("tl")).as("tl"))
+
+  /** The served version's live corpus stats (n docs, total length) —
+    * two longs, null on an empty index — collected once per commit
+    * ([[StoredIndex.memoByCommit]]; the stats LSM changes only through
+    * commits).
+    */
+  private def corpusStats(spark: SparkSession, dir: String,
+                          asOf: Option[Int]): (java.lang.Long, java.lang.Long) =
+    StoredIndex.memoByCommit("bm25-stats", dir, asOf) {
+      val r = mergedStats(spark, dir, asOf).collect().head
+      (r.getAs[java.lang.Long](0), r.getAs[java.lang.Long](1))
+    }
+
+  /** `df` with the corpus stats as literal `n` / `tl` columns for
+    * [[tscoreExpr]] — no stats scan, shuffle or broadcast in the plan.
+    */
+  private def withCorpusStats(spark: SparkSession, dir: String,
+                              asOf: Option[Int], df: DataFrame): DataFrame = {
+    val (n, tl) = corpusStats(spark, dir, asOf)
+    df.withColumn("n", lit(n).cast("bigint"))
+      .withColumn("tl", lit(tl).cast("bigint"))
+  }
 
   /** Anti-join `idCol` against the served version's tombstone set
     * (`distinct = true`: the BM25 tombstone table carries one (id, tb)
@@ -902,12 +924,10 @@ object TextIndex {
       case None => col("tb").isin(wantedTb: _*)
     }
     val dfreq = mergedTermdf(spark, dir, dfPred, asOf)
-    val stats = mergedStats(spark, dir, asOf)
     val dl = rawDoclens(spark, dir, asOf).select("doc_id", "dl")
-    probes.join(post, Seq("term"))
-      .join(dfreq, Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
+    withCorpusStats(spark, dir, asOf, probes.join(post, Seq("term"))
+        .join(dfreq, Seq("term"))
+        .join(dl, Seq("doc_id")))
       .withColumn("tscore", tscoreExpr)
       .select("qid", "doc_id", "term", "tf", "tscore")
   }
@@ -932,13 +952,17 @@ object TextIndex {
       .toDF("qid", "term")
     val aggs = sum(col("tscore")).as("score") +:
       terms.map(tm => max(when(col("term") === tm, col("tf"))).as(s"tf_$tm"))
-    val scored = scoredTerms(spark, dir, probes, wanted, Some(terms), asOf)
+    val top = scoredTerms(spark, dir, probes, wanted, Some(terms), asOf)
       .groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(k)
     // the postings path only surfaces docs holding >= 1 query term, while
     // the shared oracle ranks ALL docs (score-0 ties by doc_id): agreement
-    // needs >= k candidates — fail loudly, not as a hash mismatch
-    val ncand = scored.agg(count(lit(1)).as("nc"))
-    scored.crossJoin(broadcast(ncand))
+    // needs >= k candidates — fail loudly, not as a hash mismatch. Fewer
+    // than k candidates iff fewer than k rows survive the limit, so the
+    // guard counts the <= k top rows: one window over the single-partition
+    // top-k output, which keeps its order.
+    top.withColumn("nc", count(lit(1)).over(Window.partitionBy()))
       .select((col("doc_id") +:
         when(assert_true(col("nc") >= k,
             lit(s"bm25TopK: fewer than $k docs match any query term — " +
@@ -946,8 +970,6 @@ object TextIndex {
               "ranking")).isNull,
           col("score")).as("score") +:
         terms.map(tm => coalesce(col(s"tf_$tm"), lit(0L)).as(s"tf_$tm"))): _*)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
   }
 
   /** Streaming retrieval route — the [[Similarity.annRoute]] analog for
@@ -1088,12 +1110,9 @@ object TextIndex {
     val termTb: Map[String, Long] =
       pairs.map(_._2).distinct.map(t => t -> termBucket(t, nb)).toMap
     val allTb = termTb.values.toSeq.distinct
-    // live corpus stats (2 longs) — inlined as literals below;
-    // version-keyed memo (the stats LSM changes only through commits)
-    val (cn, ctl) = StoredIndex.memoByVersion("bm25-stats", dir, asOf) {
-      val statsRow = mergedStats(spark, dir, asOf).collect().head
-      (statsRow.getLong(0), statsRow.getLong(1))
-    }
+    // live corpus stats (2 longs) — inlined as literals below
+    val (n0, tl0) = corpusStats(spark, dir, asOf)
+    val (cn, ctl) = (n0.longValue, tl0.longValue)
     // bounded collect #2: merged live (df, envelope) for the batch
     // vocabulary — term-bucket-pruned, O(batch vocabulary) rows
     val termStats: Map[String, (Long, Option[Long], Option[Long])] =
@@ -1310,10 +1329,8 @@ object TextIndex {
       case None => col("tb").isin(wantedTb: _*)
     }
     val dfreq = mergedTermdf(spark, dir, dfPred, asOf)
-    val stats = mergedStats(spark, dir, asOf)
-    val joined = probes.join(imp, Seq("term"))
-      .join(dfreq, Seq("term"))
-      .crossJoin(broadcast(stats))
+    val joined = withCorpusStats(spark, dir, asOf,
+        probes.join(imp, Seq("term")).join(dfreq, Seq("term")))
       .withColumn("tscore", tscoreExpr)
     // ONE budget/fraction-bounded scan feeds BOTH aggregates via
     // GROUPING SETS (scan once + Expand, not scan twice — the tier's

@@ -42,7 +42,7 @@ import scala.jdk.CollectionConverters._
   * over any FileSystem with atomic rename (HDFS) — object stores swap the
   * rename for a conditional put of the manifest object. Manifest size is
   * one line per data file — at 100 TB / 128 MB files that is ~10^6 lines
-  * (tens of MB), read once per committed version per session; past that,
+  * (tens of MB), read on every pinned read; past that,
   * the standard evolution is the Delta-log shape (parquet checkpoint +
   * JSON deltas), which changes the manifest ENCODING, not this protocol.
   */
@@ -86,6 +86,13 @@ object IndexCommit {
   def pinnedFiles(root: String): Option[Seq[String]] =
     versions(root).lastOption.map { case (_, p) => readManifest(p) }
 
+  /** Root-relative file list recorded by committed `version`, without
+    * checking that its files survive; None once the version is not (or
+    * no longer) in the history.
+    */
+  def manifestAt(root: String, version: Int): Option[Seq[String]] =
+    versions(root).find(_._1 == version).map { case (_, p) => readManifest(p) }
+
   /** Root-relative file list of a SPECIFIC committed version — snapshot
     * reads / time travel over the manifest history. A version resolves
     * while (a) its manifest survives retention ([[vacuum]] keeps the
@@ -96,8 +103,7 @@ object IndexCommit {
     * error when files are gone, instead of a mystifying scan failure.
     */
   def pinnedFilesAt(root: String, version: Int): Option[Seq[String]] =
-    versions(root).find(_._1 == version).map { case (_, p) =>
-      val files = readManifest(p)
+    manifestAt(root, version).map { files =>
       val missing = files.filterNot(f => Files.exists(Paths.get(root, f)))
       require(missing.isEmpty,
         s"index version $version of $root is no longer fully resolvable " +

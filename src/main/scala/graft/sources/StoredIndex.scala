@@ -42,9 +42,10 @@ object StoredIndex {
   /** One parquet file per partition value: shuffling on the partition
     * column before a partitionBy write sends each value to exactly one
     * task, so a table's file count is its PARTITION count, not
-    * partitions x write tasks. Readers pay a file-listing pass on every
-    * serve — the dominant FIXED cost of a route decision — and without
-    * this the count compounds per LSM segment / append (the classic
+    * partitions x write tasks. Readers pay a file-listing pass once per
+    * committed file list per session ([[readTable]]), which grows with
+    * the file count — and without this the count compounds per LSM
+    * segment / append (the classic
     * small-files problem; measured 2.2x on the bm25 route's decisions/s
     * and a 0.39 -> 0.135 scaling exponent, SCALING_r13).
     *
@@ -136,38 +137,79 @@ object StoredIndex {
       } finally pool.shutdown()
     }
 
-  /** Driver memo for per-serve METADATA collects, keyed on the governing
-    * manifest version: index metadata (bm25 meta flags, LM vocab stats,
-    * IVF centroids) is immutable per committed version, yet every route
-    * serve re-paid a plan-time Spark job to re-collect it — a fixed
-    * ~0.2-0.3 s per call on this box before any query work (optimization
-    * guide §1.2 step 2: per-task/driver work once the job shape is
-    * right). Any append/delete/compact/retrain commits a new manifest
-    * version, which changes the key and recomputes; never-committed
-    * legacy dirs (no manifest to version) and as-of reads of versions
-    * pinned by callers both key on the exact version they serve. Entries
-    * are tiny (flag rows, centroid arrays); stale versions of the same
-    * (tag, dir) are dropped on replacement so the map holds one entry
-    * per live index.
+  /** Driver memo of values derived from ONE committed state: per-serve
+    * metadata collects ([[memoByCommit]]) and the scan relations of
+    * pinned table reads ([[readTable]]). Both are immutable per commit,
+    * yet every serve re-paid them — a plan-time collect job for the
+    * metadata, a file-existence check plus a listing pass (a distributed
+    * listing job above 32 paths) for each relation.
+    *
+    * Keyed on a COMMIT IDENTITY, never a bare version number: a wipe and
+    * rebuild at a reused path restarts its manifest numbering at 0, but
+    * its part files carry fresh write-job UUIDs, so a digest of the
+    * pinned file list never repeats across rebuilds. Each (tag, scope)
+    * keeps its [[memoDepth]] most recently used identities, so
+    * alternating as-of and latest reads do not evict each other; the
+    * least recently used scope past [[memoScopes]] is dropped whole.
+    * Entries hold no rows — flag rows, centroid arrays, file statuses —
+    * so they are not [[graft.Caches]] frames; [[graft.Caches.clear]]
+    * clears them with the rest of the session state.
     */
-  private val metaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Any]()
+  private val memoDepth = 4
+  private val memoScopes = 512
+  private val memo =
+    new java.util.LinkedHashMap[(String, String), List[(String, Any)]](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), List[(String, Any)]]) =
+        size > memoScopes
+    }
 
-  def memoByVersion[T](tag: String, dir: String,
-                       asOf: Option[Int] = None)(compute: => T): T =
-    asOf.orElse(IndexCommit.resolveRoot(dir).map(_._2)) match {
-      case Some(v) =>
-        val prefix = s"$tag|$dir|"
-        val k = s"$prefix$v"
-        val cached = metaMemo.get(k)
-        if (cached != null) cached.asInstanceOf[T]
-        else {
-          val value = compute
-          metaMemo.put(k, value)
-          // drop superseded versions of this (tag, dir)
-          metaMemo.keySet.removeIf(e => e.startsWith(prefix) && e != k)
-          value
+  private def memoized[T](tag: String, scope: String,
+                          id: String)(compute: => T): T = {
+    val hit = memo.synchronized {
+      Option(memo.get((tag, scope))).flatMap(_.find(_._1 == id))
+    }
+    hit match {
+      case Some((_, v)) => v.asInstanceOf[T]
+      case None =>
+        val v = compute
+        memo.synchronized {
+          val rest = Option(memo.get((tag, scope))).getOrElse(Nil)
+            .filterNot(_._1 == id)
+          memo.put((tag, scope), ((id, v) :: rest).take(memoDepth))
         }
+        v
+    }
+  }
+
+  /** Drop every memoized value and relation (session teardown). */
+  def clearMemo(): Unit = memo.synchronized(memo.clear())
+
+  private def digest(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(lines.mkString("\n").getBytes("UTF-8"))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** The commit identity of the state governing `dir` at `asOf` (latest
+    * when None): the governing manifest root and a digest of that
+    * version's file list. None for never-committed legacy dirs and for
+    * versions absent from the history.
+    */
+  def commitId(dir: String, asOf: Option[Int] = None): Option[String] =
+    IndexCommit.resolveRoot(dir).flatMap { case (root, latest) =>
+      IndexCommit.manifestAt(root, asOf.getOrElse(latest))
+        .map(files => s"$root|${digest(files)}")
+    }
+
+  /** `compute` memoized on the [[commitId]] of the state it reads; with
+    * no commit identity it computes on every call.
+    */
+  def memoByCommit[T](tag: String, dir: String,
+                       asOf: Option[Int] = None)(compute: => T): T =
+    commitId(dir, asOf) match {
+      case Some(id) => memoized(tag, dir, id)(compute)
       case None => compute
     }
 
@@ -206,12 +248,58 @@ object StoredIndex {
         .parquet(path)
     } else emptyFrame(spark, ddl)
 
+  /** The files under `path` pinned by its governing manifest at `asOf`
+    * (latest when None); None only for a latest read of a never-committed
+    * legacy dir. As-of reads require a governing manifest and fail fast
+    * on a version outside its history or no longer fully resolvable
+    * ([[IndexCommit.pinnedFilesAt]]).
+    */
+  private def pinned(path: String, asOf: Option[Int]): Option[Seq[String]] =
+    asOf match {
+      case None => IndexCommit.pinnedUnder(path)
+      case Some(v) =>
+        require(IndexCommit.resolveRoot(path).nonEmpty,
+          s"as-of read needs a committed manifest governing $path")
+        Some(IndexCommit.pinnedUnder(path, asOf).getOrElse(sys.error(
+          s"index version $v is not in the manifest history of $path")))
+    }
+
+  /** A scan of exactly `files` with the declared schema. The relation —
+    * its file index, i.e. the existence checks and listing of `files` —
+    * is built once per (session, table, schema, file list) and reused
+    * through [[memoized]]: a committed file list never changes, and every
+    * caller resolves the manifest before getting here, so a new commit
+    * arrives as a new list. Each call wraps the shared relation in a
+    * fresh plan node, so two reads of one table still self-join cleanly.
+    */
+  private def scanFiles(spark: SparkSession, path: String, ddl: String,
+                        files: Seq[String], basePath: Boolean): DataFrame =
+    if (files.isEmpty) emptyFrame(spark, ddl)
+    else {
+      def read: DataFrame = {
+        val r = spark.read
+          .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        (if (basePath) r.option("basePath", path) else r).parquet(files: _*)
+      }
+      val (owner, rel) = memoized(
+          s"relation|${System.identityHashCode(spark)}|$basePath|$ddl", path,
+          digest(files)) {
+        (spark, read.queryExecution.analyzed.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.LogicalRelation].relation)
+      }
+      // an identity-hash collision between two sessions is a miss, never
+      // a relation served outside its session
+      if (owner eq spark) spark.baseRelationToDataFrame(rel) else read
+    }
+
   /** SNAPSHOT-ISOLATED table read: resolve the governing committed
     * manifest ([[IndexCommit.pinnedUnder]] — the table's own root or an
     * enclosing composite root) and scan exactly its file list, so files an
     * in-flight or crashed append moved in are invisible and retired-but-
     * undeleted files never double-count. `basePath` recovers the table's
-    * `key=value` partition columns from the pinned file paths.
+    * `key=value` partition columns from the pinned file paths. The manifest
+    * is resolved on every call; the scan relation of a file list already
+    * served in this session is reused ([[scanFiles]]).
     *
     * `asOf = Some(v)` serves manifest version v instead of the latest —
     * the manifest history IS the time-travel surface: appends and deletes
@@ -222,28 +310,11 @@ object StoredIndex {
     * manifest, and an unknown version fails fast.
     */
   def readTable(spark: SparkSession, path: String, ddl: String,
-                asOf: Option[Int] = None): DataFrame = asOf match {
-    case None => IndexCommit.pinnedUnder(path) match {
-      case Some(files) if files.isEmpty => emptyFrame(spark, ddl)
-      case Some(files) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .option("basePath", path)
-        .parquet(files: _*)
+                asOf: Option[Int] = None): DataFrame =
+    pinned(path, asOf) match {
+      case Some(files) => scanFiles(spark, path, ddl, files, basePath = true)
       case None => readDirTable(spark, path, ddl)
     }
-    case Some(v) =>
-      require(IndexCommit.resolveRoot(path).nonEmpty,
-        s"as-of read needs a committed manifest governing $path")
-      IndexCommit.pinnedUnder(path, asOf) match {
-        case None => sys.error(
-          s"index version $v is not in the manifest history of $path")
-        case Some(files) if files.isEmpty => emptyFrame(spark, ddl)
-        case Some(files) => spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .option("basePath", path)
-          .parquet(files: _*)
-      }
-  }
 
   /** Raw union of an LSM table's delta segments (no basePath — the
     * `seg-NNNNN` dir names are not partition-style, so there are no
@@ -251,26 +322,11 @@ object StoredIndex {
     * recursive lookup for the same reason).
     */
   private def lsmSegments(spark: SparkSession, path: String, ddl: String,
-                          asOf: Option[Int]): DataFrame = asOf match {
-    case None => IndexCommit.pinnedUnder(path) match {
-      case Some(files) if files.isEmpty => emptyFrame(spark, ddl)
-      case Some(files) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(files: _*)
+                          asOf: Option[Int]): DataFrame =
+    pinned(path, asOf) match {
+      case Some(files) => scanFiles(spark, path, ddl, files, basePath = false)
       case None => readDirTable(spark, path, ddl, recursive = true)
     }
-    case Some(v) =>
-      require(IndexCommit.resolveRoot(path).nonEmpty,
-        s"as-of read needs a committed manifest governing $path")
-      IndexCommit.pinnedUnder(path, asOf) match {
-        case None => sys.error(
-          s"index version $v is not in the manifest history of $path")
-        case Some(files) if files.isEmpty => emptyFrame(spark, ddl)
-        case Some(files) => spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .parquet(files: _*)
-      }
-  }
 
   /** The merged view of an LSM-shaped index statistic: append-only delta
     * segments carrying per-key count deltas, summed at read. Appends
@@ -300,7 +356,7 @@ object StoredIndex {
     }
 
   /** The served version's tombstoned id set — takedown-sized by contract,
-    * cached per (dir, version) under the family's cache name (route
+    * cached per (dir, commit) under the family's cache name (route
     * consumers probe it every micro-batch; the set is version-stable
     * between commits). `distinct` for families whose tombstone table
     * carries multiple rows per id (the BM25 (id, tb) bucket list).
@@ -308,12 +364,12 @@ object StoredIndex {
   def tombstoneIds(spark: SparkSession, dir: String, family: String,
                    asOf: Option[Int] = None,
                    distinct: Boolean = false): DataFrame = {
-    val ver = asOf.orElse(
-      IndexCommit.resolveRoot(s"$dir/tombstones").map(_._2)).getOrElse(-1)
-    // the distinct flag is part of the frame's SHAPE, so it must be part
-    // of the cache key — two callers sharing dir+version with different
-    // flags must not share one cached frame
-    graft.Caches.cached(family, s"$dir|v$ver|d$distinct") {
+    // keyed on the commit identity, not the version number, which a
+    // rebuild at a reused dir restarts. The distinct flag is part of the
+    // frame's SHAPE, so it must be part of the cache key — two callers
+    // sharing dir+commit with different flags must not share one frame
+    val id = commitId(s"$dir/tombstones", asOf).getOrElse("legacy")
+    graft.Caches.cached(family, s"$dir|$id|d$distinct") {
       val ids = readTable(spark, s"$dir/tombstones", "id BIGINT", asOf)
       if (distinct) ids.distinct() else ids
     }

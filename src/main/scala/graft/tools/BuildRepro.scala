@@ -76,7 +76,8 @@ object BuildRepro {
           s"$dir-curate").count(); () })
       }
     } finally {
-      Seq(s"$dir-bm25", s"$dir-bm25f", s"$dir-lm", s"$dir-curate", dir)
+      Seq(s"$dir-bm25", s"$dir-bm25f", s"$dir-lm", s"$dir-curate",
+          s"$dir-ivf", s"$dir-ivfpq", dir)
         .foreach(d => graft.sources.IndexCommit
           .deleteTree(java.nio.file.Paths.get(d)))
     }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Skew
-import graft.sources.LogStore
+import graft.operators.{Skew, TextIndex}
+import graft.sources.{IndexCommit, LogStore}
 import graft.streaming.ErrorBurst
 import graft.streaming.ErrorBurst.{Alert, Doc}
 
@@ -623,5 +623,31 @@ class StateAndStoreSpec extends SparkSpec {
     // surprise drop between them is exactly the mid-stream learn landing
     assert(got(4L)._1 < got(2L)._1,
       "the learned phrasing must lower the second half's surprise")
+  }
+
+  test("stored-index memo: a wipe and rebuild at the same dir serves the " +
+      "rebuilt index's meta, stats and results") {
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .select("doc_id", "text")
+    val terms = Seq("spark", "merge", "vector")
+    val dir = java.nio.file.Files.createTempDirectory("graft-rebuild").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft-fresh").toString
+    def serve(d: String) =
+      (TextIndex.bm25TopK(spark, d, terms).collect().toSeq,
+        TextIndex.bm25TopKPruned(spark, d, terms).collect().toSeq)
+    TextIndex.writeBm25Index(docs.filter(col("doc_id") % 2 === 0), dir,
+      nBuckets = 16, forward = true)
+    val v0 = IndexCommit.latestVersion(dir)
+    val old = serve(dir) // memoizes meta, stats and relations of the build
+    // the rebuild restarts the manifest numbering: same dir, same version,
+    // different bucket count, corpus stats and postings
+    IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
+    val odd = docs.filter(col("doc_id") % 2 === 1)
+    TextIndex.writeBm25Index(odd, dir, nBuckets = 8, forward = true)
+    TextIndex.writeBm25Index(odd, fresh, nBuckets = 8, forward = true)
+    assert(IndexCommit.latestVersion(dir) == v0)
+    val rebuilt = serve(dir)
+    assert(rebuilt == serve(fresh))
+    assert(rebuilt != old)
   }
 }

@@ -147,6 +147,32 @@ class TextIndexSpec extends SparkSpec {
       .findFirstMatchIn(postingsScan).map(_.group(1))
     assert(inList.exists(_.split(",").length <= terms.length),
       s"3-term query must prune to <= 3 buckets: $postingsScan")
+    // one scoring pass: the postings are scanned once (the fewer-than-k
+    // guard counts the top-k rows, not a second scoring pipeline), and
+    // the corpus stats are literals, not a scanned and broadcast table
+    val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(scans.count(_.contains("postings")) == 1,
+      s"serving plan must scan the postings once:\n$plan")
+    assert(!scans.exists(_.contains("/stats/")),
+      s"serving plan must not scan the stats table:\n$plan")
+  }
+
+  test("fewer than k matching docs fails loudly; exactly k serves") {
+    import spark.implicits._
+    val dir = tmp()
+    // "zq" occurs in 4 of 40 docs
+    TextIndex.writeBm25Index((0L until 40L).map(i =>
+      (i, if (i % 13 == 0) s"alpha zq beta w$i" else s"alpha beta w$i"))
+      .toDF("doc_id", "text"), dir)
+    val e = intercept[Exception] {
+      TextIndex.bm25TopK(spark, dir, Seq("zq"), k = 5).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage)
+        .contains("fewer than 5 docs match any query term")), e.toString)
+    val served = TextIndex.bm25TopK(spark, dir, Seq("zq"), k = 4).collect()
+    assert(served.map(_.getLong(0)).toSeq == Seq(0L, 13L, 26L, 39L))
+    assert(served.forall(_.getLong(2) == 1L))
   }
 
   test("bm25Route at nbuckets=1024: pruning tracks the batch's probed " +
