@@ -45,21 +45,35 @@ object Caches {
 
   /** Build-once cell: the registry lock below covers BOOKKEEPING only —
     * the actual build (which runs Spark jobs, possibly for seconds) runs
-    * through this holder's `lazy val` OUTSIDE the global monitor. Holding
+    * under this holder's OWN monitor, OUTSIDE the global one. Holding
     * the monitor across builds deadlocked the r18 parallel stage writes
     * (a `stagedPath` build fans out jobs whose threads call `cached` —
     * blocked on the monitor the building thread still held) and, more
     * generally, serialized every cache access behind whichever build was
-    * in flight. `lazy val` gives per-entry build-once under the holder's
-    * OWN monitor; `isBuilt` lets eviction skip entries another thread is
+    * in flight. `isBuilt` lets eviction skip entries another thread is
     * still constructing (the value to release does not exist yet — the
     * rare losing side of that race leaks one frame/dir, exactly the
     * pre-r18 behavior under eviction).
+    *
+    * SINGLE-SHOT: the build runs at most once. A build that throws
+    * latches its Throwable and every later access rethrows it — a
+    * `lazy val` would re-run the build for a caller already blocked on
+    * the holder, persisting a frame its deregistered entry no longer
+    * tracks.
     */
   private final class Holder[T](f: () => T) {
     @volatile private var built = false
-    lazy val value: T = { val v = f(); built = true; v }
+    @volatile private var failure: Throwable = null
+    private var result: T = _
+    def value: T = synchronized {
+      if (!built && failure == null)
+        try { result = f(); built = true }
+        catch { case e: Throwable => failure = e }
+      if (failure != null) throw failure
+      result
+    }
     def isBuilt: Boolean = built
+    def isFailed: Boolean = failure != null
   }
 
   private val live =
@@ -81,6 +95,9 @@ object Caches {
     * value, outside any build.
     */
   private def sweepPending(blocking: Boolean = false): Unit = {
+    // a failed build holds nothing to release: drop it with the rest
+    pendingFrames --= pendingFrames.filter(_.isFailed)
+    pendingDirs --= pendingDirs.filter(_.isFailed)
     val frames = pendingFrames.filter(_.isBuilt)
     pendingFrames --= frames
     frames.foreach(h => h.value.unpersist(blocking))
@@ -134,8 +151,8 @@ object Caches {
     try holder.value
     catch { case e: Throwable =>
       // a failed build must not stay registered: later callers would
-      // count a HIT and then re-run the failed build through the lazy
-      // val (ADVICE r18 — hit/miss counters over-counted after failures)
+      // count a HIT and rethrow the latched failure instead of retrying
+      // (ADVICE r18 — hit/miss counters over-counted after failures)
       synchronized {
         live.get(family).foreach { entries =>
           live(family) = entries.filterNot(_._2 eq holder)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.{IndexCommit, StoredIndex}
+
 /** Training-data curation operators (north star in /root/repo/BASELINE.json:
   * "the operations a large-scale training-data pipeline would need" beyond
   * the reference surface) — sequence packing, deterministic sampling,
@@ -252,7 +254,7 @@ object Curation {
                          textCol: String = "text"): DataFrame = {
     import graft.functions.gcolumns.word_shingles
     val spark = arrivals.sparkSession
-    val stopArr = Dedup.readIndexTable(spark, s"$indexDir/stop",
+    val stopArr = StoredIndex.readTable(spark, s"$indexDir/stop",
         "shingle STRING")
       .agg(sort_array(collect_list(col("shingle"))).as("stopa"))
     val bArrays = bench.select(col("bench_id"),
@@ -571,7 +573,7 @@ object Curation {
       s -> rem }.toMap
     val partial =
       if (remBudgets.isEmpty)
-        graft.sources.StoredIndex.emptyFrame(spark,
+        StoredIndex.emptyFrame(spark,
           "source STRING, pn BIGINT, pt BIGINT")
       else tokenBudgetMix(docs, remBudgets, textCol, idCol)
         .select(col("source"), col("n_docs").as("pn"),
@@ -593,7 +595,7 @@ object Curation {
     * [[graft.sources.IndexCommit]] manifest; fill state accumulates as
     * an LSM of per-batch deltas (`fills/gen-NNNNN`, O(admitted sources)
     * rows per learn — the termdf/bcounts discipline, folded by
-    * [[graft.sources.StoredIndex.mergedLsm]] at read; each segment is
+    * [[StoredIndex.mergedLsm]] at read; each segment is
     * tiny, but a long-running gate's read lists O(learned batches) of
     * them — [[compactBudgetFills]] is the fold that bounds that).
     */
@@ -602,11 +604,11 @@ object Curation {
     require(budgets.nonEmpty, "a budget gate needs at least one budget")
     require(budgets.values.forall(_ >= 0), "budgets must be >= 0")
     import spark.implicits._
-    graft.sources.IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
+    IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
     budgets.toSeq.sortBy(_._1).toDF("source", "budget_tokens")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/budgets")
-    graft.sources.IndexCommit.commitFiles(dir,
-      graft.sources.IndexCommit.walkDataFiles(dir))
+    IndexCommit.commitFiles(dir,
+      IndexCommit.walkDataFiles(dir))
   }
 
   /** Decide one arrival batch against the COMMITTED fill state: a doc is
@@ -633,9 +635,9 @@ object Curation {
                   idCol: String = "doc_id", textCol: String = "text",
                   asOf: Option[Int] = None): DataFrame = {
     val spark = batch.sparkSession
-    val budgets = graft.sources.StoredIndex.readTable(spark,
+    val budgets = StoredIndex.readTable(spark,
       s"$dir/budgets", "source STRING, budget_tokens BIGINT", asOf)
-    val fills = graft.sources.StoredIndex.mergedLsm(spark, s"$dir/fills",
+    val fills = StoredIndex.mergedLsm(spark, s"$dir/fills",
       "source STRING, filled BIGINT", Seq("source"), "filled", asOf)
     val slim = batch.select(col("source"),
       col(idCol).cast("long").as("doc_id"), md5(col(textCol)).as("h"),
@@ -654,51 +656,35 @@ object Curation {
 
   /** LEARN a decided batch's admissions into the committed fill state:
     * one `fills/gen-NNNNN` delta segment (per-source admitted token
-    * sums, O(sources) rows), staged then moved in and published by ONE
-    * manifest rename — crash before the commit leaves the previous
+    * sums, O(sources) rows) — crash before the commit leaves the previous
     * version serving and the re-run re-decides identically. An
     * all-rejected batch is a NO-OP (no segment, no new version).
     * Returns the newly recorded token count.
     */
-  def recordBudgetFills(decided: DataFrame, dir: String): Long = {
-    val spark = decided.sparkSession
-    graft.sources.IndexCommit.vacuum(dir)
-    // bounded collect: one row per source admitted in this batch
-    val delta = decided.filter(col("admitted"))
-      .groupBy(col("source")).agg(sum(col("tokens")).as("filled"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    if (delta.isEmpty) 0L
-    else {
-      appendFillsDelta(spark, dir, delta)
-      delta.map(_._2).sum
-    }
-  }
+  def recordBudgetFills(decided: DataFrame, dir: String): Long =
+    appendFillsDelta(dir, decided.filter(col("admitted"))
+      .groupBy(col("source")).agg(sum(col("tokens")).as("filled")))
 
-  /** One staged fills delta segment, published by one manifest rename —
-    * the shared learn/refund commit path. Failpoints (`budget-staged`,
-    * `budget-before-commit`) let CurationSpec kill it at the windows
-    * where a non-atomic design would double-count or half-publish: a
-    * crash anywhere leaves the previous version serving (orphan staged
-    * files are invisible to the manifest-pinned read and reclaimed by
-    * the next call's vacuum; [[graft.sources.StoredIndex.nextSeg]] scans
-    * the physical dir so a surviving orphan can never be aliased).
+  /** One fills delta segment of `delta` (source, filled) — the shared
+    * learn/refund path; a no-op when the delta is empty. Failpoints
+    * (`budget-staged`, `budget-before-commit`) let CurationSpec kill it at
+    * the windows where a non-atomic design would double-count or
+    * half-publish. Returns the delta's token sum.
     */
-  private def appendFillsDelta(spark: org.apache.spark.sql.SparkSession,
-                               dir: String,
-                               delta: Seq[(String, Long)]): Unit = {
-    import spark.implicits._
-    val t = new graft.sources.IndexTxn(dir)
-    val gen = graft.sources.StoredIndex.nextSeg(dir, "fills", "gen-")
-    delta.toDF("source", "filled")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/.fills-stage")
-    graft.sources.IndexCommit.hit("budget-staged")
-    graft.sources.StoredIndex.moveTree(t,
-      java.nio.file.Paths.get(s"$dir/.fills-stage"),
-      java.nio.file.Paths.get(f"$dir/fills/gen-$gen%05d"))
-    graft.sources.IndexCommit.hit("budget-before-commit")
-    t.commit()
-    t.cleanup()
-  }
+  private def appendFillsDelta(dir: String, delta: DataFrame): Long =
+    StoredIndex.mutate(dir, "budget") { t =>
+      val spark = delta.sparkSession
+      import spark.implicits._
+      // bounded collect: one row per source in this delta
+      val rows = delta.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      if (rows.nonEmpty) {
+        rows.toDF("source", "filled")
+          .coalesce(1).write.mode("overwrite").parquet(t.stage("fills"))
+        IndexCommit.hit("budget-staged")
+        t.moveToNextSeg("fills", "fills", "gen-")
+      }
+      rows.map(_._2).sum
+    }
 
   /** REFUND admitted tokens — the FORGET half of the budget gate (the
     * fifth family joins the engine's decide/admit/learn/forget loop):
@@ -715,56 +701,29 @@ object Curation {
     * version). Returns the refunded token count.
     */
   def refundBudgetFills(docs: DataFrame, dir: String,
-                        textCol: String = "text"): Long = {
-    val spark = docs.sparkSession
-    graft.sources.IndexCommit.vacuum(dir)
-    // bounded collect: one row per refunded source
-    val delta = docs
-      .groupBy(col("source"))
-      .agg((-sum(tokenCount(col(textCol)))).as("filled"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    if (delta.isEmpty) 0L
-    else {
-      appendFillsDelta(spark, dir, delta)
-      -delta.map(_._2).sum
-    }
-  }
+                        textCol: String = "text"): Long =
+    -appendFillsDelta(dir, docs.groupBy(col("source"))
+      .agg((-sum(tokenCount(col(textCol)))).as("filled")))
 
   /** Fold the budget gate's fills LSM back to ONE segment once the
     * per-learn delta segments exceed `maxSegments` — the
-    * [[graft.sources.StoredIndex.mergedLsm]] read lists O(learned
+    * [[StoredIndex.mergedLsm]] read lists O(learned
     * batches) tiny files on a long-running gate, and this is the
-    * LogStore.compact discipline that bounds it. Same stage / move-in /
-    * atomic-manifest-commit / then-delete protocol as every fold: a
-    * crash at any point leaves the previous version serving, and the
-    * merged per-source sums are unchanged by construction (decisions
-    * before and after the fold are identical). Returns the number of
-    * folded segments (0 = under budget, no-op).
+    * LogStore.compact discipline that bounds it. The merged per-source
+    * sums are unchanged by construction (decisions before and after the
+    * fold are identical). Returns the number of folded segments (0 =
+    * under budget, no-op).
     */
   def compactBudgetFills(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, maxSegments: Int = 8): Int = {
-    graft.sources.IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val segs = graft.sources.StoredIndex.segCount(t, "fills", "gen-")
-    if (segs <= maxSegments) 0
-    else {
-      graft.sources.StoredIndex.mergedLsm(spark, s"$dir/fills",
-          "source STRING, filled BIGINT", Seq("source"), "filled")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/.fills-stage")
-      val gen = graft.sources.StoredIndex.nextSeg(dir, "fills", "gen-")
-      t.retireUnder("fills")
-      graft.sources.StoredIndex.moveTree(t,
-        java.nio.file.Paths.get(s"$dir/.fills-stage"),
-        java.nio.file.Paths.get(f"$dir/fills/gen-$gen%05d"))
-      t.commit()
-      t.cleanup()
-      segs
+                         dir: String, maxSegments: Int = 8): Int =
+    StoredIndex.mutate(dir, "budget-compact") { t =>
+      StoredIndex.foldLsm(t, "fills", "source STRING, filled BIGINT", "gen-",
+        maxSegments)(StoredIndex.lsmSum(Seq("source"), "filled")(_).coalesce(1))
     }
-  }
 
   /** Nightly-ops policy driver for the budget-gate family (the
     * [[maintainCurateIndex]] analog, dispatched by
-    * [[graft.sources.StoredIndex.maintain]]): folds the fills LSM when
+    * [[StoredIndex.maintain]]): folds the fills LSM when
     * its segment count exceeds the budget, else a no-op audit row.
     * Idempotent — the fold leaves one segment, so a second run is
     * `noop`.
@@ -1175,20 +1134,20 @@ object Curation {
     */
   def writeCurateIndex(docs: DataFrame, dir: String, minTokens: Int = 20,
                        k: Int = 3, nearThreshold: Double = 0.6): Unit = {
-    graft.sources.IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
+    IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
     val normed = normalizeDocs(docs).select(col("doc_id"),
       col("norm").as("text"))
     val floored = normed.filter(tokenCount(col("text")) >= minTokens)
     // the hash table and the lsh subtree write disjoint directories from
     // independent plans — concurrent jobs (guide §2.6), one commit below
-    graft.sources.StoredIndex.parallelStages(Seq(
+    StoredIndex.parallelStages(Seq(
       () => floored.select(md5(col("text")).as("content_hash"), col("doc_id"))
         .groupBy("content_hash").agg(min(col("doc_id")).as("keeper"))
         .write.mode("overwrite").parquet(s"$dir/hashes"),
       () => Dedup.writeLshIndex(curatedFrame(docs, minTokens), s"$dir/lsh", k,
         prefixThreshold = nearThreshold, commit = false)))
-    graft.sources.IndexCommit.commitFiles(dir,
-      graft.sources.IndexCommit.walkDataFiles(dir))
+    IndexCommit.commitFiles(dir,
+      IndexCommit.walkDataFiles(dir))
   }
 
   /** The LEARN half of the online ingest loop: grow the
@@ -1217,52 +1176,32 @@ object Curation {
     * a hash table ahead of the lsh index would make a crash re-run
     * compute an empty keeper batch and permanently skip indexing the
     * texts, while the joint commit means a crash anywhere rolls BOTH
-    * back and the re-run (after [[graft.sources.IndexCommit.vacuum]])
-    * recomputes the identical batch. Single-writer contract, like every
-    * maintenance path here.
+    * back and the re-run recomputes the identical batch. Single-writer
+    * contract, like every maintenance path here.
     */
   def appendCurateIndex(newDocs: DataFrame, dir: String,
-                        minTokens: Int = 20, k: Int = 3): Unit = {
-    import graft.sources.IndexCommit
-    val spark = newDocs.sparkSession
-    IndexCommit.vacuum(dir)
-    val txn = new graft.sources.IndexTxn(dir)
-    val normed = normalizeDocs(newDocs).select(col("doc_id"),
-      col("norm").as("text"))
-    val floored = normed.filter(tokenCount(col("text")) >= minTokens)
-    val stored = servedHashes(spark, dir)
-    val w = Window.partitionBy(col("content_hash"))
-    val batchKeep = floored
-      .withColumn("content_hash", md5(col("text")))
-      .withColumn("keeper", min(col("doc_id")).over(w))
-      .filter(col("doc_id") === col("keeper"))
-      .join(stored.select("content_hash"), Seq("content_hash"), "left_anti")
-      .select(col("content_hash"), col("doc_id"), col("text"))
-    // stage the new hash rows, move the part files in (fresh UUID names,
-    // file-level append — the stored table is never rewritten), record
-    // the adds; the commit below publishes them
-    batchKeep.select(col("content_hash"), col("doc_id").as("keeper"))
-      .write.mode("overwrite").parquet(s"$dir/.hashes-stage")
-    import scala.jdk.CollectionConverters._
-    val stage = java.nio.file.Paths.get(s"$dir/.hashes-stage")
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$dir/hashes"))
-    locally {
-      val s = java.nio.file.Files.list(stage)
-      val fs = try s.iterator().asScala.toSeq finally s.close()
-      fs.filter(_.toString.endsWith(".parquet")).foreach { p =>
-        val dst = java.nio.file.Paths.get(s"$dir/hashes",
-          p.getFileName.toString)
-        java.nio.file.Files.move(p, dst)
-        txn.add(txn.rel(dst))
-      }
+                        minTokens: Int = 20, k: Int = 3): Unit =
+    StoredIndex.mutate(dir, "curate") { t =>
+      val spark = newDocs.sparkSession
+      val normed = normalizeDocs(newDocs).select(col("doc_id"),
+        col("norm").as("text"))
+      val floored = normed.filter(tokenCount(col("text")) >= minTokens)
+      val stored = servedHashes(spark, dir)
+      val w = Window.partitionBy(col("content_hash"))
+      val batchKeep = floored
+        .withColumn("content_hash", md5(col("text")))
+        .withColumn("keeper", min(col("doc_id")).over(w))
+        .filter(col("doc_id") === col("keeper"))
+        .join(stored.select("content_hash"), Seq("content_hash"), "left_anti")
+        .select(col("content_hash"), col("doc_id"), col("text"))
+      // the new hash rows file-append (the stored table is never
+      // rewritten); the kernel's commit publishes them with the lsh change
+      batchKeep.select(col("content_hash"), col("doc_id").as("keeper"))
+        .write.mode("overwrite").parquet(t.stage("hashes"))
+      t.moveIn("hashes", "hashes")
+      Dedup.appendLshIndex(batchKeep.select(col("doc_id"), col("text")),
+        s"$dir/lsh", k, txn = Some(t))
     }
-    Dedup.appendLshIndex(batchKeep.select(col("doc_id"), col("text")),
-      s"$dir/lsh", k, txn = Some(txn))
-    IndexCommit.hit("curate-before-commit")
-    txn.commit()
-    txn.cleanup()
-  }
 
   /** The `hashes` table with tombstoned keepers excluded — the served
     * exact-dup verdict view. A deleted keeper stops blocking its content
@@ -1274,8 +1213,8 @@ object Curation {
   private def servedHashes(spark: org.apache.spark.sql.SparkSession,
                            dir: String,
                            asOf: Option[Int] = None): DataFrame =
-    graft.sources.StoredIndex.antiTombstoned(spark, dir, "lsh-tombstones",
-      Dedup.readIndexTable(spark, s"$dir/hashes",
+    StoredIndex.antiTombstoned(spark, dir, "lsh-tombstones",
+      StoredIndex.readTable(spark, s"$dir/hashes",
         "content_hash STRING, keeper BIGINT", asOf),
       "keeper", asOf)
 
@@ -1301,89 +1240,59 @@ object Curation {
     * Returns the number of NEWLY tombstoned ids.
     */
   def deleteFromCurateIndex(ids: DataFrame, dir: String,
-                            idCol: String = "doc_id"): Long = {
-    import graft.sources.IndexCommit
-    val spark = ids.sparkSession
-    IndexCommit.vacuum(dir)
-    val txn = new graft.sources.IndexTxn(dir)
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(Dedup.readIndexTable(spark, s"$dir/tombstones", "id BIGINT"),
-        Seq("id"), "left_anti")
-    dead.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/.tombstones-stage")
-    val staged = Dedup.readDirTable(spark, s"$dir/.tombstones-stage",
-      "id BIGINT")
-    val nDead = staged.count()
-    if (nDead > 0) {
-      IndexCommit.hit("curate-del-staged")
-      // nested delete FIRST: it executes plans over the lazily-read
-      // `staged` frame, whose files must still sit in the stage dir —
-      // the move below would pull them out from under those plans
-      Dedup.deleteFromLshIndex(staged, s"$dir/lsh", idCol = "id",
-        txn = Some(txn))
-      Dedup.txnMove(txn,
-        java.nio.file.Paths.get(s"$dir/.tombstones-stage"),
-        java.nio.file.Paths.get(s"$dir/tombstones"))
-      IndexCommit.hit("curate-del-before-commit")
-      txn.commit()
-      txn.cleanup()
-    } else txn.cleanup()
-    nDead
-  }
+                            idCol: String = "doc_id"): Long =
+    StoredIndex.mutate(dir, "curate-del") { t =>
+      val spark = ids.sparkSession
+      val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
+        .join(StoredIndex.readTable(spark, s"$dir/tombstones",
+          "id BIGINT"), Seq("id"), "left_anti")
+      dead.coalesce(1).write.mode("overwrite").parquet(t.stage("tombstones"))
+      val staged = StoredIndex.readDirTable(spark,
+        t.stage("tombstones"), "id BIGINT")
+      val nDead = staged.count()
+      if (nDead > 0) {
+        IndexCommit.hit("curate-del-staged")
+        // nested delete FIRST: it executes plans over the lazily-read
+        // `staged` frame, whose files must still sit in the stage dir —
+        // the move below would pull them out from under those plans
+        Dedup.deleteFromLshIndex(staged, s"$dir/lsh", idCol = "id",
+          txn = Some(t))
+        t.moveIn("tombstones", "tombstones")
+      }
+      nDead
+    }
 
   /** SMALL-FILES compaction for the curation state — the maintenance
     * sweep a long-running decide+learn loop schedules between appends:
     * squashes the file-append `hashes` table past `maxFilesPerTable`
     * fragments and runs [[Dedup.compactLshIndex]] over the nested lsh
-    * tree, all inside ONE composite-root transaction (the
-    * [[appendCurateIndex]] atomicity argument applies unchanged: both
-    * halves flip together or not at all). Idempotent; crash-safe;
-    * single-writer. Returns (table, rewritten) pairs.
+    * tree, both in ONE commit (the [[appendCurateIndex]] atomicity
+    * argument applies unchanged: both halves flip together or not at
+    * all). Idempotent; crash-safe; single-writer. Returns (table,
+    * rewritten) pairs.
     */
   def compactCurateIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, maxFilesPerTable: Int = 4)
-      : Seq[(String, Int)] = {
-    import graft.sources.IndexCommit
-    IndexCommit.vacuum(dir)
-    val txn = new graft.sources.IndexTxn(dir)
-    val out = Seq.newBuilder[(String, Int)]
-    // hashes fold: past the fragment budget, OR whenever tombstones exist
-    // (the physical-reclaim half of deleteFromCurateIndex — dead keepers'
-    // rows leave the table and the tombstones themselves retire; the
-    // served view is unchanged because servedHashes already excluded them)
-    val tombFiles = txn.liveUnder("tombstones")
-    val hashFiles = txn.liveUnder("hashes")
-    if (hashFiles.nonEmpty &&
-        (tombFiles.nonEmpty || hashFiles.size > maxFilesPerTable)) {
-      val base = spark.read.schema("content_hash STRING, keeper BIGINT")
-        .parquet(hashFiles.map(f => s"$dir/$f"): _*)
-      val folded =
-        if (tombFiles.isEmpty) base
-        else base.join(
-          broadcast(spark.read.schema("id BIGINT")
-            .parquet(tombFiles.map(f => s"$dir/$f"): _*)
-            .select(col("id").as("keeper"))),
-          Seq("keeper"), "left_anti")
-      folded.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/.hashes-fold")
-      hashFiles.foreach(txn.retire)
-      tombFiles.foreach(txn.retire)
-      Dedup.txnMove(txn, java.nio.file.Paths.get(s"$dir/.hashes-fold"),
-        java.nio.file.Paths.get(s"$dir/hashes"))
-      out += (("hashes", 1))
-    } else if (tombFiles.nonEmpty) {
-      // tombstones against an empty hash table: nothing to drop, retire
-      tombFiles.foreach(txn.retire)
-      out += (("tombstones", 0))
+      : Seq[(String, Int)] =
+    StoredIndex.mutate(dir, "curate-compact") { t =>
+      // hashes fold: past the fragment budget, OR whenever tombstones
+      // exist (the physical-reclaim half of deleteFromCurateIndex — dead
+      // keepers' rows leave the table and the tombstones themselves
+      // retire; the served view is unchanged because servedHashes already
+      // excluded them)
+      val dead = StoredIndex.liveTombstones(t)
+      val folded = StoredIndex.rewriteParts(t, "hashes",
+        "content_hash STRING, keeper BIGINT", None, Nil, maxFilesPerTable,
+        dead, "keeper")
+      t.retireUnder("tombstones")
+      val own =
+        if (folded > 0) Seq(("hashes", 1))
+        // tombstones against an empty hash table retire with nothing to drop
+        else if (dead.nonEmpty) Seq(("tombstones", 0))
+        else Nil
+      own ++ Dedup.compactLshIndex(spark, s"$dir/lsh",
+        maxFilesPerRange = maxFilesPerTable, txn = Some(t))
     }
-    out ++= Dedup.compactLshIndex(spark, s"$dir/lsh",
-      maxFilesPerRange = maxFilesPerTable, txn = Some(txn))
-    val result = out.result()
-    IndexCommit.hit("curate-compact-before-commit")
-    if (result.nonEmpty) txn.commit()
-    txn.cleanup()
-    result
-  }
 
   /** NIGHTLY-OPS policy entry point for the curation state: the
     * committed-state inspection is [[compactCurateIndex]]'s own sweep
@@ -1489,7 +1398,7 @@ object Curation {
         "left_anti")
       .select(col("doc_id"), col("text"))
     // kept-shingle arrays, built once and shared by all three screens
-    val stopArr = Dedup.readIndexTable(spark, s"$dir/lsh/stop",
+    val stopArr = StoredIndex.readTable(spark, s"$dir/lsh/stop",
         "shingle STRING", asOf)
       .agg(sort_array(collect_list(col("shingle"))).as("stopa"))
     def keptOf(df: DataFrame, idAs: String, keptAs: String): DataFrame = df
@@ -1517,7 +1426,7 @@ object Curation {
     // BOTH sides; bidirectional like the batch screen, so a bench doc
     // screens batch-mates regardless of id order)
     val benchArrays = Dedup.antiTombstoned(spark, s"$dir/lsh",
-        Dedup.readIndexTable(spark, s"$dir/lsh/arrays",
+        StoredIndex.readTable(spark, s"$dir/lsh/arrays",
           "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT", asOf), asOf)
       .filter(col("id") % benchMod === 0)
       .select(col("id").as("bench_id"), col("sa").as("ba"))

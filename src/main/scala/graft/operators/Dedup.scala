@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.gcolumns.simhash64
+import graft.sources.{IndexCommit, StoredIndex}
 
 /** Deduplication operators for LLM-training-data pipelines (north star in
   * /root/repo/BASELINE.json): exact, n-gram Jaccard, MinHash+LSH, SimHash.
@@ -368,7 +369,7 @@ object Dedup {
         graft.sources.StoredIndex.writeByPart(
           raw0.withColumn("pid", expr(s"id div $idRangeSize")),
           "pid", s"$dir/buckets_raw")
-        readDirTable(spark, s"$dir/buckets_raw",
+        StoredIndex.readDirTable(spark, s"$dir/buckets_raw",
             "id BIGINT, band INT, bh BIGINT, pid BIGINT")
           .groupBy("band", "bh").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$dir/bcounts/seg-00000")
@@ -379,7 +380,7 @@ object Dedup {
             .withColumn("pid", expr(s"id div $idRangeSize")),
           "pid", s"$dir/arrays")
         graft.sources.StoredIndex.writeByPart(
-          prefixRows(readDirTable(spark, s"$dir/arrays",
+          prefixRows(StoredIndex.readDirTable(spark, s"$dir/arrays",
               "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT")
               .select("id", "sa", "n"), prefixThreshold)
             .withColumn("pid", expr(s"id div $idRangeSize")),
@@ -389,7 +390,8 @@ object Dedup {
         shingles(docs, k).groupBy("shingle")
           .agg(count(lit(1)).as("df"))
           .write.mode("overwrite").parquet(s"$dir/df/seg-00000")
-        readDirTable(spark, s"$dir/df/seg-00000", "shingle STRING, df BIGINT")
+        StoredIndex.readDirTable(spark, s"$dir/df/seg-00000",
+            "shingle STRING, df BIGINT")
           .filter(col("df") > maxBucketSize)
           .select("shingle").write.mode("overwrite").parquet(s"$dir/stop")
       }))
@@ -419,20 +421,10 @@ object Dedup {
                          ddl: String): DataFrame =
     graft.sources.StoredIndex.emptyFrame(spark, ddl)
 
-  private[operators] def readDirTable(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, ddl: String): DataFrame =
-    graft.sources.StoredIndex.readDirTable(spark, path, ddl)
-
-  private[operators] def readIndexTable(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, ddl: String, asOf: Option[Int] = None): DataFrame =
-    graft.sources.StoredIndex.readTable(spark, path, ddl, asOf)
-
   private def rawBuckets(spark: org.apache.spark.sql.SparkSession,
                          dir: String,
                          asOf: Option[Int] = None): DataFrame =
-    readIndexTable(spark, s"$dir/buckets_raw",
+    StoredIndex.readTable(spark, s"$dir/buckets_raw",
       "id BIGINT, band INT, bh BIGINT, pid BIGINT", asOf)
 
   private def mergedDf(spark: org.apache.spark.sql.SparkSession,
@@ -485,7 +477,7 @@ object Dedup {
                            dir: String,
                            asOf: Option[Int] = None): DataFrame =
     antiTombstoned(spark, dir,
-      readIndexTable(spark, s"$dir/arrays",
+      StoredIndex.readTable(spark, s"$dir/arrays",
         "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT", asOf), asOf)
       .select("id", "sa", "n")
 
@@ -538,18 +530,13 @@ object Dedup {
     * read and write is O(touched ranges + batch), and the df/bcounts
     * merges are amortized into compaction.
     *
-    * Durability (r12): the whole append is ONE [[graft.sources.IndexTxn]]
-    * — staged files move into the live table dirs under fresh part names
-    * (nothing pre-existing is deleted or overwritten), every add/retire
-    * is bookkept, and a single atomic manifest rename publishes all
-    * tables together. A crash at ANY point (mid-stage, between table
-    * moves, before the commit) leaves the previous committed version
-    * byte-intact for readers — moved-in orphans are invisible to pinned
-    * reads — and a re-run first [[graft.sources.IndexCommit.vacuum]]s the
-    * orphans and converges to exactly the state a never-crashed append
-    * produces (IndexMaintenanceSpec injects aborts at each failpoint and
-    * proves both properties). Physical deletion of retired files happens
-    * strictly after the commit.
+    * Durability: the whole append is one
+    * [[graft.sources.StoredIndex.mutate]] change — replaced ranges retire
+    * and every table publishes in the same commit (nested under the
+    * curation state's transaction when `txn` is given);
+    * IndexMaintenanceSpec kills it at each failpoint (`staged`,
+    * `moved:<table>`, `before-commit`) and proves the previous version
+    * keeps serving and a re-run converges.
     *
     * Precondition: `newDocs` ids are fresh (append-only corpus — an id
     * rewrite is a delete+append, which df monotonicity does not cover).
@@ -558,227 +545,165 @@ object Dedup {
                      numHashes: Int = 32, bands: Int = 16,
                      idCol: String = "doc_id", textCol: String = "text",
                      compactSegmentsAt: Int = 8,
-                     txn: Option[graft.sources.IndexTxn] = None): Unit = {
-    import graft.sources.IndexCommit
-    val spark = newDocs.sparkSession
-    val standalone = txn.isEmpty
-    // single-writer GC first: any file a crashed earlier append moved in
-    // but never committed is garbage and must not survive into this
-    // transaction's walk of the live dirs (nested case: the composite
-    // root's owner vacuumed already)
-    if (standalone) IndexCommit.vacuum(dir)
-    val t = txn.getOrElse(new graft.sources.IndexTxn(dir))
-    val dirRel = {
-      val r = t.rel(java.nio.file.Paths.get(dir))
-      if (r.isEmpty) "" else r + "/"
-    }
-    val (rangeSize, prefixThreshold) = readMeta(dir)
-    val oldDf = mergedDf(spark, dir)
-    val oldArrays = storedArrays(spark, dir)
-    val oldRaw = rawBuckets(spark, dir).select("id", "band", "bh")
+                     txn: Option[graft.sources.IndexTxn] = None): Unit =
+    StoredIndex.mutate(dir, "", txn) { t =>
+      val spark = newDocs.sparkSession
+      val (rangeSize, prefixThreshold) = readMeta(dir)
+      val oldDf = mergedDf(spark, dir)
+      val oldArrays = storedArrays(spark, dir)
+      val oldRaw = rawBuckets(spark, dir).select("id", "band", "bh")
 
-    // merged document frequencies (outer sum), and the crossing set.
-    // CROSSINGS can only involve shingles the batch touches, so the
-    // crossing set is COLLECTED once here (tiny — <= one shingle per
-    // maxBucketSize old postings) and every later consumer reads the
-    // driver-side literal: nothing merged-derived may lazily re-execute
-    // after the delta segment lands in the df directory below.
-    val delta = shingles(newDocs, k, textCol, idCol)
-      .groupBy("shingle").agg(count(lit(1)).as("ddf"))
-    val merged = oldDf.join(delta, Seq("shingle"), "full_outer")
-      .select(col("shingle"),
-        (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L)))
-          .as("df"),
-        coalesce(col("df"), lit(0L)).as("df_old"))
-    val stopNewSeq: Seq[String] = merged
-      .filter(col("df_old") <= maxBucketSize && col("df") > maxBucketSize)
-      .select("shingle").collect().map(_.getString(0)).sorted.toSeq
-    val stopNewLit = typedlit(stopNewSeq)
+      // merged document frequencies (outer sum), and the crossing set.
+      // CROSSINGS can only involve shingles the batch touches, so the
+      // crossing set is COLLECTED once here (tiny — <= one shingle per
+      // maxBucketSize old postings) and every later consumer reads the
+      // driver-side literal: nothing merged-derived may lazily re-execute
+      // after the delta segment lands in the df directory below.
+      val delta = shingles(newDocs, k, textCol, idCol)
+        .groupBy("shingle").agg(count(lit(1)).as("ddf"))
+      val merged = oldDf.join(delta, Seq("shingle"), "full_outer")
+        .select(col("shingle"),
+          (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L)))
+            .as("df"),
+          coalesce(col("df"), lit(0L)).as("df_old"))
+      val stopNewSeq: Seq[String] = merged
+        .filter(col("df_old") <= maxBucketSize && col("df") > maxBucketSize)
+        .select("shingle").collect().map(_.getString(0)).sorted.toSeq
+      val stopNewLit = typedlit(stopNewSeq)
 
-    // (a) old docs holding a crossed shingle: rebuild arrays + signatures
-    // in-row from the stored sorted arrays (narrow columnar scan; the
-    // overlap probe never explodes postings)
-    val affected0 = oldArrays
-      .filter(arrays_overlap(col("sa"), stopNewLit))
-      .select(col("id"), array_except(col("sa"), stopNewLit).as("sa"))
-    // a doc whose kept set empties out LEAVES the index (batch semantics:
-    // only docs with >=1 kept shingle are indexed) — its old rows are
-    // still removed below, so the id list is taken BEFORE the size cut
-    val affectedIds = affected0.select("id")
-    val affected = affected0.filter(size(col("sa")) > 0)
-      .select(col("id"), col("sa"), size(col("sa")).cast("long").as("n"))
-    // (b) new docs: shingle once, cut against the MERGED df
-    val newKept = shingles(newDocs, k, textCol, idCol)
-      .join(merged.filter(col("df") <= maxBucketSize).select("shingle"),
-        Seq("shingle"))
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(col("shingle"))).as("sa"),
-        count(lit(1)).as("n"))
+      // (a) old docs holding a crossed shingle: rebuild arrays + signatures
+      // in-row from the stored sorted arrays (narrow columnar scan; the
+      // overlap probe never explodes postings)
+      val affected0 = oldArrays
+        .filter(arrays_overlap(col("sa"), stopNewLit))
+        .select(col("id"), array_except(col("sa"), stopNewLit).as("sa"))
+      // a doc whose kept set empties out LEAVES the index (batch semantics:
+      // only docs with >=1 kept shingle are indexed) — its old rows are
+      // still removed below, so the id list is taken BEFORE the size cut
+      val affectedIds = affected0.select("id")
+      val affected = affected0.filter(size(col("sa")) > 0)
+        .select(col("id"), col("sa"), size(col("sa")).cast("long").as("n"))
+      // (b) new docs: shingle once, cut against the MERGED df
+      val newKept = shingles(newDocs, k, textCol, idCol)
+        .join(merged.filter(col("df") <= maxBucketSize).select("shingle"),
+          Seq("shingle"))
+        .groupBy(col("id"))
+        .agg(sort_array(collect_list(col("shingle"))).as("sa"),
+          count(lit(1)).as("n"))
 
-    def signed(arr: DataFrame): DataFrame =
-      banded(arr.select(col("id"),
-        array((0 until numHashes).map(i =>
-          array_min(transform(col("sa"), s => xxhash64(lit(i), s)))): _*)
-          .as("sig")), numHashes, bands)
+      def signed(arr: DataFrame): DataFrame =
+        banded(arr.select(col("id"),
+          array((0 until numHashes).map(i =>
+            array_min(transform(col("sa"), s => xxhash64(lit(i), s)))): _*)
+            .as("sig")), numHashes, bands)
 
-    // the id ranges this append touches: the affected docs' plus the new
-    // batch's (tiny driver lists — one entry per range, not per doc)
-    val pidOf = (df: DataFrame) => df
-      .select(expr(s"id div $rangeSize").as("pid")).distinct()
-    val touched = pidOf(affectedIds)
-      .unionByName(pidOf(newKept.select("id"))).distinct()
-      .collect().map(_.getLong(0)).toSet
-    val touchedLit = touched.toSeq.sorted
+      // the id ranges this append touches: the affected docs' plus the new
+      // batch's (tiny driver lists — one entry per range, not per doc)
+      val pidOf = (df: DataFrame) => df
+        .select(expr(s"id div $rangeSize").as("pid")).distinct()
+      val touched = pidOf(affectedIds)
+        .unionByName(pidOf(newKept.select("id"))).distinct()
+        .collect().map(_.getLong(0)).toSet
+      val touchedLit = touched.toSeq.sorted
 
-    // ---- STAGE: every write below lands in dot-prefixed stage dirs,
-    // and every plan executes against the PINNED old tables. Nothing
-    // live is touched before the move-in, and nothing old is deleted
-    // before the commit — the two-wave execution-ordering dance the
-    // delete-then-move promote needed is gone because reads are pinned
-    // by file list, not by directory.
-    def stagePartitioned(content: DataFrame, table: String): Unit =
-      graft.sources.StoredIndex.writeByPart(
-        content.withColumn("pid", expr(s"id div $rangeSize"))
-          .filter(col("pid").isin(touchedLit: _*)),
-        "pid", s"$dir/.$table-stage")
-    if (touchedLit.nonEmpty) {
-      // pruned re-reads: filtering on the PARTITION column means the scan
-      // of carried-forward rows touches only the affected ranges' files
-      val oldArraysTouched = readIndexTable(spark, s"$dir/arrays",
-          "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT")
-        .filter(col("pid").isin(touchedLit: _*)).select("id", "sa", "n")
-      val oldRawTouched = rawBuckets(spark, dir)
-        .filter(col("pid").isin(touchedLit: _*)).select("id", "band", "bh")
-      // two independent stage chains run as concurrent jobs (guide §2.6):
-      // {arrays -> prefixes} and {buckets_raw -> bcounts}. Prefixes
-      // re-derive in-row from the STAGED arrays readback (the post-append
-      // truth for touched ranges); the static hash order never reorders
-      // untouched docs' prefixes, so untouched ranges stay byte-identical
-      // like the other partitioned tables. The bcounts delta is
-      // staged-minus-old occupancy per bucket over the TOUCHED ranges
-      // only — O(touched buckets) rows; no buckets_raw re-aggregation
-      // remains anywhere in the append path (the r11 whole-table
-      // oversize re-derive this LSM replaces).
-      graft.sources.StoredIndex.parallelStages(Seq(
-        () => {
-          stagePartitioned(oldArraysTouched
-            .join(affectedIds, Seq("id"), "left_anti")
-            .unionByName(affected).unionByName(newKept), "arrays")
-          stagePartitioned(prefixRows(readDirTable(spark,
-              s"$dir/.arrays-stage",
-              "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT")
-              .select("id", "sa", "n"), prefixThreshold), "prefixes")
-        },
-        () => {
-          stagePartitioned(oldRawTouched
-            .join(affectedIds, Seq("id"), "left_anti")
-            .unionByName(signed(affected)).unionByName(signed(newKept)),
-            "buckets_raw")
-          readDirTable(spark, s"$dir/.buckets_raw-stage",
-              "id BIGINT, band INT, bh BIGINT, pid BIGINT")
-            .select(col("band"), col("bh")).withColumn("n", lit(1L))
-            .unionByName(oldRawTouched.select("band", "bh")
-              .withColumn("n", lit(-1L)))
-            .groupBy("band", "bh").agg(sum(col("n")).as("n"))
-            .filter(col("n") =!= 0L)
-            .write.mode("overwrite").parquet(s"$dir/.bcounts-stage")
-        }))
-    }
-    // committed LSM segments per statistic table (for the compaction
-    // decision — counted from the PINNED base, so crash leftovers never
-    // skew the budget)
-    def pinnedSegs(table: String): Seq[String] =
-      t.baseUnder(s"$dirRel$table")
-        .map(_.stripPrefix(s"$dirRel$table/").split('/').head)
-        .distinct.filter(_.startsWith("seg-"))
-    // df: one delta segment, or — past the segment budget — the compacted
-    // base (old pinned segments ∪ this delta, i.e. `merged`), which
-    // retires every old segment in the same commit (the LogStore.compact
-    // discipline: amortized O(delta) writes, reads never sum more than
-    // compactSegmentsAt segments)
-    val dfCompact = pinnedSegs("df").size + 1 > compactSegmentsAt
-    (if (dfCompact) merged.select(col("shingle"), col("df"))
-     else delta.select(col("shingle"), col("ddf").as("df")))
-      .write.mode("overwrite").parquet(s"$dir/.df-seg-stage")
-    val bcCompact = touchedLit.nonEmpty &&
-      pinnedSegs("bcounts").size + 1 > compactSegmentsAt
-    if (bcCompact)
-      mergedBcounts(spark, dir)
-        .unionByName(readDirTable(spark, s"$dir/.bcounts-stage",
-          "band INT, bh BIGINT, n BIGINT"))
-        .groupBy("band", "bh").agg(sum(col("n")).as("n"))
-        .filter(col("n") =!= 0L)
-        .write.mode("overwrite").parquet(s"$dir/.bcounts-compact-stage")
-    if (stopNewSeq.nonEmpty) {
-      import spark.implicits._
-      stopNewSeq.toDF("shingle")
-        .write.mode("overwrite").parquet(s"$dir/.stop-stage")
-    }
-    IndexCommit.hit("staged")
-
-    // ---- MOVE IN: staged part files carry fresh UUID names, so they
-    // move into the live dirs with no possible collision; replaced files
-    // are RETIRED in the transaction's bookkeeping, not deleted.
-    def moveFiles(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
-      txnMove(t, from, to)
-    def moveInPartitioned(table: String): Unit = {
-      touchedLit.foreach { pid =>
-        t.retireUnder(s"$dirRel$table/pid=$pid")
-        moveFiles(java.nio.file.Paths.get(s"$dir/.$table-stage/pid=$pid"),
-          java.nio.file.Paths.get(s"$dir/$table/pid=$pid"))
+      // ---- STAGE: every plan executes against the PINNED old tables
+      // (reads are pinned by file list, not by directory)
+      def stagePartitioned(content: DataFrame, table: String): Unit =
+        StoredIndex.writeByPart(
+          content.withColumn("pid", expr(s"id div $rangeSize"))
+            .filter(col("pid").isin(touchedLit: _*)),
+          "pid", t.stage(table))
+      if (touchedLit.nonEmpty) {
+        // pruned re-reads: filtering on the PARTITION column means the scan
+        // of carried-forward rows touches only the affected ranges' files
+        val oldArraysTouched = StoredIndex.readTable(spark, s"$dir/arrays",
+            "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT")
+          .filter(col("pid").isin(touchedLit: _*)).select("id", "sa", "n")
+        val oldRawTouched = rawBuckets(spark, dir)
+          .filter(col("pid").isin(touchedLit: _*)).select("id", "band", "bh")
+        // two independent stage chains run as concurrent jobs (guide §2.6):
+        // {arrays -> prefixes} and {buckets_raw -> bcounts}. Prefixes
+        // re-derive in-row from the STAGED arrays readback (the post-append
+        // truth for touched ranges); the static hash order never reorders
+        // untouched docs' prefixes, so untouched ranges stay byte-identical
+        // like the other partitioned tables. The bcounts delta is
+        // staged-minus-old occupancy per bucket over the TOUCHED ranges
+        // only — O(touched buckets) rows; no buckets_raw re-aggregation
+        // remains anywhere in the append path (the r11 whole-table
+        // oversize re-derive this LSM replaces).
+        StoredIndex.parallelStages(Seq(
+          () => {
+            stagePartitioned(oldArraysTouched
+              .join(affectedIds, Seq("id"), "left_anti")
+              .unionByName(affected).unionByName(newKept), "arrays")
+            stagePartitioned(prefixRows(StoredIndex.readDirTable(spark,
+                t.stage("arrays"),
+                "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT")
+                .select("id", "sa", "n"), prefixThreshold), "prefixes")
+          },
+          () => {
+            stagePartitioned(oldRawTouched
+              .join(affectedIds, Seq("id"), "left_anti")
+              .unionByName(signed(affected)).unionByName(signed(newKept)),
+              "buckets_raw")
+            StoredIndex.readDirTable(spark, t.stage("buckets_raw"),
+                "id BIGINT, band INT, bh BIGINT, pid BIGINT")
+              .select(col("band"), col("bh")).withColumn("n", lit(1L))
+              .unionByName(oldRawTouched.select("band", "bh")
+                .withColumn("n", lit(-1L)))
+              .groupBy("band", "bh").agg(sum(col("n")).as("n"))
+              .filter(col("n") =!= 0L)
+              .write.mode("overwrite").parquet(t.stage("bcounts"))
+          }))
       }
-      IndexCommit.hit(s"moved:$table")
-    }
-    def nextSegDir(table: String): java.nio.file.Path =
-      nextSegDirIn(dir, table)
-    if (touchedLit.nonEmpty) {
-      moveInPartitioned("arrays")
-      moveInPartitioned("buckets_raw")
-      moveInPartitioned("prefixes")
-      if (bcCompact) {
-        t.retireUnder(s"${dirRel}bcounts")
-        moveFiles(java.nio.file.Paths.get(s"$dir/.bcounts-compact-stage"),
-          nextSegDir("bcounts"))
-      } else
-        moveFiles(java.nio.file.Paths.get(s"$dir/.bcounts-stage"),
-          nextSegDir("bcounts"))
-      IndexCommit.hit("moved:bcounts")
-    }
-    if (dfCompact) t.retireUnder(s"${dirRel}df")
-    moveFiles(java.nio.file.Paths.get(s"$dir/.df-seg-stage"),
-      nextSegDir("df"))
-    IndexCommit.hit("moved:df")
-    // stop GROWS monotonically, so the crossing set file-appends
-    if (stopNewSeq.nonEmpty)
-      moveFiles(java.nio.file.Paths.get(s"$dir/.stop-stage"),
-        java.nio.file.Paths.get(s"$dir/stop"))
+      // df: one delta segment, or — past the segment budget (committed
+      // segments, so crash leftovers never skew it) — the compacted base
+      // (old pinned segments ∪ this delta, i.e. `merged`), which retires
+      // every old segment in the same commit (the LogStore.compact
+      // discipline: amortized O(delta) writes, reads never sum more than
+      // compactSegmentsAt segments)
+      val dfCompact =
+        StoredIndex.segCount(t, "df", "seg-") + 1 > compactSegmentsAt
+      (if (dfCompact) merged.select(col("shingle"), col("df"))
+       else delta.select(col("shingle"), col("ddf").as("df")))
+        .write.mode("overwrite").parquet(t.stage("df"))
+      val bcCompact = touchedLit.nonEmpty &&
+        StoredIndex.segCount(t, "bcounts", "seg-") + 1 > compactSegmentsAt
+      if (bcCompact)
+        mergedBcounts(spark, dir)
+          .unionByName(StoredIndex.readDirTable(spark, t.stage("bcounts"),
+            "band INT, bh BIGINT, n BIGINT"))
+          .groupBy("band", "bh").agg(sum(col("n")).as("n"))
+          .filter(col("n") =!= 0L)
+          .write.mode("overwrite").parquet(t.stage("bcounts-fold"))
+      if (stopNewSeq.nonEmpty) {
+        import spark.implicits._
+        stopNewSeq.toDF("shingle")
+          .write.mode("overwrite").parquet(t.stage("stop"))
+      }
+      IndexCommit.hit("staged")
 
-    // ---- COMMIT (one atomic manifest rename publishes every table),
-    // then physical cleanup of retired files + stage dirs. A composite
-    // owner (appendCurateIndex) commits the shared transaction itself.
-    if (standalone) {
-      IndexCommit.hit("before-commit")
-      t.commit()
-      IndexCommit.hit("before-cleanup")
-      t.cleanup()
+      // ---- MOVE IN: replaced files are RETIRED, not deleted
+      def moveInPartitioned(table: String): Unit = {
+        touchedLit.foreach(pid => t.retireUnder(s"$table/pid=$pid"))
+        t.moveIn(table, table)
+        IndexCommit.hit(s"moved:$table")
+      }
+      if (touchedLit.nonEmpty) {
+        moveInPartitioned("arrays")
+        moveInPartitioned("buckets_raw")
+        moveInPartitioned("prefixes")
+        if (bcCompact) t.retireUnder("bcounts")
+        t.moveToNextSeg(if (bcCompact) "bcounts-fold" else "bcounts",
+          "bcounts", "seg-")
+        IndexCommit.hit("moved:bcounts")
+      }
+      if (dfCompact) t.retireUnder("df")
+      t.moveToNextSeg("df", "df", "seg-")
+      IndexCommit.hit("moved:df")
+      // stop GROWS monotonically, so the crossing set file-appends
+      if (stopNewSeq.nonEmpty) t.moveIn("stop", "stop")
     }
-  }
-
-  /** Stage-dir move-in recording each add in the transaction (see
-    * [[graft.sources.StoredIndex.moveTree]]).
-    */
-  private[operators] def txnMove(t: graft.sources.IndexTxn,
-                      from: java.nio.file.Path,
-                      to: java.nio.file.Path): Unit =
-    graft.sources.StoredIndex.moveTree(t, from, to)
-
-  /** Next LSM segment dir for `table`: max(existing seg numbers)+1 —
-    * never a count, so non-contiguous crash leftovers cannot alias an
-    * existing segment.
-    */
-  private def nextSegDirIn(dir: String, table: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, table).resolve(
-      f"seg-${graft.sources.StoredIndex.nextSeg(dir, table, "seg-")}%05d")
 
   /** TOMBSTONE-DELETE documents from a stored LSH index — the FORGET half
     * of the maintenance tier (takedowns / GDPR erasure / quality recalls
@@ -809,8 +734,7 @@ object Dedup {
     * The physical rows of dead docs stay in place (invisible to every
     * reader) until [[compactLshIndex]] folds the tombstones — the
     * DELETE-then-COMPACT storage-reclaim split every LSM store uses.
-    * Crash-atomic like the appends: one [[graft.sources.IndexTxn]], one
-    * manifest rename, vacuum + re-run converges. Idempotent: already-
+    * Crash-atomic like the appends. Idempotent: already-
     * tombstoned ids are filtered out, so a re-delete never re-subtracts
     * occupancy. Ids are never reused (the append contract), so a
     * tombstone can outlive compaction safely.
@@ -819,45 +743,35 @@ object Dedup {
     */
   def deleteFromLshIndex(ids: DataFrame, dir: String,
                          idCol: String = "doc_id",
-                         txn: Option[graft.sources.IndexTxn] = None): Long = {
-    import graft.sources.IndexCommit
-    val spark = ids.sparkSession
-    val standalone = txn.isEmpty
-    if (standalone) IndexCommit.vacuum(dir)
-    val t = txn.getOrElse(new graft.sources.IndexTxn(dir))
-    val (rangeSize, _) = readMeta(dir)
-    // only ids not already tombstoned act: a re-delete must not
-    // re-subtract bucket occupancy
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(readIndexTable(spark, s"$dir/tombstones", "id BIGINT"),
-        Seq("id"), "left_anti")
-    dead.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/.tombstones-stage")
-    val staged = readDirTable(spark, s"$dir/.tombstones-stage", "id BIGINT")
-    val nDead = staged.count()
-    if (nDead > 0) {
-      val deadPids = staged.select(expr(s"id div $rangeSize").as("pid"))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted
-      // the dead docs' bucket rows leave the occupancy statistic NOW
-      // (partition-pruned read of their ranges, O(delete set) rows out)
-      rawBuckets(spark, dir).filter(col("pid").isin(deadPids: _*))
-        .join(broadcast(staged), Seq("id"))
-        .groupBy("band", "bh").agg((-count(lit(1))).as("n"))
-        .write.mode("overwrite").parquet(s"$dir/.bcounts-del-stage")
-      IndexCommit.hit("del-staged")
-      txnMove(t, java.nio.file.Paths.get(s"$dir/.tombstones-stage"),
-        java.nio.file.Paths.get(s"$dir/tombstones"))
-      txnMove(t, java.nio.file.Paths.get(s"$dir/.bcounts-del-stage"),
-        nextSegDirIn(dir, "bcounts"))
-      IndexCommit.hit("del-moved")
-      if (standalone) {
-        IndexCommit.hit("del-before-commit")
-        t.commit()
-        t.cleanup()
+                         txn: Option[graft.sources.IndexTxn] = None): Long =
+    StoredIndex.mutate(dir, "del", txn) { t =>
+      val spark = ids.sparkSession
+      val (rangeSize, _) = readMeta(dir)
+      // only ids not already tombstoned act: a re-delete must not
+      // re-subtract bucket occupancy
+      val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
+        .join(StoredIndex.readTable(spark, s"$dir/tombstones", "id BIGINT"),
+          Seq("id"), "left_anti")
+      dead.coalesce(1).write.mode("overwrite").parquet(t.stage("tombstones"))
+      val staged = StoredIndex.readDirTable(spark, t.stage("tombstones"),
+        "id BIGINT")
+      val nDead = staged.count()
+      if (nDead > 0) {
+        val deadPids = staged.select(expr(s"id div $rangeSize").as("pid"))
+          .distinct().collect().map(_.getLong(0)).toSeq.sorted
+        // the dead docs' bucket rows leave the occupancy statistic NOW
+        // (partition-pruned read of their ranges, O(delete set) rows out)
+        rawBuckets(spark, dir).filter(col("pid").isin(deadPids: _*))
+          .join(broadcast(staged), Seq("id"))
+          .groupBy("band", "bh").agg((-count(lit(1))).as("n"))
+          .write.mode("overwrite").parquet(t.stage("bcounts"))
+        IndexCommit.hit("del-staged")
+        t.moveIn("tombstones", "tombstones")
+        t.moveToNextSeg("bcounts", "bcounts", "seg-")
+        IndexCommit.hit("del-moved")
       }
-    } else if (standalone) t.cleanup()
-    nDead
-  }
+      nDead
+    }
 
   /** SMALL-FILES compaction for an append-grown index — the
     * [[graft.sources.LogStore.compact]] analog for the maintenance tier:
@@ -868,11 +782,7 @@ object Dedup {
     * each partitioned table's `pid=` dirs holding more than
     * `maxFilesPerRange` data files down to one file, folds the
     * df/bcounts LSMs to a single base segment, squashes a fragmented
-    * `stop` list, and publishes everything as ONE
-    * [[graft.sources.IndexCommit]] transaction — the same stage,
-    * move-in-under-fresh-names, atomic-manifest-commit, then-delete
-    * protocol as the appends, so a crash at any point leaves the
-    * pre-compaction version serving and a re-run converges. Idempotent:
+    * `stop` list, and publishes everything as ONE commit. Idempotent:
     * a second sweep finds nothing over threshold and commits nothing.
     * Contents are provably unchanged (IndexMaintenanceSpec canon
     * equality after a many-append chain). Single-writer contract.
@@ -883,125 +793,51 @@ object Dedup {
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       maxFilesPerRange: Int = 4,
                       txn: Option[graft.sources.IndexTxn] = None)
-      : Seq[(String, Int)] = {
-    import graft.sources.IndexCommit
-    val standalone = txn.isEmpty
-    if (standalone) IndexCommit.vacuum(dir)
-    val t = txn.getOrElse(new graft.sources.IndexTxn(dir))
-    val dirRel = {
-      val r = t.rel(java.nio.file.Paths.get(dir))
-      if (r.isEmpty) "" else r + "/"
-    }
-    val out = Seq.newBuilder[(String, Int)]
-    def moveFiles(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
-      txnMove(t, from, to)
-    val tableDdl = Map(
-      "arrays" -> "id BIGINT, sa ARRAY<STRING>, n BIGINT",
-      "buckets_raw" -> "id BIGINT, band INT, bh BIGINT",
-      "prefixes" -> "id BIGINT, n BIGINT, rn INT, shingle STRING")
-    // ---- tombstone fold FIRST: physically drop deleted docs' rows from
-    // every partitioned table (serving already excludes them — this is
-    // the storage-reclaim half of deleteFromLshIndex) and retire the
-    // tombstones themselves, so this commit's served plans lose the
-    // anti-join entirely. Only the dead ids' ranges rewrite (partition-
-    // pruned, O(delete set) IO). bcounts was corrected at delete time
-    // and df stays a documented historical upper bound — neither folds.
-    val tombFiles = t.liveUnder(s"${dirRel}tombstones")
-    if (tombFiles.nonEmpty) {
-      val dead = spark.read.schema("id BIGINT")
-        .parquet(tombFiles.map(f => s"${t.root}/$f"): _*)
-      val (rangeSize, _) = readMeta(dir)
-      val deadPids = dead.select(expr(s"id div $rangeSize").as("pid"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      var touched = 0
-      for ((table, ddl) <- tableDdl) {
-        val prefix = s"$dirRel$table/"
-        val hit = t.liveUnder(s"$dirRel$table")
-          .groupBy(_.stripPrefix(prefix).split('/').head)
-          .filter { case (part, _) =>
-            part.startsWith("pid=") &&
-              deadPids.contains(part.stripPrefix("pid=").toLong) }
-        hit.foreach { case (part, files) =>
-          spark.read
-            .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-            .parquet(files.map(f => s"${t.root}/$f"): _*)
-            .join(broadcast(dead), Seq("id"), "left_anti")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$dir/.$table-tfold/$part")
-          files.foreach(t.retire)
-          txnMove(t, java.nio.file.Paths.get(s"$dir/.$table-tfold/$part"),
-            java.nio.file.Paths.get(s"$dir/$table/$part"))
-          touched += 1
-        }
-        IndexCommit.hit(s"tfold:$table")
+      : Seq[(String, Int)] =
+    StoredIndex.mutate(dir, "", txn) { t =>
+      val out = Seq.newBuilder[(String, Int)]
+      // ---- tombstone fold: physically drop deleted docs' rows from every
+      // partitioned table (serving already excludes them — this is the
+      // storage-reclaim half of deleteFromLshIndex) and retire the
+      // tombstones themselves, so this commit's served plans lose the
+      // anti-join entirely. Only the dead ids' ranges rewrite (partition-
+      // pruned, O(delete set) IO). bcounts was corrected at delete time
+      // and df stays a documented historical upper bound — neither folds.
+      val dead = StoredIndex.liveTombstones(t)
+      val deadPids = dead.fold(Seq.empty[Long]) { d =>
+        val (rangeSize, _) = readMeta(dir)
+        d.select(expr(s"id div $rangeSize").as("pid"))
+          .distinct().collect().map(_.getLong(0)).toSeq
       }
-      tombFiles.foreach(t.retire)
-      out += (("tombstones", touched))
-    }
-    for ((table, ddl) <- tableDdl) {
-      val prefix = s"$dirRel$table/"
-      val fat = t.liveUnder(s"$dirRel$table")
-        .groupBy(_.stripPrefix(prefix).split('/').head)
-        .filter { case (part, files) =>
-          part.startsWith("pid=") && files.size > maxFilesPerRange }
-      fat.foreach { case (part, files) =>
-        val abs = files.map(f => s"${t.root}/$f")
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .parquet(abs: _*)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/.$table-compact/$part")
-        files.foreach(t.retire)
-        moveFiles(java.nio.file.Paths.get(s"$dir/.$table-compact/$part"),
-          java.nio.file.Paths.get(s"$dir/$table/$part"))
+      val swept = Seq(
+        "arrays" -> "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT",
+        "buckets_raw" -> "id BIGINT, band INT, bh BIGINT, pid BIGINT",
+        "prefixes" -> "id BIGINT, n BIGINT, rn INT, shingle STRING, pid BIGINT"
+      ).map { case (table, ddl) =>
+        val deadHit = deadPids.count(k => t.liveParts(table).contains(s"pid=$k"))
+        (table, deadHit, StoredIndex.rewriteParts(t, table, ddl, Some("pid"),
+          deadPids, maxFilesPerRange, dead))
       }
-      if (fat.nonEmpty) out += ((table, fat.size))
-      IndexCommit.hit(s"compacted:$table")
-    }
-    // LSM folds: more than one committed segment -> one base
-    def foldLsm(table: String, ddl: String, keys: Seq[String],
-                cnt: String): Unit = {
-      val files = t.liveUnder(s"$dirRel$table")
-      val segs = files.map(_.stripPrefix(s"$dirRel$table/").split('/').head)
-        .distinct.filter(_.startsWith("seg-"))
-      if (segs.size > 1) {
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-          .parquet(files.map(f => s"${t.root}/$f"): _*)
-          .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
-          .filter(col(cnt) =!= 0L)
-          .write.mode("overwrite").parquet(s"$dir/.$table-fold")
-        files.foreach(t.retire)
-        // a fresh seg id past every existing dir (crash leftovers incl.)
-        moveFiles(java.nio.file.Paths.get(s"$dir/.$table-fold"),
-          nextSegDirIn(dir, table))
-        out += ((table, 1))
+      if (dead.nonEmpty) {
+        t.retireUnder("tombstones")
+        out += (("tombstones", swept.map(_._2).sum))
       }
-    }
-    foldLsm("df", "shingle STRING, df BIGINT", Seq("shingle"), "df")
-    foldLsm("bcounts", "band INT, bh BIGINT, n BIGINT", Seq("band", "bh"), "n")
-    // stop: monotone file-appends squash to one file past the threshold
-    locally {
-      val files = t.liveUnder(s"${dirRel}stop")
-      if (files.size > maxFilesPerRange) {
-        spark.read.schema("shingle STRING")
-          .parquet(files.map(f => s"${t.root}/$f"): _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/.stop-fold")
-        files.foreach(t.retire)
-        moveFiles(java.nio.file.Paths.get(s"$dir/.stop-fold"),
-          java.nio.file.Paths.get(s"$dir/stop"))
+      swept.foreach { case (table, deadHit, n) =>
+        if (n > deadHit) out += ((table, n - deadHit))
+      }
+      // LSM folds: more than one committed segment -> one base
+      def fold(table: String, ddl: String, keys: Seq[String], cnt: String): Unit =
+        if (StoredIndex.foldLsm(t, table, ddl, "seg-", 1)(segs =>
+              StoredIndex.lsmSum(keys, cnt)(segs).filter(col(cnt) =!= 0L)) > 0)
+          out += ((table, 1))
+      fold("df", "shingle STRING, df BIGINT", Seq("shingle"), "df")
+      fold("bcounts", "band INT, bh BIGINT, n BIGINT", Seq("band", "bh"), "n")
+      // stop: monotone file-appends squash to one file past the threshold
+      if (StoredIndex.rewriteParts(t, "stop", "shingle STRING", None, Nil,
+            maxFilesPerRange) > 0)
         out += (("stop", 1))
-      }
+      out.result()
     }
-    val result = out.result()
-    if (standalone) {
-      IndexCommit.hit("before-commit")
-      if (result.nonEmpty) t.commit()
-      IndexCommit.hit("before-cleanup")
-      t.cleanup()
-    }
-    result
-  }
 
   /** NIGHTLY-OPS policy entry point for a stored LSH index: the
     * committed-state inspection is [[compactLshIndex]]'s own sweep
@@ -1100,8 +936,8 @@ object Dedup {
     val rows = numHashes / bands
     val buckets = servedBuckets(spark, indexDir, asOf)
     val arrays = storedArrays(spark, indexDir, asOf)
-    val stopArr = readIndexTable(spark, s"$indexDir/stop", "shingle STRING",
-        asOf)
+    val stopArr = StoredIndex.readTable(spark, s"$indexDir/stop",
+        "shingle STRING", asOf)
       .agg(sort_array(collect_list(col("shingle"))).as("stopa"))
     val kept = arrivals
       .select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
@@ -1236,8 +1072,8 @@ object Dedup {
                     textCol: String = "text",
                     asOf: Option[Int] = None): DataFrame = {
     val spark = arrivals.sparkSession
-    val stopArr = readIndexTable(spark, s"$indexDir/stop", "shingle STRING",
-        asOf)
+    val stopArr = StoredIndex.readTable(spark, s"$indexDir/stop",
+        "shingle STRING", asOf)
       .agg(sort_array(collect_list(col("shingle"))).as("stopa"))
     arrivals
       .select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
@@ -1272,7 +1108,7 @@ object Dedup {
     require(math.abs(storedT - threshold) < 1e-9,
       s"index prefixes were written at threshold $storedT, not $threshold")
     val prefixes = antiTombstoned(spark, indexDir,
-        readIndexTable(spark, s"$indexDir/prefixes",
+        StoredIndex.readTable(spark, s"$indexDir/prefixes",
           "id BIGINT, n BIGINT, rn INT, shingle STRING, pid BIGINT", asOf),
         asOf)
       .select("id", "n", "rn", "shingle")

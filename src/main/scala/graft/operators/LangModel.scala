@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{IndexCommit, IndexTxn, Maintenance, StoredIndex}
+import graft.sources.{IndexCommit, Maintenance, StoredIndex}
 
 /** STORED n-gram language model — the perplexity filter every large-scale
   * training-data pipeline runs (the CCNet/KenLM recipe: train a small LM on
@@ -80,8 +80,6 @@ object LangModel {
     */
   val BackoffNum = 5L
   val BackoffDen = 2L
-
-  private def p(s: String) = java.nio.file.Paths.get(s)
 
   /** Exact integral division of two non-negative decimal(38,0) columns.
     * Spark's `div` returns LongType EVEN FOR DECIMAL OPERANDS (the
@@ -259,7 +257,7 @@ object LangModel {
     require(order == 2 || order == 3, s"order must be 2 or 3 (got $order)")
     val spark = refDocs.sparkSession
     import spark.implicits._
-    IndexCommit.deleteTree(p(dir))
+    IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
     refDocs.select(explode(split(col(textCol), " ")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok")).limit(vocabTop)
@@ -290,34 +288,36 @@ object LangModel {
     IndexCommit.commitFiles(dir, IndexCommit.walkDataFiles(dir))
   }
 
-  /** One staged count-delta publish — bi always, tri when the model is
-    * order 3 — under ONE manifest rename, the shared learn/forget commit
-    * path (the budget gate's `appendFillsDelta` discipline, failpoints
-    * `lm-staged` / `lm-before-commit`): a crash anywhere leaves the
-    * previous version serving BOTH tables (they can never flip
-    * separately) and the re-run re-derives the identical deltas.
+  /** One count-delta publish — bi always, tri when the model is order 3
+    * — the shared learn/forget path (failpoints `lm-staged` /
+    * `lm-before-commit`): both tables flip in one commit, and a no-op
+    * when the deltas are empty. Returns the number of delta rows.
     */
-  private def appendCountDeltas(biDelta: DataFrame,
-                                triDelta: Option[DataFrame], dir: String,
-                                nBuckets: Int): Unit = {
-    val t = new IndexTxn(dir)
-    val biSeg = StoredIndex.nextSeg(dir, "bi", "seg=")
-    val triSeg = StoredIndex.nextSeg(dir, "tri", "seg=")
-    StoredIndex.parallelStages(Seq(
-      () => StoredIndex.writeByPart(biDelta.withColumn("wb", wbCol(nBuckets)),
-        "wb", s"$dir/.bi-stage"))
-      ++ triDelta.map(d => () =>
-        StoredIndex.writeByPart(d.withColumn("wb", wbCol(nBuckets)),
-          "wb", s"$dir/.tri-stage")).toSeq)
-    IndexCommit.hit("lm-staged")
-    StoredIndex.moveTree(t, p(s"$dir/.bi-stage"), p(s"$dir/bi/seg=$biSeg"))
-    triDelta.foreach(_ =>
-      StoredIndex.moveTree(t, p(s"$dir/.tri-stage"),
-        p(s"$dir/tri/seg=$triSeg")))
-    IndexCommit.hit("lm-before-commit")
-    t.commit()
-    t.cleanup()
-  }
+  private def appendCountDeltas(docs: DataFrame, dir: String, idCol: String,
+                                textCol: String, cnt: Column): Long =
+    StoredIndex.mutate(dir, "lm") { t =>
+      val spark = docs.sparkSession
+      val (_, _, nb, ord) = metaOf(spark, dir, None)
+      val vocab = vocabOf(spark, dir, None)
+      val delta = mappedBigrams(docs, vocab, idCol, textCol)
+        .groupBy("w1", "w2").agg(cnt.as("cnt"))
+      val triDelta = if (ord < 3) None else Some(
+        mappedTrigrams(docs, vocab, idCol, textCol)
+          .groupBy("w1", "w2", "w3").agg(cnt.as("cnt")))
+      val n = delta.count() + triDelta.fold(0L)(_.count())
+      if (n > 0) {
+        StoredIndex.parallelStages(Seq(
+          () => StoredIndex.writeByPart(delta.withColumn("wb", wbCol(nb)),
+            "wb", t.stage("bi")))
+          ++ triDelta.map(d => () =>
+            StoredIndex.writeByPart(d.withColumn("wb", wbCol(nb)),
+              "wb", t.stage("tri"))).toSeq)
+        IndexCommit.hit("lm-staged")
+        t.moveToNextSeg("bi", "bi", "seg=")
+        if (triDelta.nonEmpty) t.moveToNextSeg("tri", "tri", "seg=")
+      }
+      n
+    }
 
   /** LEARN: fold a new slice of the reference corpus into the stored
     * counts — one positive delta segment of its bigram counts, mapped
@@ -328,20 +328,8 @@ object LangModel {
     */
   def appendLmCounts(newRefDocs: DataFrame, dir: String,
                      idCol: String = "doc_id",
-                     textCol: String = "text"): Long = {
-    val spark = newRefDocs.sparkSession
-    IndexCommit.vacuum(dir)
-    val (_, _, nb, ord) = metaOf(spark, dir, None)
-    val vocab = vocabOf(spark, dir, None)
-    val delta = mappedBigrams(newRefDocs, vocab, idCol, textCol)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
-    val triDelta = if (ord < 3) None else Some(
-      mappedTrigrams(newRefDocs, vocab, idCol, textCol)
-        .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("cnt")))
-    val n = delta.count() + triDelta.fold(0L)(_.count())
-    if (n > 0) appendCountDeltas(delta, triDelta, dir, nb)
-    n
-  }
+                     textCol: String = "text"): Long =
+    appendCountDeltas(newRefDocs, dir, idCol, textCol, count(lit(1)))
 
   /** FORGET: erase a reference slice's contribution — the SAME delta its
     * learn wrote, NEGATED (takedowns / GDPR erasure of reference
@@ -354,65 +342,32 @@ object LangModel {
     */
   def forgetLmCounts(docs: DataFrame, dir: String,
                      idCol: String = "doc_id",
-                     textCol: String = "text"): Long = {
-    val spark = docs.sparkSession
-    IndexCommit.vacuum(dir)
-    val (_, _, nb, ord) = metaOf(spark, dir, None)
-    val vocab = vocabOf(spark, dir, None)
-    val delta = mappedBigrams(docs, vocab, idCol, textCol)
-      .groupBy("w1", "w2").agg((-count(lit(1))).as("cnt"))
-    val triDelta = if (ord < 3) None else Some(
-      mappedTrigrams(docs, vocab, idCol, textCol)
-        .groupBy("w1", "w2", "w3").agg((-count(lit(1))).as("cnt")))
-    val n = delta.count() + triDelta.fold(0L)(_.count())
-    if (n > 0) appendCountDeltas(delta, triDelta, dir, nb)
-    n
-  }
+                     textCol: String = "text"): Long =
+    appendCountDeltas(docs, dir, idCol, textCol, -count(lit(1)))
 
   /** Fold the bi LSM back to ONE segment once the per-learn delta segments
-    * exceed `maxSegments` — merged counts are unchanged by construction
-    * (decisions before and after the fold are identical); grams whose
-    * merged count annihilated to zero are physically dropped. Same stage /
-    * retire / move-in / atomic-manifest-commit protocol as every fold.
-    * Returns the number of folded segments (0 = under budget, no-op).
+    * exceed `maxSegments` (the tri LSM folds with it) — merged counts are
+    * unchanged by construction (decisions before and after the fold are
+    * identical); grams whose merged count annihilated to zero are
+    * physically dropped. Returns the number of folded segments (0 = under
+    * budget, no-op).
     */
   def compactLmCounts(spark: SparkSession, dir: String,
-                      maxSegments: Int = 8): Int = {
-    IndexCommit.vacuum(dir)
-    val t = new IndexTxn(dir)
-    val segs = StoredIndex.segCount(t, "bi", "seg=")
-    if (segs <= maxSegments) 0
-    else {
-      val (_, _, nb, ord) = metaOf(spark, dir, None)
-      val merged = StoredIndex.mergedLsm(spark, s"$dir/bi",
-          "w1 STRING, w2 STRING, cnt BIGINT, seg INT, wb BIGINT",
-          Seq("w1", "w2"), "cnt")
-        .filter(col("cnt") =!= 0L)
-      StoredIndex.writeByPart(merged.withColumn("wb", wbCol(nb)),
-        "wb", s"$dir/.bi-stage")
-      if (ord >= 3) {
-        val mergedTri = StoredIndex.mergedLsm(spark, s"$dir/tri",
-            "w1 STRING, w2 STRING, w3 STRING, cnt BIGINT, seg INT, " +
-              "wb BIGINT",
-            Seq("w1", "w2", "w3"), "cnt")
-          .filter(col("cnt") =!= 0L)
-        StoredIndex.writeByPart(mergedTri.withColumn("wb", wbCol(nb)),
-          "wb", s"$dir/.tri-stage")
-      }
-      val seg = StoredIndex.nextSeg(dir, "bi", "seg=")
-      val triSeg = StoredIndex.nextSeg(dir, "tri", "seg=")
-      t.retireUnder("bi")
-      StoredIndex.moveTree(t, p(s"$dir/.bi-stage"), p(s"$dir/bi/seg=$seg"))
-      if (ord >= 3) {
-        t.retireUnder("tri")
-        StoredIndex.moveTree(t, p(s"$dir/.tri-stage"),
-          p(s"$dir/tri/seg=$triSeg"))
-      }
-      t.commit()
-      t.cleanup()
+                      maxSegments: Int = 8): Int =
+    StoredIndex.mutate(dir, "lm-compact") { t =>
+      // read only when a fold is due: an under-budget call runs no job
+      lazy val (_, _, nb, ord) = metaOf(spark, dir, None)
+      def fold(table: String, keys: Seq[String], budget: Int): Int =
+        StoredIndex.foldLsm(t, table,
+            keys.map(k => s"$k STRING").mkString(", ") +
+              ", cnt BIGINT, seg INT, wb BIGINT",
+            "seg=", budget, Some("wb"))(segs =>
+          StoredIndex.lsmSum(keys, "cnt")(segs).filter(col("cnt") =!= 0L)
+            .withColumn("wb", wbCol(nb)))
+      val segs = fold("bi", Seq("w1", "w2"), maxSegments)
+      if (segs > 0 && ord >= 3) fold("tri", Seq("w1", "w2", "w3"), 0)
       segs
     }
-  }
 
   /** Nightly-ops policy driver for the lm family (dispatched by
     * [[graft.sources.StoredIndex.maintain]]): folds the bi LSM when its

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.gcolumns.dotp
+import graft.sources.{IndexCommit, StoredIndex}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -690,40 +691,29 @@ object Similarity {
     * [[appendIvfIndex]]), and stats are the ASSIGNMENT history the drift
     * signal compares against, not a live-occupancy view. Ids absent from
     * the index are no-ops; already-tombstoned ids are filtered out
-    * (idempotent). Crash-atomic: one manifest rename publishes the
-    * delete, vacuum + re-run converges. Physical rows leave in
+    * (idempotent); crash-atomic. Physical rows leave in
     * [[compactIvfIndex]] (DELETE-then-COMPACT, the LSM split).
     *
     * Returns the number of NEWLY tombstoned ids.
     */
   def deleteFromIvfIndex(ids: DataFrame, dir: String,
-                         idCol: String = "vec_id"): Long = {
-    import graft.sources.IndexCommit
-    val spark = ids.sparkSession
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(graft.sources.StoredIndex.readTable(spark, s"$dir/tombstones",
-          "id BIGINT"),
-        Seq("id"), "left_anti")
-      .join(readPostings(spark, dir)
-        .select(col("nid").as("id"), col("cell")), Seq("id"))
-    dead.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/.tombstones-stage")
-    val staged = graft.sources.StoredIndex.readDirTable(spark,
-      s"$dir/.tombstones-stage", "id BIGINT, cell BIGINT")
-    val nDead = staged.count()
-    if (nDead > 0) {
-      IndexCommit.hit("ivf-del-staged")
-      graft.sources.StoredIndex.moveTree(t,
-        java.nio.file.Paths.get(s"$dir/.tombstones-stage"),
-        java.nio.file.Paths.get(s"$dir/tombstones"))
-      IndexCommit.hit("ivf-del-before-commit")
-      t.commit()
-      t.cleanup()
-    } else t.cleanup()
-    nDead
-  }
+                         idCol: String = "vec_id"): Long =
+    StoredIndex.mutate(dir, "ivf-del") { t =>
+      val spark = ids.sparkSession
+      val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
+        .join(StoredIndex.readTable(spark, s"$dir/tombstones", "id BIGINT"),
+          Seq("id"), "left_anti")
+        .join(readPostings(spark, dir)
+          .select(col("nid").as("id"), col("cell")), Seq("id"))
+      dead.coalesce(1).write.mode("overwrite").parquet(t.stage("tombstones"))
+      val nDead = StoredIndex.readDirTable(spark, t.stage("tombstones"),
+        "id BIGINT, cell BIGINT").count()
+      if (nDead > 0) {
+        IndexCommit.hit("ivf-del-staged")
+        t.moveIn("tombstones", "tombstones")
+      }
+      nDead
+    }
 
   /** INCREMENTAL IVF maintenance — the [[graft.operators.Dedup.appendLshIndex]]
     * analog for vectors, and structurally much simpler: an IVF index's
@@ -738,124 +728,60 @@ object Similarity {
     * centroids (SimilaritySpec proves it), and [[annRoute]] serves the
     * grown corpus unchanged. Compute per append: O(batch x cells) dots;
     * no rewrite of existing rows, and the whole append (postings + its
-    * stats generation) publishes in one atomic manifest commit — a crash
-    * leaves the previous version intact, a re-run vacuums the orphans
-    * and converges.
+    * stats generation) publishes in one commit.
     *
     * Precondition: `newEmb` ids are fresh (append-only corpus).
     */
-  def appendIvfIndex(newEmb: DataFrame, dir: String): Unit = {
-    import graft.sources.IndexCommit
-    val spark = newEmb.sparkSession
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val cents = readCentroids(spark, dir)
-    val scored = corpusCellsScored(asDouble(newEmb), cents)
-    // a PQ index's appends encode through the STORED codebooks — same
-    // frozen-quantizer model as the centroids, so append == rebuild
-    // bit-identically for codes too
-    val cbs = readCodebooks(spark, dir)
-    val post = if (cbs.isEmpty) scored.drop("qerr")
-               else withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
-    graft.sources.StoredIndex.writeByPart(post, "cell",
-      s"$dir/.postings-stage")
-    val gen = t.baseUnder("stats")
-      .map(_.stripPrefix("stats/").split('/').head)
-      .filter(_.startsWith("gen-"))
-      .map(_.stripPrefix("gen-").toInt).maxOption.getOrElse(-1) + 1
-    genStats(scored, gen)
-      .write.mode("overwrite").parquet(s"$dir/.stats-stage")
-    IndexCommit.hit("ivf-staged")
-    // move staged part files (fresh UUID names) into their live cell
-    // dirs; nothing pre-existing moves or deletes
-    moveTree(t, java.nio.file.Paths.get(s"$dir/.postings-stage"),
-      java.nio.file.Paths.get(s"$dir/postings"))
-    moveTree(t, java.nio.file.Paths.get(s"$dir/.stats-stage"),
-      java.nio.file.Paths.get(f"$dir/stats/gen-$gen%05d"))
-    IndexCommit.hit("ivf-before-commit")
-    t.commit()
-    t.cleanup()
-  }
-
-  /** Stage-dir move-in recording each add in the transaction (see
-    * [[graft.sources.StoredIndex.moveTree]]).
-    */
-  private[operators] def moveTree(t: graft.sources.IndexTxn,
-                       from: java.nio.file.Path,
-                       to: java.nio.file.Path): Unit =
-    graft.sources.StoredIndex.moveTree(t, from, to)
+  def appendIvfIndex(newEmb: DataFrame, dir: String): Unit =
+    StoredIndex.mutate(dir, "ivf") { t =>
+      val spark = newEmb.sparkSession
+      val cents = readCentroids(spark, dir)
+      val scored = corpusCellsScored(asDouble(newEmb), cents)
+      // a PQ index's appends encode through the STORED codebooks — same
+      // frozen-quantizer model as the centroids, so append == rebuild
+      // bit-identically for codes too
+      val cbs = readCodebooks(spark, dir)
+      val post = if (cbs.isEmpty) scored.drop("qerr")
+                 else withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
+      StoredIndex.writeByPart(post, "cell", t.stage("postings"))
+      genStats(scored, StoredIndex.nextSeg(dir, "stats", "gen-"))
+        .write.mode("overwrite").parquet(t.stage("stats"))
+      IndexCommit.hit("ivf-staged")
+      t.moveIn("postings", "postings")
+      t.moveToNextSeg("stats", "stats", "gen-")
+    }
 
   /** SMALL-FILES compaction for an append-grown IVF index — every
     * [[appendIvfIndex]] adds part files to its batch's cells, so a
     * long-running ingest accumulates per-cell file counts. Rewrites each
     * `cell=` dir holding more than `maxFilesPerCell` data files down to
-    * one file under the same stage / move-in / atomic-manifest-commit /
-    * then-delete protocol as the appends (crash at any point leaves the
-    * pre-compaction version serving; idempotent when nothing exceeds the
-    * threshold). Tombstones fold FIRST — dead vectors' rows physically
-    * leave their cells (partition-pruned to the dead `(id, cell)` rows'
-    * cells, O(delete set) IO) and the tombstones retire, so this commit's
+    * one file (a crash at any point leaves the pre-compaction version
+    * serving; idempotent when nothing exceeds the threshold). Tombstones
+    * fold in the same sweep — dead vectors' rows physically leave their
+    * cells (partition-pruned to the dead `(id, cell)` rows' cells,
+    * O(delete set) IO) and the tombstones retire, so this commit's
     * served plans lose the anti-join entirely; the storage-reclaim half
     * of [[deleteFromIvfIndex]]. The `stats` generations are semantic (one
     * row set per append — the drift history) and are left alone. Returns
     * the number of rewritten cells.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      maxFilesPerCell: Int = 4): Int = {
-    import graft.sources.IndexCommit
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    var touched = 0
-    // a PQ index's rewrites must carry the `codes` column forward (the
-    // positional-BM25 `ps` discipline)
-    val postDdl =
-      if (t.liveUnder("codebooks").nonEmpty)
-        "nid BIGINT, nv ARRAY<DOUBLE>, nn DOUBLE, codes ARRAY<INT>"
-      else "nid BIGINT, nv ARRAY<DOUBLE>, nn DOUBLE"
-    val tombFiles = t.liveUnder("tombstones")
-    if (tombFiles.nonEmpty) {
-      val dead = spark.read.schema("id BIGINT, cell BIGINT")
-        .parquet(tombFiles.map(f => s"$dir/$f"): _*)
-      val deadCells = dead.select("cell").distinct()
-        .collect().map(_.getLong(0)).toSet
-      val hit = t.liveUnder("postings")
-        .groupBy(_.stripPrefix("postings/").split('/').head)
-        .filter { case (part, _) =>
-          part.startsWith("cell=") &&
-            deadCells.contains(part.stripPrefix("cell=").toLong) }
-      hit.foreach { case (part, files) =>
-        spark.read.schema(postDdl)
-          .parquet(files.map(f => s"$dir/$f"): _*)
-          .join(broadcast(dead.select(col("id").as("nid"))),
-            Seq("nid"), "left_anti")
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/.postings-tfold/$part")
-        files.foreach(t.retire)
-        moveTree(t, java.nio.file.Paths.get(s"$dir/.postings-tfold/$part"),
-          java.nio.file.Paths.get(s"$dir/postings/$part"))
-        touched += 1
-      }
-      tombFiles.foreach(t.retire)
-      IndexCommit.hit("ivf-tfold")
+                      maxFilesPerCell: Int = 4): Int =
+    StoredIndex.mutate(dir, "ivf-compact") { t =>
+      // a PQ index's rewrites must carry the `codes` column forward (the
+      // positional-BM25 `ps` discipline)
+      val postDdl =
+        if (t.liveUnder("codebooks").nonEmpty)
+          "nid BIGINT, nv ARRAY<DOUBLE>, nn DOUBLE, codes ARRAY<INT>, cell BIGINT"
+        else "nid BIGINT, nv ARRAY<DOUBLE>, nn DOUBLE, cell BIGINT"
+      val dead = StoredIndex.liveTombstones(t, "id BIGINT, cell BIGINT")
+      val deadCells = dead.fold(Seq.empty[Long])(
+        _.select("cell").distinct().collect().map(_.getLong(0)).toSeq)
+      val n = StoredIndex.rewriteParts(t, "postings", postDdl, Some("cell"),
+        deadCells, maxFilesPerCell, dead, "nid")
+      t.retireUnder("tombstones")
+      n
     }
-    val fat = t.liveUnder("postings")
-      .groupBy(_.stripPrefix("postings/").split('/').head)
-      .filter { case (part, files) =>
-        part.startsWith("cell=") && files.size > maxFilesPerCell }
-    fat.foreach { case (part, files) =>
-      spark.read.schema(postDdl)
-        .parquet(files.map(f => s"$dir/$f"): _*)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/.postings-compact/$part")
-      files.foreach(t.retire)
-      moveTree(t, java.nio.file.Paths.get(s"$dir/.postings-compact/$part"),
-        java.nio.file.Paths.get(s"$dir/postings/$part"))
-    }
-    IndexCommit.hit("ivf-compact-before-commit")
-    if (fat.nonEmpty || tombFiles.nonEmpty) t.commit()
-    t.cleanup()
-    fat.size + touched
-  }
 
   /** Stored drift statistics vs the gen-0 training baseline — the
     * "retrain or keep appending?" signal [[appendIvfIndex]]'s maintenance
@@ -914,9 +840,7 @@ object Similarity {
     * deterministic sample as a fresh build, every vector re-assigns
     * through the new argmax (the one unavoidable corpus-scale pass — the
     * point of a rebuild), and `centroids` + `postings` + a fresh `gen-0`
-    * stats baseline REPLACE the old tables in ONE manifest commit:
-    * readers serve the old index until the commit point, a crash at any
-    * earlier point leaves it intact, vacuum + re-run converges. Pending
+    * stats baseline REPLACE the old tables in ONE commit. Pending
     * tombstones fold for free (the rebuild reads the served view), and
     * the drift history resets — the new baseline is the new training
     * mix. The result equals [[ivfWriteIndex]] over the live corpus with
@@ -932,61 +856,46 @@ object Similarity {
     * small-index levels — SimilaritySpec measures the candidate volume).
     */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      nCells: Int = 8, iters: Int = 3): Unit = {
-    import graft.sources.IndexCommit
-    import spark.implicits._
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val eRaw = servedPostings(spark, dir)
-      .select(col("nid").as("vec_id"), col("nv").as("v"), col("nn").as("vn"))
-    val e = graft.Caches.cached("emb-vectors",
-      eRaw.queryExecution.analyzed.semanticHash().toString)(eRaw)
-    val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-      .toDF("cell", "cv")
-      .write.mode("overwrite").parquet(s"$dir/.centroids-stage")
-    val scored = corpusCellsScored(e, cents)
-    // a PQ index RETRAINS its codebooks too (same m/ksub, read off the
-    // stored table — no meta flag) and re-encodes every vector: the
-    // rebuild is where quantizer drift resets, for both quantizer levels
-    val oldCbs = readCodebooks(spark, dir)
-    val post =
-      if (oldCbs.isEmpty) scored.drop("qerr")
-      else {
-        val cbs = pqCodebooks(e, cents, oldCbs.size, oldCbs.head.size, iters)
-        cbs.zipWithIndex.flatMap { case (cb, s) =>
-          cb.zipWithIndex.map { case (c, i) => (s, i, c) } }
-          .toDF("sub", "code", "cv")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/.codebooks-stage")
-        withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
-      }
-    graft.sources.StoredIndex.writeByPart(post, "cell",
-      s"$dir/.postings-stage")
-    genStats(scored, gen = 0)
-      .write.mode("overwrite").parquet(s"$dir/.stats-stage")
-    IndexCommit.hit("ivf-rebuild-staged")
-    // every old table retires; the staged build moves in; one commit
-    // flips the whole index version
-    t.retireUnder("centroids")
-    t.retireUnder("postings")
-    t.retireUnder("stats")
-    t.retireUnder("tombstones")
-    if (oldCbs.nonEmpty) {
-      t.retireUnder("codebooks")
-      moveTree(t, java.nio.file.Paths.get(s"$dir/.codebooks-stage"),
-        java.nio.file.Paths.get(s"$dir/codebooks"))
+                      nCells: Int = 8, iters: Int = 3): Unit =
+    StoredIndex.mutate(dir, "ivf-rebuild") { t =>
+      import spark.implicits._
+      val eRaw = servedPostings(spark, dir)
+        .select(col("nid").as("vec_id"), col("nv").as("v"), col("nn").as("vn"))
+      val e = graft.Caches.cached("emb-vectors",
+        eRaw.queryExecution.analyzed.semanticHash().toString)(eRaw)
+      val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
+      cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+        .toDF("cell", "cv")
+        .write.mode("overwrite").parquet(t.stage("centroids"))
+      val scored = corpusCellsScored(e, cents)
+      // a PQ index RETRAINS its codebooks too (same m/ksub, read off the
+      // stored table — no meta flag) and re-encodes every vector: the
+      // rebuild is where quantizer drift resets, for both quantizer levels
+      val oldCbs = readCodebooks(spark, dir)
+      val post =
+        if (oldCbs.isEmpty) scored.drop("qerr")
+        else {
+          val cbs = pqCodebooks(e, cents, oldCbs.size, oldCbs.head.size, iters)
+          cbs.zipWithIndex.flatMap { case (cb, s) =>
+            cb.zipWithIndex.map { case (c, i) => (s, i, c) } }
+            .toDF("sub", "code", "cv")
+            .coalesce(1).write.mode("overwrite")
+            .parquet(t.stage("codebooks"))
+          withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
+        }
+      StoredIndex.writeByPart(post, "cell", t.stage("postings"))
+      genStats(scored, gen = 0)
+        .write.mode("overwrite").parquet(t.stage("stats"))
+      IndexCommit.hit("ivf-rebuild-staged")
+      // every old table retires; the staged build moves in; one commit
+      // flips the whole index version
+      t.retireUnder("tombstones")
+      if (oldCbs.nonEmpty) t.replace("codebooks", "codebooks")
+      t.replace("centroids", "centroids")
+      t.replace("postings", "postings")
+      t.retireUnder("stats")
+      t.moveIn("stats", "stats/gen-00000")
     }
-    moveTree(t, java.nio.file.Paths.get(s"$dir/.centroids-stage"),
-      java.nio.file.Paths.get(s"$dir/centroids"))
-    moveTree(t, java.nio.file.Paths.get(s"$dir/.postings-stage"),
-      java.nio.file.Paths.get(s"$dir/postings"))
-    moveTree(t, java.nio.file.Paths.get(s"$dir/.stats-stage"),
-      java.nio.file.Paths.get(s"$dir/stats/gen-00000"))
-    IndexCommit.hit("ivf-rebuild-before-commit")
-    t.commit()
-    t.cleanup()
-  }
 
   /** NIGHTLY-OPS policy entry point for a stored IVF / IVF-PQ index —
     * the "retrain or keep compacting?" decision [[ivfDriftStats]]

@@ -79,11 +79,9 @@ import org.apache.spark.sql.functions._
   * hash-checks against the same recompute-from-raw-docs DuckDB oracle.
   *
   * Maintenance contract: single writer per index root; doc ids are
-  * non-negative and fresh on append (append-only corpus). All writers
-  * run vacuum-then-[[graft.sources.IndexTxn]]: stage under dot-dirs,
-  * move in under fresh names, ONE atomic manifest rename publishes every
-  * table of the change together; a crash at any failpoint leaves the
-  * previous version serving bit-exactly and a re-run converges
+  * non-negative and fresh on append (append-only corpus). Every writer
+  * runs through [[graft.sources.StoredIndex.mutate]], so each change
+  * publishes every table it touches in one manifest commit
   * (TextIndexSpec kills at injected failpoints).
   */
 object TextIndex {
@@ -321,20 +319,27 @@ object TextIndex {
   private def mergedTermdf(spark: SparkSession, dir: String,
                            pred: Column,
                            asOf: Option[Int] = None): DataFrame =
-    StoredIndex.readTable(spark, s"$dir/termdf",
-        "term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT, " +
-          "seg INT, tb BIGINT", asOf)
-      .filter(pred)
-      .groupBy("term").agg(sum(col("df")).as("df"),
+    mergeTermdf(StoredIndex.readTable(spark, s"$dir/termdf", termdfDdl, asOf)
+      .filter(pred))
+
+  private val termdfDdl =
+    "term STRING, df BIGINT, max_tf BIGINT, min_dl BIGINT, seg INT, tb BIGINT"
+
+  /** The termdf LSM merge — shared by serving and the compaction fold. */
+  private def mergeTermdf(segs: DataFrame): DataFrame =
+    segs.groupBy("term").agg(sum(col("df")).as("df"),
         max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
       .filter(col("df") > 0)
 
   /** Merged live corpus stats (one row: n docs, total length). */
   private def mergedStats(spark: SparkSession, dir: String,
                           asOf: Option[Int] = None): DataFrame =
-    StoredIndex.readTable(spark, s"$dir/stats",
-        "n BIGINT, tl BIGINT, seg INT", asOf)
-      .agg(sum(col("n")).as("n"), sum(col("tl")).as("tl"))
+    mergeStats(StoredIndex.readTable(spark, s"$dir/stats", statsDdl, asOf))
+
+  private val statsDdl = "n BIGINT, tl BIGINT, seg INT"
+
+  private def mergeStats(segs: DataFrame): DataFrame =
+    segs.agg(sum(col("n")).as("n"), sum(col("tl")).as("tl"))
 
   /** The served version's live corpus stats (n docs, total length) —
     * two longs, null on an empty index — collected once per commit
@@ -368,9 +373,6 @@ object TextIndex {
                        asOf: Option[Int] = None): DataFrame =
     StoredIndex.antiTombstoned(spark, dir, "bm25-tombstones", df, idCol,
       asOf, distinct = true)
-
-  private def nextSeg(dir: String, table: String): Int =
-    StoredIndex.nextSeg(dir, table, "seg=")
 
   /** Tokenized batch: (doc_id, toks). One shared shape for every writer. */
   private def tokenized(docs: DataFrame,
@@ -646,63 +648,52 @@ object TextIndex {
     *
     * Precondition: `newDocs` ids are fresh (append-only corpus).
     */
-  def appendBm25Index(newDocs: DataFrame, dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val m = metaFull(spark, dir)
-    val (nb, dlr, hasFwd) = (m.nb, m.dlr, m.fwd)
-    // same materialization discipline as the build (see writeBm25Index):
-    // tokenize once, then every later stage table derives from a
-    // read-back of the staged postings/doclens parquet instead of
-    // re-running the tokenize + explode + groupBy chain
-    writeByPart(postingsOf(tokenized(newDocs, m.tokenize), nb, m.pos),
-      "tb", s"$dir/.postings-stage")
-    val post = StoredIndex.readDirTable(spark, s"$dir/.postings-stage",
-      postingsDdl(m.pos))
-    // independent stage-table writes from the immutable postings
-    // read-back — concurrent jobs, same fan as the build (guide §2.6):
-    // termdf/fwd derive from postings alone, so the doclens write and its
-    // dependents (impacts, stats) run as one parallel branch beside them
-    // (the r19 build restructure). An impacts segment is segment-local
-    // impact order: serving reads every segment's head, compaction
-    // re-blocks globally.
-    def dlsChain(): Unit = {
-      writeByPart(doclensFromPostings(newDocs, post, dlr), "dr",
-        s"$dir/.doclens-stage")
-      val dls = StoredIndex.readDirTable(spark, s"$dir/.doclens-stage",
-        "doc_id BIGINT, dl BIGINT, dr BIGINT")
-      StoredIndex.parallelStages(
-        (if (m.hasImpacts)
-           Seq(() => writeImpacts(impactsOf(post, dls, m.impB, m.impBs,
-             m.impF), s"$dir/.impacts-stage"))
-         else Nil)
-        ++ Seq(() => dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("tl"))
-             .coalesce(1).write.mode("overwrite").parquet(s"$dir/.stats-stage")))
+  def appendBm25Index(newDocs: DataFrame, dir: String): Unit =
+    StoredIndex.mutate(dir, "bm25") { t =>
+      val spark = newDocs.sparkSession
+      val m = metaFull(spark, dir)
+      // same materialization discipline as the build (see writeBm25Index):
+      // tokenize once, then every later stage table derives from a
+      // read-back of the staged postings/doclens parquet instead of
+      // re-running the tokenize + explode + groupBy chain
+      writeByPart(postingsOf(tokenized(newDocs, m.tokenize), m.nb, m.pos),
+        "tb", t.stage("postings"))
+      val post = StoredIndex.readDirTable(spark, t.stage("postings"),
+        postingsDdl(m.pos))
+      // independent stage-table writes from the immutable postings
+      // read-back — concurrent jobs, same fan as the build (guide §2.6):
+      // termdf/fwd derive from postings alone, so the doclens write and its
+      // dependents (impacts, stats) run as one parallel branch beside them
+      // (the r19 build restructure). An impacts segment is segment-local
+      // impact order: serving reads every segment's head, compaction
+      // re-blocks globally.
+      def dlsChain(): Unit = {
+        writeByPart(doclensFromPostings(newDocs, post, m.dlr), "dr",
+          t.stage("doclens"))
+        val dls = StoredIndex.readDirTable(spark, t.stage("doclens"),
+          "doc_id BIGINT, dl BIGINT, dr BIGINT")
+        StoredIndex.parallelStages(
+          (if (m.hasImpacts)
+             Seq(() => writeImpacts(impactsOf(post, dls, m.impB, m.impBs,
+               m.impF), t.stage("impacts")))
+           else Nil)
+          ++ Seq(() => dls.agg(count(lit(1)).as("n"), sum(col("dl")).as("tl"))
+               .coalesce(1).write.mode("overwrite").parquet(t.stage("stats"))))
+      }
+      StoredIndex.parallelStages(Seq(
+        () => dlsChain(),
+        () => writeByPart(termStatsOfPost(post), "tb", t.stage("termdf")))
+        ++ (if (m.fwd)
+              Seq(() => writeByPart(fwdOf(post, m.dlr), "dr", t.stage("fwd")))
+            else Nil))
+      IndexCommit.hit("bm25-staged")
+      t.moveIn("postings", "postings")
+      t.moveToNextSeg("termdf", "termdf", "seg=")
+      t.moveIn("doclens", "doclens")
+      if (m.fwd) t.moveIn("fwd", "fwd")
+      if (m.hasImpacts) t.moveToNextSeg("impacts", "impacts", "seg=")
+      t.moveToNextSeg("stats", "stats", "seg=")
     }
-    StoredIndex.parallelStages(Seq(
-      () => dlsChain(),
-      () => writeByPart(termStatsOfPost(post), "tb", s"$dir/.termdf-stage"))
-      ++ (if (hasFwd)
-            Seq(() => writeByPart(fwdOf(post, dlr), "dr", s"$dir/.fwd-stage"))
-          else Nil))
-    IndexCommit.hit("bm25-staged")
-    def p(s: String) = java.nio.file.Paths.get(s)
-    StoredIndex.moveTree(t, p(s"$dir/.postings-stage"), p(s"$dir/postings"))
-    StoredIndex.moveTree(t, p(s"$dir/.termdf-stage"),
-      p(s"$dir/termdf/seg=${nextSeg(dir, "termdf")}"))
-    StoredIndex.moveTree(t, p(s"$dir/.doclens-stage"), p(s"$dir/doclens"))
-    if (hasFwd)
-      StoredIndex.moveTree(t, p(s"$dir/.fwd-stage"), p(s"$dir/fwd"))
-    if (m.hasImpacts)
-      StoredIndex.moveTree(t, p(s"$dir/.impacts-stage"),
-        p(s"$dir/impacts/seg=${nextSeg(dir, "impacts")}"))
-    StoredIndex.moveTree(t, p(s"$dir/.stats-stage"),
-      p(s"$dir/stats/seg=${nextSeg(dir, "stats")}"))
-    IndexCommit.hit("bm25-before-commit")
-    t.commit()
-    t.cleanup()
-  }
 
   /** TOMBSTONE-DELETE docs — the FORGET half, and for BM25 an EXACT one:
     * alongside the (id, tb) tombstones (serving hides the dead ids; the
@@ -718,51 +709,43 @@ object TextIndex {
     * Returns the number of NEWLY tombstoned docs.
     */
   def deleteFromBm25Index(ids: DataFrame, dir: String,
-                          idCol: String = "doc_id"): Long = {
-    val spark = ids.sparkSession
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    // newly dead = requested ∩ indexed (doclens is the membership table:
-    // every ingested doc has exactly one row) − already tombstoned
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(StoredIndex.readTable(spark, s"$dir/tombstones", "id BIGINT"),
-        Seq("id"), "left_anti")
-      .join(rawDoclens(spark, dir).select(col("doc_id").as("id"), col("dl")),
-        Seq("id"))
-    val deadPost = rawPostings(spark, dir)
-      .join(dead.select(col("id").as("doc_id")), Seq("doc_id"))
-    // (id, tb) rows — tb null for a doc with no postings (empty text)
-    dead.select("id")
-      .join(deadPost.select(col("doc_id").as("id"), col("tb")).distinct(),
-        Seq("id"), "left")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/.tombstones-stage")
-    val nDead = StoredIndex.readDirTable(spark, s"$dir/.tombstones-stage",
-      "id BIGINT, tb BIGINT").select("id").distinct().count()
-    if (nDead > 0) {
-      // NULL envelope on the negative delta: a delete can only SHRINK a
-      // term's true (max_tf, min_dl), so leaving the merged envelope
-      // untouched keeps it a sound (historical) upper bound
-      writeByPart(
-        deadPost.groupBy("term", "tb").agg((-count(lit(1))).as("df"),
-          lit(null).cast("long").as("max_tf"),
-          lit(null).cast("long").as("min_dl")),
-        "tb", s"$dir/.termdf-stage")
-      dead.agg((-count(lit(1))).as("n"), (-sum(col("dl"))).as("tl"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/.stats-stage")
-      IndexCommit.hit("bm25-del-staged")
-      def p(s: String) = java.nio.file.Paths.get(s)
-      StoredIndex.moveTree(t, p(s"$dir/.tombstones-stage"),
-        p(s"$dir/tombstones"))
-      StoredIndex.moveTree(t, p(s"$dir/.termdf-stage"),
-        p(s"$dir/termdf/seg=${nextSeg(dir, "termdf")}"))
-      StoredIndex.moveTree(t, p(s"$dir/.stats-stage"),
-        p(s"$dir/stats/seg=${nextSeg(dir, "stats")}"))
-      IndexCommit.hit("bm25-del-before-commit")
-      t.commit()
-      t.cleanup()
-    } else t.cleanup()
-    nDead
-  }
+                          idCol: String = "doc_id"): Long =
+    StoredIndex.mutate(dir, "bm25-del") { t =>
+      val spark = ids.sparkSession
+      // newly dead = requested ∩ indexed (doclens is the membership table:
+      // every ingested doc has exactly one row) − already tombstoned
+      val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
+        .join(StoredIndex.readTable(spark, s"$dir/tombstones", "id BIGINT"),
+          Seq("id"), "left_anti")
+        .join(rawDoclens(spark, dir).select(col("doc_id").as("id"), col("dl")),
+          Seq("id"))
+      val deadPost = rawPostings(spark, dir)
+        .join(dead.select(col("id").as("doc_id")), Seq("doc_id"))
+      // (id, tb) rows — tb null for a doc with no postings (empty text)
+      dead.select("id")
+        .join(deadPost.select(col("doc_id").as("id"), col("tb")).distinct(),
+          Seq("id"), "left")
+        .coalesce(1).write.mode("overwrite").parquet(t.stage("tombstones"))
+      val nDead = StoredIndex.readDirTable(spark, t.stage("tombstones"),
+        "id BIGINT, tb BIGINT").select("id").distinct().count()
+      if (nDead > 0) {
+        // NULL envelope on the negative delta: a delete can only SHRINK a
+        // term's true (max_tf, min_dl), so leaving the merged envelope
+        // untouched keeps it a sound (historical) upper bound
+        writeByPart(
+          deadPost.groupBy("term", "tb").agg((-count(lit(1))).as("df"),
+            lit(null).cast("long").as("max_tf"),
+            lit(null).cast("long").as("min_dl")),
+          "tb", t.stage("termdf"))
+        dead.agg((-count(lit(1))).as("n"), (-sum(col("dl"))).as("tl"))
+          .coalesce(1).write.mode("overwrite").parquet(t.stage("stats"))
+        IndexCommit.hit("bm25-del-staged")
+        t.moveIn("tombstones", "tombstones")
+        t.moveToNextSeg("termdf", "termdf", "seg=")
+        t.moveToNextSeg("stats", "stats", "seg=")
+      }
+      nDead
+    }
 
   /** Physical maintenance: fold tombstones (rewrite ONLY the dead docs'
     * postings buckets and doclens ranges — partition-pruned via the
@@ -770,120 +753,68 @@ object TextIndex {
     * the tombstones, so served plans lose the anti-join), fold LSM tables
     * past [[segBudget]] segments to one base, and rewrite any partition
     * holding more than [[maxFilesPerPartition]] data files to one file.
-    * Same stage / move-in / one-commit / then-delete protocol as the
-    * appends: crash-safe at every failpoint, idempotent when nothing is
-    * over budget. Returns the number of rewritten partitions.
+    * Idempotent when nothing is over budget. Returns the number of
+    * rewritten partitions.
     */
   def compactBm25Index(spark: SparkSession, dir: String,
-                       maxFiles: Int = maxFilesPerPartition): Int = {
-    IndexCommit.vacuum(dir)
-    val t = new graft.sources.IndexTxn(dir)
-    val m0 = metaFull(spark, dir)
-    val (dlr, hasPos) = (m0.dlr, m0.pos)
-    val hasDead = StoredIndex.hasTombstones(dir)
-    def p(s: String) = java.nio.file.Paths.get(s)
-    var rewritten = 0
-
-    // partitions (key=value dir name) of `table` holding > maxFiles files
-    def overfull(table: String): Seq[String] =
-      StoredIndex.overfullPartitions(t, table, maxFiles)
-
-    // dead bucket / range keys, driver-bounded by the takedown-sized
-    // tombstone set
-    val (deadTbs, deadDrs) =
-      if (!hasDead) (Seq.empty[Long], Seq.empty[Long])
-      else {
-        val ts = StoredIndex.readTable(spark, s"$dir/tombstones",
-          "id BIGINT, tb BIGINT")
-        (ts.filter(col("tb").isNotNull).select("tb").distinct()
-            .collect().map(_.getLong(0)).toSeq,
-          ts.select(expr(s"id div ${dlr}L").as("dr")).distinct()
-            .collect().map(_.getLong(0)).toSeq)
+                       maxFiles: Int = maxFilesPerPartition): Int =
+    StoredIndex.mutate(dir, "bm25-compact") { t =>
+      val m = metaFull(spark, dir)
+      val hasDead = StoredIndex.hasTombstones(dir)
+      // dead bucket / range keys, driver-bounded by the takedown-sized
+      // tombstone set
+      val (deadTbs, deadDrs) =
+        if (!hasDead) (Seq.empty[Long], Seq.empty[Long])
+        else {
+          val ts = StoredIndex.readTable(spark, s"$dir/tombstones",
+            "id BIGINT, tb BIGINT")
+          (ts.filter(col("tb").isNotNull).select("tb").distinct()
+              .collect().map(_.getLong(0)).toSeq,
+            ts.select(expr(s"id div ${m.dlr}L").as("dr")).distinct()
+              .collect().map(_.getLong(0)).toSeq)
+        }
+      val dead = Option.when(hasDead)(StoredIndex.tombstoneIds(spark, dir,
+        "bm25-tombstones", distinct = true))
+      def rewrite(table: String, ddl: String, part: String,
+                  keys: Seq[Long]): Int =
+        StoredIndex.rewriteParts(t, table, ddl, Some(part), keys, maxFiles,
+          dead, "doc_id")
+      // a positional index's rewrite carries the `ps` column forward
+      var rewritten =
+        rewrite("postings", postingsDdl(m.pos), "tb", deadTbs) +
+          rewrite("doclens", "doc_id BIGINT, dl BIGINT, dr BIGINT", "dr",
+            deadDrs) +
+          rewrite("fwd", "doc_id BIGINT, term STRING, tf BIGINT, dr BIGINT",
+            "dr", deadDrs)
+      // LSM folds: segment count over budget -> one merged base segment.
+      // The vocabulary-sized termdf fold is metadata-scale next to postings.
+      if (StoredIndex.foldLsm(t, "termdf", termdfDdl, "seg=", segBudget,
+            Some("tb"), toBase = true)(
+            segs => mergeTermdf(segs).withColumn("tb", tbCol(m.nb))) > 0)
+        rewritten += 1
+      if (StoredIndex.foldLsm(t, "stats", statsDdl, "seg=", segBudget,
+            toBase = true)(segs => mergeStats(segs).coalesce(1)) > 0)
+        rewritten += 1
+      // impacts fold: recompute GLOBAL impact blocks from the live
+      // postings + doclens — on live tombstones this is mandatory, not an
+      // optimization (the tombstones retire below, so dead rows must
+      // physically leave every serving table in the same commit); past the
+      // segment budget it also upgrades the per-append segment-local
+      // orderings to one corpus-wide ordering. One postings-scale pass —
+      // the same order of work as the dead-bucket postings rewrite above.
+      if (m.hasImpacts &&
+          (hasDead || StoredIndex.segCount(t, "impacts", "seg=") > segBudget)) {
+        val livePost = antiDead(spark, dir, rawPostings(spark, dir), "doc_id")
+        val liveDls = antiDead(spark, dir, rawDoclens(spark, dir), "doc_id")
+        writeImpacts(impactsOf(livePost, liveDls, m.impB, m.impBs, m.impF),
+          t.stage("impacts"))
+        t.retireUnder("impacts")
+        t.moveIn("impacts", "impacts/seg=0")
+        rewritten += 1
       }
-
-    val postKeys = (deadTbs.map(v => s"tb=$v") ++ overfull("postings")).distinct
-    if (postKeys.nonEmpty) {
-      // a positional index's rewrite must carry the `ps` column forward
-      val raw = if (hasPos) rawPostingsPos(spark, dir)
-                else rawPostings(spark, dir)
-      val keep = antiDead(spark, dir,
-        raw.filter(col("tb").isin(postKeys.map(_.stripPrefix("tb=").toLong): _*)),
-        "doc_id")
-      writeByPart(keep, "tb", s"$dir/.postings-compact")
-      postKeys.foreach(k => t.retireUnder(s"postings/$k"))
-      StoredIndex.moveTree(t, p(s"$dir/.postings-compact"), p(s"$dir/postings"))
-      rewritten += postKeys.size
+      if (hasDead) t.retireUnder("tombstones")
+      rewritten
     }
-    val dlKeys = (deadDrs.map(v => s"dr=$v") ++ overfull("doclens")).distinct
-    if (dlKeys.nonEmpty) {
-      val keep = antiDead(spark, dir,
-        rawDoclens(spark, dir)
-          .filter(col("dr").isin(dlKeys.map(_.stripPrefix("dr=").toLong): _*)),
-        "doc_id")
-      writeByPart(keep, "dr", s"$dir/.doclens-compact")
-      dlKeys.foreach(k => t.retireUnder(s"doclens/$k"))
-      StoredIndex.moveTree(t, p(s"$dir/.doclens-compact"), p(s"$dir/doclens"))
-      rewritten += dlKeys.size
-    }
-    // forward table (when present): same doc-range reclaim as doclens
-    val fwdKeys =
-      if (t.liveUnder("fwd").isEmpty) Seq.empty[String]
-      else (deadDrs.map(v => s"dr=$v") ++ overfull("fwd")).distinct
-    if (fwdKeys.nonEmpty) {
-      val keep = antiDead(spark, dir,
-        rawFwd(spark, dir)
-          .filter(col("dr").isin(fwdKeys.map(_.stripPrefix("dr=").toLong): _*)),
-        "doc_id")
-      writeByPart(keep, "dr", s"$dir/.fwd-compact")
-      fwdKeys.foreach(k => t.retireUnder(s"fwd/$k"))
-      StoredIndex.moveTree(t, p(s"$dir/.fwd-compact"), p(s"$dir/fwd"))
-      rewritten += fwdKeys.size
-    }
-    // LSM folds: segment count over budget -> one merged base segment.
-    // The vocabulary-sized termdf fold is metadata-scale next to postings.
-    def segCount(table: String): Int = StoredIndex.segCount(t, table, "seg=")
-    if (segCount("termdf") > segBudget) {
-      writeByPart(mergedTermdf(spark, dir, lit(true))
-        .withColumn("tb", tbCol(meta(spark, dir)._1)),
-        "tb", s"$dir/.termdf-compact")
-      t.retireUnder("termdf")
-      StoredIndex.moveTree(t, p(s"$dir/.termdf-compact"), p(s"$dir/termdf/seg=0"))
-      rewritten += 1
-    }
-    if (segCount("stats") > segBudget) {
-      mergedStats(spark, dir)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/.stats-compact")
-      t.retireUnder("stats")
-      StoredIndex.moveTree(t, p(s"$dir/.stats-compact"), p(s"$dir/stats/seg=0"))
-      rewritten += 1
-    }
-    // impacts fold: recompute GLOBAL impact blocks from the live
-    // postings + doclens — on live tombstones this is mandatory, not an
-    // optimization (the tombstones retire below, so dead rows must
-    // physically leave every serving table in the same commit); past the
-    // segment budget it also upgrades the per-append segment-local
-    // orderings to one corpus-wide ordering. One postings-scale pass —
-    // the same order of work as the dead-bucket postings rewrite above.
-    if (m0.hasImpacts &&
-        (hasDead || segCount("impacts") > segBudget)) {
-      val livePost = antiDead(spark, dir, rawPostings(spark, dir), "doc_id")
-      val liveDls = antiDead(spark, dir, rawDoclens(spark, dir), "doc_id")
-      writeImpacts(impactsOf(livePost, liveDls, m0.impB, m0.impBs, m0.impF),
-        s"$dir/.impacts-compact")
-      t.retireUnder("impacts")
-      StoredIndex.moveTree(t, p(s"$dir/.impacts-compact"),
-        p(s"$dir/impacts/seg=0"))
-      rewritten += 1
-    }
-    if (hasDead) t.retireUnder("tombstones")
-    if (rewritten > 0 || hasDead) {
-      IndexCommit.hit("bm25-compact-staged")
-      IndexCommit.hit("bm25-compact-before-commit")
-      t.commit()
-      t.cleanup()
-    } else t.cleanup()
-    rewritten
-  }
 
   /** NIGHTLY-OPS policy entry point (the decision loop as code, not a
     * caller's judgment call): inspect the committed state and run the
@@ -891,8 +822,7 @@ object TextIndex {
     * self-inspects tombstones, LSM segment budgets and overfull
     * partitions, so the policy here IS that sweep, reported as an audit
     * row. Idempotent: a second run finds nothing over budget and reports
-    * `noop`. Crash-safe by inheritance (the sweep's failpoint-proven
-    * one-commit protocol).
+    * `noop`. Crash-safe by inheritance.
     */
   def maintainBm25Index(spark: SparkSession, dir: String,
                         maxFiles: Int = maxFilesPerPartition)

@@ -61,8 +61,6 @@ import org.apache.spark.sql.functions._
   */
 object AggView {
 
-  private def p(s: String) = java.nio.file.Paths.get(s)
-
   /** Accumulator type: wide enough that 100 TB of decimal(12,2) measures
     * cannot overflow a key's running sum.
     */
@@ -140,7 +138,7 @@ object AggView {
     require(nBuckets > 0, "nBuckets must be > 0")
     val spark = rows.sparkSession
     import spark.implicits._
-    IndexCommit.deleteTree(p(dir))
+    IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
     val state = aggOf(rows, keys, vals, minmax)
     StoredIndex.writeByPart(state.withColumn("kb", kbCol(keys, nBuckets)),
       "kb", s"$dir/state/seg=0")
@@ -152,23 +150,24 @@ object AggView {
     IndexCommit.commitFiles(dir, IndexCommit.walkDataFiles(dir))
   }
 
-  /** One staged state delta, published by one manifest rename — the
-    * shared append/forget commit path (the [[graft.operators.LangModel]]
-    * `appendBiDelta` discipline): a crash at either failpoint leaves the
-    * previous version serving and the re-run lands exactly once.
+  /** One state delta segment of `delta` — the shared append/forget path
+    * (failpoints `aggview-staged` / `aggview-before-commit`); a no-op when
+    * the delta is empty. Returns the number of delta rows.
     */
-  private def appendDelta(delta: DataFrame, dir: String, m: Meta): Unit = {
-    val t = new IndexTxn(dir)
-    val seg = StoredIndex.nextSeg(dir, "state", "seg=")
-    StoredIndex.writeByPart(delta.withColumn("kb", kbCol(m.keys, m.nb)),
-      "kb", s"$dir/.state-stage")
-    IndexCommit.hit("aggview-staged")
-    StoredIndex.moveTree(t, p(s"$dir/.state-stage"),
-      p(s"$dir/state/seg=$seg"))
-    IndexCommit.hit("aggview-before-commit")
-    t.commit()
-    t.cleanup()
-  }
+  private def appendDelta(spark: SparkSession, dir: String)(
+      delta: Meta => DataFrame): Long =
+    StoredIndex.mutate(dir, "aggview") { t =>
+      val m = metaOf(spark, dir, None)
+      val d = delta(m)
+      val n = d.count()
+      if (n > 0) {
+        StoredIndex.writeByPart(d.withColumn("kb", kbCol(m.keys, m.nb)),
+          "kb", t.stage("state"))
+        IndexCommit.hit("aggview-staged")
+        t.moveToNextSeg("state", "state", "seg=")
+      }
+      n
+    }
 
   /** APPEND rows into the view: one positive delta segment of the
     * defining aggregate over the batch. Empty batches are a no-op (no
@@ -187,35 +186,31 @@ object AggView {
     * assumption every compaction in this engine states); readers are
     * never blocked (manifest snapshot isolation).
     */
-  def append(rows: DataFrame, dir: String): Long = {
-    val spark = rows.sparkSession
-    IndexCommit.vacuum(dir)
-    val m = metaOf(spark, dir, None)
-    val delta0 = aggOf(rows, m.keys, m.vals, m.mm)
-    val delta = if (m.mm.isEmpty) delta0 else {
-      // bounded collect: the batch's touched kb buckets (<= nbuckets)
-      val wanted = delta0.select(kbCol(m.keys, m.nb).as("kb")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val curAggs = m.mm.flatMap(c => Seq(
-        max_by(col(s"min_$c"), col("seg")).as(s"cur_min_$c"),
-        max_by(col(s"max_$c"), col("seg")).as(s"cur_max_$c")))
-      val cur = StoredIndex.readTable(spark, s"$dir/state", m.ddl, None)
-        .filter(col("kb").isin(wanted: _*))
-        .groupBy(m.keys.map(col): _*).agg(curAggs.head, curAggs.tail: _*)
-      delta0.join(cur, m.keys, "left")
-        .select(m.keys.map(col) ++ (col("cnt") +:
-          (m.vals.map(v => col(s"sum_$v")) ++
-            m.mm.flatMap(c => Seq(
-              // least/greatest skip nulls: a key new to the view (or
-              // nulled by a full erasure) restarts at the batch extrema
-              least(col(s"cur_min_$c"), col(s"min_$c")).as(s"min_$c"),
-              greatest(col(s"cur_max_$c"), col(s"max_$c"))
-                .as(s"max_$c"))))): _*)
+  def append(rows: DataFrame, dir: String): Long =
+    appendDelta(rows.sparkSession, dir) { m =>
+      val spark = rows.sparkSession
+      val delta0 = aggOf(rows, m.keys, m.vals, m.mm)
+      if (m.mm.isEmpty) delta0 else {
+        // bounded collect: the batch's touched kb buckets (<= nbuckets)
+        val wanted = delta0.select(kbCol(m.keys, m.nb).as("kb")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        val curAggs = m.mm.flatMap(c => Seq(
+          max_by(col(s"min_$c"), col("seg")).as(s"cur_min_$c"),
+          max_by(col(s"max_$c"), col("seg")).as(s"cur_max_$c")))
+        val cur = StoredIndex.readTable(spark, s"$dir/state", m.ddl, None)
+          .filter(col("kb").isin(wanted: _*))
+          .groupBy(m.keys.map(col): _*).agg(curAggs.head, curAggs.tail: _*)
+        delta0.join(cur, m.keys, "left")
+          .select(m.keys.map(col) ++ (col("cnt") +:
+            (m.vals.map(v => col(s"sum_$v")) ++
+              m.mm.flatMap(c => Seq(
+                // least/greatest skip nulls: a key new to the view (or
+                // nulled by a full erasure) restarts at the batch extrema
+                least(col(s"cur_min_$c"), col(s"min_$c")).as(s"min_$c"),
+                greatest(col(s"cur_max_$c"), col(s"max_$c"))
+                  .as(s"max_$c"))))): _*)
+      }
     }
-    val n = delta.count()
-    if (n > 0) appendDelta(delta, dir, m)
-    n
-  }
 
   /** FORGET rows — erase exactly their contribution (takedowns / GDPR
     * erasure of fact rows whose rollup must stop counting them): the
@@ -233,36 +228,31 @@ object AggView {
     * written.
     */
   def forget(rows: DataFrame, dir: String,
-             base: Option[DataFrame] = None): Long = {
-    val spark = rows.sparkSession
-    IndexCommit.vacuum(dir)
-    val m = metaOf(spark, dir, None)
-    require(m.mm.isEmpty || base.nonEmpty,
-      s"this view carries min/max measures (${m.mm.mkString(",")}), " +
-        "which are not invertible under forget — pass base = the " +
-        "surviving fact rows so the touched keys' extrema re-derive")
-    val pos = aggOf(rows, m.keys, m.vals, Nil)
-    val neg = pos.select(m.keys.map(col) ++
-      ((-col("cnt")).as("cnt") +:
-        m.vals.map(v => (-col(s"sum_$v")).cast(SumType).as(s"sum_$v"))): _*)
-    val delta = if (m.mm.isEmpty) neg else {
-      val touched = pos.select(m.keys.map(col): _*).distinct()
-      val mmAggs = m.mm.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c")))
-      val fresh = base.get
-        .join(broadcast(touched), m.keys, "left_semi")
-        .groupBy(m.keys.map(col): _*).agg(mmAggs.head, mmAggs.tail: _*)
-      // a touched key with no survivors joins null extrema — correct:
-      // its cnt folds to zero and the read drops it
-      neg.join(fresh, m.keys, "left")
-        .select(m.keys.map(col) ++ (col("cnt") +:
-          (m.vals.map(v => col(s"sum_$v")) ++
-            m.mm.flatMap(c => Seq(col(s"min_$c"), col(s"max_$c"))))): _*)
+             base: Option[DataFrame] = None): Long =
+    appendDelta(rows.sparkSession, dir) { m =>
+      require(m.mm.isEmpty || base.nonEmpty,
+        s"this view carries min/max measures (${m.mm.mkString(",")}), " +
+          "which are not invertible under forget — pass base = the " +
+          "surviving fact rows so the touched keys' extrema re-derive")
+      val pos = aggOf(rows, m.keys, m.vals, Nil)
+      val neg = pos.select(m.keys.map(col) ++
+        ((-col("cnt")).as("cnt") +:
+          m.vals.map(v => (-col(s"sum_$v")).cast(SumType).as(s"sum_$v"))): _*)
+      if (m.mm.isEmpty) neg else {
+        val touched = pos.select(m.keys.map(col): _*).distinct()
+        val mmAggs = m.mm.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
+          max(col(c)).as(s"max_$c")))
+        val fresh = base.get
+          .join(broadcast(touched), m.keys, "left_semi")
+          .groupBy(m.keys.map(col): _*).agg(mmAggs.head, mmAggs.tail: _*)
+        // a touched key with no survivors joins null extrema — correct:
+        // its cnt folds to zero and the read drops it
+        neg.join(fresh, m.keys, "left")
+          .select(m.keys.map(col) ++ (col("cnt") +:
+            (m.vals.map(v => col(s"sum_$v")) ++
+              m.mm.flatMap(c => Seq(col(s"min_$c"), col(s"max_$c"))))): _*)
+      }
     }
-    val n = delta.count()
-    if (n > 0) appendDelta(delta, dir, m)
-    n
-  }
 
   /** The SERVED VIEW: fold the delta segments to per-key totals (sums
     * exact-additive, extrema last-writer-wins — [[foldAggs]]), plus the
@@ -362,30 +352,20 @@ object AggView {
     * no-op).
     */
   def compact(spark: SparkSession, dir: String,
-              maxSegments: Int = 8): Int = {
-    IndexCommit.vacuum(dir)
-    val t = new IndexTxn(dir)
-    val segs = StoredIndex.segCount(t, "state", "seg=")
-    if (segs <= maxSegments) 0
-    else {
-      val m = metaOf(spark, dir, None)
-      val aggs = foldAggs(m)
-      val allZero = (col("cnt") === 0L) +: m.vals.map(v =>
-        col(s"sum_$v") === lit(0).cast(SumType))
-      val merged = StoredIndex.readTable(spark, s"$dir/state", m.ddl, None)
-        .groupBy(m.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        .filter(!allZero.reduce(_ && _))
-      StoredIndex.writeByPart(merged.withColumn("kb", kbCol(m.keys, m.nb)),
-        "kb", s"$dir/.state-stage")
-      val seg = StoredIndex.nextSeg(dir, "state", "seg=")
-      t.retireUnder("state")
-      StoredIndex.moveTree(t, p(s"$dir/.state-stage"),
-        p(s"$dir/state/seg=$seg"))
-      t.commit()
-      t.cleanup()
-      segs
+              maxSegments: Int = 8): Int =
+    StoredIndex.mutate(dir, "aggview-compact") { t =>
+      // read only when a fold is due: an under-budget call runs no job
+      lazy val m = metaOf(spark, dir, None)
+      StoredIndex.foldLsm(t, "state", m.ddl, "seg=", maxSegments,
+          Some("kb")) { segs =>
+        val aggs = foldAggs(m)
+        val allZero = (col("cnt") === 0L) +: m.vals.map(v =>
+          col(s"sum_$v") === lit(0).cast(SumType))
+        segs.groupBy(m.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+          .filter(!allZero.reduce(_ && _))
+          .withColumn("kb", kbCol(m.keys, m.nb))
+      }
     }
-  }
 
   /** Nightly-ops policy driver ([[StoredIndex.maintain]] dispatch, family
     * signature `state`): fold past the segment budget, else noop;

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-/** Manifest-pinned commits for STORED-INDEX directories (LSH / IVF /
-  * curation state) — the [[LogStore]] `commitManifest`/`readPinned`
+/** Manifest-pinned commits for STORED-INDEX directories (all seven
+  * [[StoredIndex]] families: LSH, IVF, BM25, curation state, budget gate,
+  * stored LM, aggregate view) — the [[LogStore]] `commitManifest`/`readPinned`
   * discipline generalized to a multi-table index root, so a maintenance
   * append publishes ALL its table changes in one atomic rename and a
   * crash at any earlier point leaves the previous index version intact.
@@ -17,18 +18,18 @@ import scala.jdk.CollectionConverters._
   *    crashed append moved in but never committed are invisible, and
   *    files a committed append retired (but a crash left undeleted) are
   *    equally invisible.
-  *  - Writers run an [[IndexTxn]]: stage new files under dot-prefixed
-  *    stage dirs, MOVE them into the live table dirs (fresh UUID part
-  *    names — never a collision with live files), record adds/retires,
-  *    then `commit()` (one temp+rename manifest publish) and `cleanup()`
-  *    (physically delete retired files + leftover stage dirs). Nothing is
-  *    deleted before the commit point, so every crash window degrades to
-  *    "extra invisible files", never loss.
+  *  - Writers run an [[IndexTxn]] through [[StoredIndex.mutate]]: stage
+  *    new files under dot-prefixed stage dirs, MOVE them into the live
+  *    table dirs (fresh UUID part names — never a collision with live
+  *    files), record adds/retires, then one temp+rename manifest publish
+  *    and the physical delete of retired files + leftover stage dirs.
+  *    Nothing is deleted before the commit point, so every crash window
+  *    degrades to "extra invisible files", never loss.
   *  - [[vacuum]] is the single-writer GC for crash leftovers: any data
   *    file absent from the latest manifest is garbage by definition (no
-  *    concurrent writers by the maintenance contract) — append paths run
-  *    it first so a re-run after a crash converges to the same state a
-  *    never-crashed append produces.
+  *    concurrent writers by the maintenance contract) — every mutation
+  *    runs it first so a re-run after a crash converges to the same state
+  *    a never-crashed one produces.
   *
   * A nested index (the curation state's `lsh/` subtree) shares its
   * PARENT's manifest: [[pinnedUnder]] resolves the governing manifest by
@@ -48,10 +49,10 @@ import scala.jdk.CollectionConverters._
   */
 object IndexCommit {
 
-  /** Crash-injection hook for IndexMaintenanceSpec: called at named
-    * points inside append transactions ("staged", "moved:<table>",
-    * "before-commit", "before-cleanup"). Throwing simulates a crash at
-    * that point.
+  /** Crash-injection hook for the maintenance specs: called at named
+    * points inside mutations (a family's "<prefix>-staged",
+    * "moved:<table>", ... and the kernel's "<prefix>-before-commit").
+    * Throwing simulates a crash at that point.
     */
   @volatile private[graft] var failpoint: String => Unit = _ => ()
   private[graft] def hit(point: String): Unit = failpoint(point)
@@ -248,43 +249,112 @@ object IndexCommit {
 /** One index-maintenance transaction: explicit add/retire bookkeeping
   * over the pinned base file set, one atomic manifest publish, physical
   * cleanup strictly after. Single writer per index root by contract.
+  * Opened, committed and cleaned up only by [[StoredIndex.mutate]].
+  *
+  * `dir` is the index the transaction mutates: the manifest `root` itself,
+  * or a nested index under it (the curation state's `lsh/`), which shares
+  * its parent's bookkeeping so both publish in one commit. Table paths
+  * passed to this class are relative to `dir`; file lists it returns are
+  * root-relative.
   */
-final class IndexTxn(val root: String) {
+final class IndexTxn private (root: String, val dir: String,
+                              parent: Option[IndexTxn]) {
+  def this(root: String) = this(root, root, None)
+
   private val rootP = Paths.get(root).toAbsolutePath.normalize()
+  private val prefix = {
+    val r = rootP.relativize(Paths.get(dir).toAbsolutePath.normalize()).toString
+    if (r.isEmpty) "" else r + "/"
+  }
   /** The pre-transaction file set: pinned when a manifest exists, the
     * physical walk for legacy (never-committed) dirs.
     */
-  val base: Seq[String] =
-    IndexCommit.pinnedFiles(root).getOrElse(IndexCommit.walkDataFiles(root))
-  private val retired = scala.collection.mutable.LinkedHashSet.empty[String]
-  private val added = scala.collection.mutable.LinkedHashSet.empty[String]
+  private val base: Seq[String] = parent.map(_.base).getOrElse(
+    IndexCommit.pinnedFiles(root).getOrElse(IndexCommit.walkDataFiles(root)))
+  private val retired: scala.collection.mutable.LinkedHashSet[String] =
+    parent.fold(scala.collection.mutable.LinkedHashSet.empty[String])(_.retired)
+  private val added: scala.collection.mutable.LinkedHashSet[String] =
+    parent.fold(scala.collection.mutable.LinkedHashSet.empty[String])(_.added)
 
-  def rel(p: Path): String =
-    rootP.relativize(p.toAbsolutePath.normalize()).toString
+  /** The same transaction scoped to the nested index at `sub`. */
+  private[sources] def nested(sub: String): IndexTxn =
+    new IndexTxn(root, sub, Some(this))
 
-  def add(relPath: String): Unit = added += relPath
-  def retire(relPath: String): Unit = retired += relPath
-  /** Base files under a root-relative directory prefix. */
-  def baseUnder(relDir: String): Seq[String] =
-    base.filter(_.startsWith(relDir + "/"))
-  /** Base files under a prefix NOT retired so far in this transaction —
+  private def baseUnder(table: String): Seq[String] =
+    base.filter(_.startsWith(prefix + table + "/"))
+  /** Base files under `table` NOT retired so far in this transaction —
     * what a later step inside the same transaction may still read (a
     * retired file's rows were rewritten by an earlier step; re-reading it
     * would resurrect them).
     */
-  def liveUnder(relDir: String): Seq[String] =
-    baseUnder(relDir).filterNot(retired)
-  def retireUnder(relDir: String): Unit = baseUnder(relDir).foreach(retired += _)
+  def liveUnder(table: String): Seq[String] =
+    baseUnder(table).filterNot(retired)
+  def retireUnder(table: String): Unit = baseUnder(table).foreach(retired += _)
+
+  /** [[liveUnder]] grouped by the first dir below `table` (a `key=value`
+    * partition or an LSM segment; "" for files directly in the table dir).
+    */
+  def liveParts(table: String): Map[String, Seq[String]] =
+    liveUnder(table).groupBy { f =>
+      val rest = f.stripPrefix(prefix + table + "/").split('/')
+      if (rest.length > 1) rest.head else ""
+    }
+
+  /** Whether the transaction added or retired any file. */
+  private[sources] def changed: Boolean = added.nonEmpty || retired.nonEmpty
+
+  /** Absolute path of the stage dir `name` under the index: writers stage
+    * there, then [[moveIn]] publishes the files into a live table.
+    */
+  def stage(name: String): String = s"$dir/.$name-stage"
+
+  /** Move every staged `.parquet` under stage `name` into `to` (a table,
+    * partition or segment dir) under its fresh part name, recording each
+    * add — recursing into `key=value` partition dirs.
+    */
+  def moveIn(name: String, to: String): Unit =
+    moveTree(Paths.get(stage(name)), Paths.get(dir, to))
+
+  /** [[moveIn]] to the next segment of the LSM `table` in its own naming
+    * (`seg=N`, `seg-NNNNN`, `gen-NNNNN` by `segPrefix`).
+    */
+  def moveToNextSeg(name: String, table: String, segPrefix: String): Unit =
+    moveIn(name, s"$table/${StoredIndex.segName(segPrefix,
+      StoredIndex.nextSeg(dir, table, segPrefix))}")
+
+  /** Retire everything under `to`, then [[moveIn]] the stage there. */
+  def replace(name: String, to: String): Unit = {
+    retireUnder(to)
+    moveIn(name, to)
+  }
+
+  private def moveTree(from: Path, to: Path): Unit =
+    if (Files.exists(from)) {
+      Files.createDirectories(to)
+      val s = Files.list(from)
+      val entries = try s.iterator().asScala.toSeq finally s.close()
+      entries.foreach { p =>
+        val name = p.getFileName.toString
+        if (Files.isDirectory(p) && name.contains("="))
+          moveTree(p, to.resolve(name))
+        else if (name.endsWith(".parquet")) {
+          val dst = to.resolve(name)
+          Files.move(p, dst)
+          added += rootP.relativize(dst.toAbsolutePath.normalize()).toString
+        }
+      }
+    }
 
   /** Atomic publish: base − retired + added becomes the next version. */
-  def commit(): Int =
+  private[sources] def commit(): Int =
     IndexCommit.commitFiles(root, base.filterNot(retired) ++ added.toSeq)
 
   /** Physical deletion of retired files + leftover stage dirs + emptied
-    * dirs. Call ONLY after [[commit]] — a crash before here leaves the
-    * new version fully readable with harmless invisible extras.
+    * dirs. Runs ONLY after [[commit]] (or on a transaction that changed
+    * nothing) — a crash before here leaves the new version fully readable
+    * with harmless invisible extras.
     */
-  def cleanup(): Unit = {
+  private[sources] def cleanup(): Unit = {
     retired.foreach { relP =>
       val p = Paths.get(root, relP)
       Files.deleteIfExists(p)

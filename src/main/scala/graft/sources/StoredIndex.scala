@@ -3,29 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing for the four STORED-INDEX families (LSH near-dup,
-  * IVF vector, BM25 inverted, curation state) — the glue each family
-  * re-implemented separately through round 12 (VERDICT r12 item #6):
-  * manifest-pinned table reads (latest or AS-OF a historical version),
-  * LSM delta-segment naming and merged views, tombstone serving, stage-dir
-  * move-in, and the over-budget partition sweep compactions share.
-  *
-  * Families keep their own LAYOUT decisions (what is partitioned by what,
-  * which statistics are LSM-shaped, what a delete must correct) — this
-  * object owns only the mechanics those decisions share, so the protocol
-  * proven by the maintenance specs (stage under dot-dirs, move in under
-  * fresh names, one atomic [[IndexCommit]] manifest rename, physical
-  * cleanup strictly after) has exactly one implementation.
-  *
-  * TIME TRAVEL: every read here takes `asOf: Option[Int]`. None serves the
-  * latest committed version (falling back to a direct directory read for
-  * never-committed legacy dirs); Some(v) pins the file list of manifest
-  * version v ([[IndexCommit.pinnedFilesAt]] semantics — resolvable along
-  * pure-append chains, failing fast once a compaction rewrote a pinned
-  * file). A nested index (the curation state's `lsh/` subtree) resolves
-  * versions against its PARENT's manifest, so one version number snapshots
-  * the whole composite state.
-  */
 /** One policy decision of a family's nightly-ops `maintain` entry point:
   * which action the COMMITTED state indicated and how many units
   * (partitions / tables / rebuilds) it touched. The loop — inspect, act,
@@ -37,6 +14,35 @@ import org.apache.spark.sql.functions._
   */
 case class Maintenance(family: String, action: String, units: Long)
 
+/** Shared plumbing for the seven STORED-INDEX families (LSH near-dup,
+  * IVF vector, BM25 inverted, curation state, budget gate, stored n-gram
+  * LM, aggregate view): manifest-pinned table reads (latest or AS-OF a
+  * historical version), LSM merged views, tombstone serving, and the
+  * MUTATION KERNEL every write path runs through.
+  *
+  * THE KERNEL: [[mutate]] is the one commit protocol — vacuum crash
+  * leftovers, open an [[IndexTxn]], let the family stage its frames under
+  * dot-dirs and move them in under fresh part names (the txn's
+  * `stage`/`moveIn`/`moveToNextSeg`/`replace`), fire the
+  * `<prefix>-before-commit` failpoint, publish ONE atomic [[IndexCommit]]
+  * manifest rename when anything changed, then delete what the commit
+  * retired. A crash at any point before the rename leaves the previous
+  * version serving; the next call's vacuum converges. [[rewriteParts]]
+  * (tombstone fold + small-files sweep) and [[foldLsm]] (LSM segment
+  * fold) are the two compaction steps the families share. Families keep
+  * only their LAYOUT decisions (what is partitioned by what, which
+  * statistics are LSM-shaped, what a delete must correct) and the frames
+  * they stage.
+  *
+  * TIME TRAVEL: every read here takes `asOf: Option[Int]`. None serves the
+  * latest committed version (falling back to a direct directory read for
+  * never-committed legacy dirs); Some(v) pins the file list of manifest
+  * version v ([[IndexCommit.pinnedFilesAt]] semantics — resolvable along
+  * pure-append chains, failing fast once a compaction rewrote a pinned
+  * file). A nested index (the curation state's `lsh/` subtree) resolves
+  * versions against its PARENT's manifest, so one version number snapshots
+  * the whole composite state.
+  */
 object StoredIndex {
 
   /** One parquet file per partition value: shuffling on the partition
@@ -337,8 +343,7 @@ object StoredIndex {
   def mergedLsm(spark: SparkSession, path: String, ddl: String,
                 keys: Seq[String], cnt: String,
                 asOf: Option[Int] = None): DataFrame =
-    lsmSegments(spark, path, ddl, asOf)
-      .groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
+    lsmSum(keys, cnt)(lsmSegments(spark, path, ddl, asOf))
 
   /** Whether the served version carries live tombstones — a driver-side
     * metadata check (pinned file list or directory walk), so the
@@ -390,32 +395,6 @@ object StoredIndex {
       df.join(broadcast(keyed), Seq(idCol), "left_anti")
     }
 
-  /** Move every staged `.parquet` under `from` into `to` under its fresh
-    * part name, recording each add in the transaction — recursing into
-    * `key=value` partition dirs. The shared stage-dir move-in every
-    * maintenance path uses; flat stage dirs take the same code path
-    * (nothing to recurse into).
-    */
-  def moveTree(t: IndexTxn, from: java.nio.file.Path,
-               to: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(from)) {
-      java.nio.file.Files.createDirectories(to)
-      val s = java.nio.file.Files.list(from)
-      val entries = try s.iterator().asScala.toSeq finally s.close()
-      entries.foreach { p =>
-        val name = p.getFileName.toString
-        if (java.nio.file.Files.isDirectory(p) && name.contains("="))
-          moveTree(t, p, to.resolve(name))
-        else if (name.endsWith(".parquet")) {
-          val dst = to.resolve(name)
-          java.nio.file.Files.move(p, dst)
-          t.add(t.rel(dst))
-        }
-      }
-    }
-  }
-
   /** Next LSM segment NUMBER for `dir/table` whose segment dirs start
     * with `prefix` ("seg-", "seg=", "gen-"): max(existing)+1, never a
     * count — non-contiguous crash leftovers must not alias (and silently
@@ -436,28 +415,131 @@ object StoredIndex {
     }
   }
 
-  /** ONE nightly-ops entry for a whole TREE of stored indexes — the
-    * umbrella the four per-family policy drivers plug into (one cron
-    * entry, N families): walk the immediate children of `root` (or
-    * `root` itself when it IS an index), detect each index's family
-    * from its TABLE LAYOUT — the layout names are the family signature,
-    * so there is no extra metadata to keep consistent: `hashes` =
-    * curation state, `centroids` = IVF, `termdf` = BM25, `bcounts` =
-    * LSH, `budgets` = budget gate, `bi` = stored n-gram LM (checked in
-    * that order — the curation state NESTS an `lsh/` subtree, which its
-    * own driver maintains; a curate root must never
-    * double-dispatch) — and run that family's `maintain*` driver
-    * ([[graft.operators.Curation.maintainCurateIndex]],
-    * [[graft.operators.Similarity.maintainIvfIndex]],
-    * [[graft.operators.TextIndex.maintainBm25Index]],
-    * [[graft.operators.Dedup.maintainLshIndex]]). Children matching no
-    * family are skipped (a root may hold non-index data). Returns one
-    * audit row per dispatched index, in path order; idempotent
-    * end-to-end — each driver converges to `noop` (MaintainSpec).
+  /** Dir name of LSM segment `n`: `seg=N` for partition-style prefixes,
+    * zero-padded `seg-NNNNN` / `gen-NNNNN` otherwise.
     */
-  /** The family signature of one index directory — its TABLE LAYOUT
-    * (checked in an order where nested subtrees never double-dispatch:
-    * the curation state nests an `lsh/` its own driver maintains).
+  private[sources] def segName(prefix: String, n: Int): String =
+    if (prefix.endsWith("=")) s"$prefix$n" else f"$prefix$n%05d"
+
+  /** THE MUTATION KERNEL — the one entry point of every append, delete,
+    * compaction and rebuild of every family. Standalone (`parent` None)
+    * it vacuums crash leftovers, opens an [[IndexTxn]] on `dir`, runs
+    * `body`, fires the `<failpoint>-before-commit` failpoint (plain
+    * `before-commit` for an empty prefix), commits only when the
+    * transaction added or retired a file, and cleans up. A body that
+    * throws leaves everything to the next call's vacuum — exactly a
+    * crash. Under a `parent` transaction (a nested index mutated inside
+    * its composite root's change) it only runs `body` on the parent's
+    * transaction scoped to `dir`; the parent commits both together.
+    */
+  def mutate[T](dir: String, failpoint: String,
+                parent: Option[IndexTxn] = None)(body: IndexTxn => T): T =
+    parent match {
+      case Some(p) => body(p.nested(dir))
+      case None =>
+        IndexCommit.vacuum(dir)
+        val t = new IndexTxn(dir)
+        val out = body(t)
+        IndexCommit.hit(
+          if (failpoint.isEmpty) "before-commit" else s"$failpoint-before-commit")
+        if (t.changed) t.commit()
+        t.cleanup()
+        out
+    }
+
+  /** TOMBSTONE FOLD + SMALL-FILES SWEEP of one table of the index `t`
+    * mutates. Partitioned by `partCol`: the partitions `keys` (those
+    * holding tombstoned rows) plus every partition holding more than
+    * `maxFiles` live files are rewritten, one file per partition.
+    * Unpartitioned (`partCol` None): the whole table is rewritten to one
+    * file when `dead` is given or it holds more than `maxFiles` files.
+    * Rows whose `idCol` is in `dead` (an `id` column) are dropped; the
+    * rewrite replaces the old files in the same transaction. Returns the
+    * number of rewritten partitions (1 for a rewritten unpartitioned
+    * table).
+    */
+  def rewriteParts(t: IndexTxn, table: String, ddl: String,
+                   partCol: Option[String], keys: Seq[Long], maxFiles: Int,
+                   dead: Option[DataFrame] = None,
+                   idCol: String = "id"): Int = {
+    val parts = t.liveParts(table)
+    val units = partCol match {
+      case Some(pc) =>
+        (keys.map(k => s"$pc=$k").filter(parts.contains) ++
+          parts.collect { case (k, fs) if k.contains("=") &&
+            fs.size > maxFiles => k }).distinct
+      case None =>
+        val n = parts.values.map(_.size).sum
+        if (n > 0 && (dead.nonEmpty || n > maxFiles)) Seq("") else Nil
+    }
+    if (units.nonEmpty) {
+      val rows = readTable(SparkSession.active, s"${t.dir}/$table", ddl)
+      val wanted = partCol.fold(rows)(pc => rows.filter(
+        col(pc).isin(units.map(_.stripPrefix(s"$pc=").toLong): _*)))
+      val keep = dead.fold(wanted)(d => wanted.join(
+        broadcast(d.select(col("id").as(idCol))), Seq(idCol), "left_anti"))
+      partCol match {
+        case Some(pc) => writeByPart(keep, pc, t.stage(table))
+        case None =>
+          keep.coalesce(1).write.mode("overwrite").parquet(t.stage(table))
+      }
+      units.foreach(u => t.retireUnder(if (u.isEmpty) table else s"$table/$u"))
+      t.moveIn(table, table)
+    }
+    units.size
+  }
+
+  /** The tombstones live in `t` (`tombstones` read with `ddl`), None when
+    * there are none — the `dead` input of [[rewriteParts]].
+    */
+  def liveTombstones(t: IndexTxn,
+                     ddl: String = "id BIGINT"): Option[DataFrame] =
+    Option.when(t.liveUnder("tombstones").nonEmpty)(
+      readTable(SparkSession.active, s"${t.dir}/tombstones", ddl))
+
+  /** LSM FOLD of `table` (segments named by `segPrefix`, rows read with
+    * `ddl`, evaluated only when a fold is due): once it holds more than
+    * `budget` live segments, `merge` folds
+    * their union to one row set, which replaces every live segment as ONE
+    * segment — the next one, or `segName(segPrefix, 0)` when `toBase` —
+    * partitioned by `partCol` when given. `merge` carries the family's
+    * algebra: a keyed sum ([[lsmSum]]), custom aggregates, the filters
+    * that drop annihilated rows. Returns the number of folded segments
+    * (0 = under budget, nothing staged).
+    */
+  def foldLsm(t: IndexTxn, table: String, ddl: => String, segPrefix: String,
+              budget: Int, partCol: Option[String] = None,
+              toBase: Boolean = false)(merge: DataFrame => DataFrame): Int = {
+    val segs = segCount(t, table, segPrefix)
+    if (segs <= budget) 0
+    else {
+      val spark = SparkSession.active
+      val path = s"${t.dir}/$table"
+      val merged = merge(
+        if (segPrefix.endsWith("=")) readTable(spark, path, ddl)
+        else lsmSegments(spark, path, ddl, None))
+      val stage = s"$table-fold"
+      partCol match {
+        case Some(pc) => writeByPart(merged, pc, t.stage(stage))
+        case None => merged.write.mode("overwrite").parquet(t.stage(stage))
+      }
+      t.retireUnder(table)
+      if (toBase) t.moveIn(stage, s"$table/${segName(segPrefix, 0)}")
+      else t.moveToNextSeg(stage, table, segPrefix)
+      segs
+    }
+  }
+
+  /** The keyed-sum LSM merge: per `keys`, the sum of `cnt`. */
+  def lsmSum(keys: Seq[String], cnt: String)(segs: DataFrame): DataFrame =
+    segs.groupBy(keys.map(col): _*).agg(sum(col(cnt)).as(cnt))
+
+  /** The family signature of one index directory — its TABLE LAYOUT:
+    * `hashes` = curation state, `centroids` = IVF, `termdf` = BM25,
+    * `bcounts` = LSH, `budgets` = budget gate, `bi` = stored n-gram LM,
+    * `state` = aggregate view, checked in that order so nested subtrees
+    * never double-dispatch (the curation state nests an `lsh/` its own
+    * driver maintains).
     * Shared by [[maintain]] and [[catalog]].
     */
   private def familyOf(dir: java.nio.file.Path): Option[String] = {
@@ -540,6 +622,24 @@ object StoredIndex {
       "tables", "segments", "tombstone_files")
   }
 
+  /** ONE nightly-ops entry for a whole TREE of stored indexes — the
+    * umbrella the seven per-family policy drivers plug into (one cron
+    * entry, N families): walk the immediate children of `root` (or
+    * `root` itself when it IS an index), detect each index's family from
+    * its TABLE LAYOUT ([[familyOf]] — the layout names are the family
+    * signature, so there is no extra metadata to keep consistent) and run
+    * that family's driver:
+    * [[graft.operators.Curation.maintainCurateIndex]],
+    * [[graft.operators.Similarity.maintainIvfIndex]],
+    * [[graft.operators.TextIndex.maintainBm25Index]],
+    * [[graft.operators.Dedup.maintainLshIndex]],
+    * [[graft.operators.Curation.maintainBudgetGate]],
+    * [[graft.operators.LangModel.maintainLmIndex]] and
+    * [[AggView.maintain]]. Children matching no family are skipped (a
+    * root may hold non-index data). Returns one audit row per dispatched
+    * index, in path order; idempotent end-to-end — each driver converges
+    * to `noop` and a no-op publishes no version (MaintainSpec).
+    */
   def maintain(spark: SparkSession,
                root: String): Seq[(String, Maintenance)] = {
     indexesUnder(root).map { case (dir, fam) =>
@@ -611,22 +711,9 @@ object StoredIndex {
     files.size
   }
 
-  /** Partition dir names (`key=value`) of the transaction-live `relTable`
-    * holding more than `maxFiles` data files — the small-files sweep's
-    * work list.
-    */
-  def overfullPartitions(t: IndexTxn, relTable: String,
-                         maxFiles: Int): Seq[String] =
-    t.liveUnder(relTable)
-      .flatMap(_.stripPrefix(relTable + "/").split('/').headOption)
-      .filter(_.contains("="))
-      .groupBy(identity).filter(_._2.size > maxFiles).keys.toSeq
-
   /** Distinct first-level segment dirs (by `prefix`) of the
-    * transaction-live `relTable` — the LSM fold budget check.
+    * transaction-live `table` — the LSM fold budget check.
     */
-  def segCount(t: IndexTxn, relTable: String, prefix: String): Int =
-    t.liveUnder(relTable)
-      .flatMap(_.stripPrefix(relTable + "/").split('/').headOption)
-      .filter(_.startsWith(prefix)).distinct.size
+  def segCount(t: IndexTxn, table: String, prefix: String): Int =
+    t.liveParts(table).keys.count(_.startsWith(prefix))
 }

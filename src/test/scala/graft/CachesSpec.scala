@@ -45,4 +45,47 @@ class CachesSpec extends SparkSpec {
     assert(Caches.memo[Int](vfam, "k")(sys.error("must not recompute")) == 41)
     assert(Caches.counters(vfam) == ((1L, 1L)))
   }
+
+  test("a build that throws runs once: a caller waiting on the same key " +
+      "sees the same failure, and no persisted frame survives") {
+    import scala.jdk.CollectionConverters._
+    val fam = s"spec-fail-${System.nanoTime()}"
+    // a distinct plan: nothing else in the session caches it
+    def frame = Seq(7919, 7920).toDF("x")
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var second: Thread = null
+    def waitingOnHolder(t: Thread): Boolean =
+      t != null && t.getState == Thread.State.BLOCKED &&
+        t.getStackTrace.exists(_.getClassName.contains("Caches$Holder"))
+    def build(): org.apache.spark.sql.DataFrame = {
+      if (builds.incrementAndGet() == 1) {
+        started.countDown()
+        // fail only once the second caller is blocked on this very build
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        while (!waitingOnHolder(second) && System.nanoTime() < deadline)
+          Thread.sleep(5)
+        throw new IllegalStateException("boom")
+      }
+      frame
+    }
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Any]()
+    def call(): Unit = results.add(
+      try Caches.cached(fam, "k")(build()) catch { case e: Throwable => e })
+    val first = new Thread(() => call())
+    first.start()
+    started.await()
+    second = new Thread(() => call())
+    second.start()
+    first.join()
+    second.join()
+    assert(builds.get == 1,
+      "the failed build must not re-run for the caller waiting on it")
+    assert(results.asScala.toSeq.map {
+        case e: IllegalStateException => e.getMessage
+        case other => s"value $other" } == Seq("boom", "boom"),
+      "both callers must see the build's failure")
+    assert(frame.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "no persisted frame may remain")
+  }
 }

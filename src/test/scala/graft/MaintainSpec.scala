@@ -114,9 +114,14 @@ class MaintainSpec extends SparkSpec {
     assert(aggAction == "compact",
       "the over-segmented state LSM's indicated action is the fold")
 
+    def latest() = first.map { case (dir, _) =>
+      dir -> graft.sources.IndexCommit.latestVersion(dir) }.toMap
+    val versionsBefore = latest()
     val second = StoredIndex.maintain(spark, root)
     assert(second.size == 7 && second.forall(_._2.action == "noop"),
       s"the re-run must report noop for every family (got $second)")
+    assert(latest() == versionsBefore,
+      "a no-op maintenance must publish no new version")
 
     // post-sweep catalog: the folds and tombstone retirement are visible
     // in the metadata alone
