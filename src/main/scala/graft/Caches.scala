@@ -31,7 +31,7 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
   // DISK_ONLY: read cost measured equivalent to MEMORY_AND_DISK(_SER) here
   // (the columnar-batch build dominates persist cost, reread ~0.1s at sf0.1
-  // for all levels — tools.CacheLevelProbe), but on-heap cached blocks are
+  // for all levels — the round-10 A/B in BENCHDIFF_r10.md), but on-heap cached blocks are
   // NOT free: with ~20 live family caches and this box's single-threaded
   // SerialGC, heap occupancy turned full collections into 2-3s pauses that
   // landed on whichever query ran next (the r9/r10 "perf-weak"

@@ -2,11 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Shared oracle_sql.json writer for [[Verify]] and the local
-  * [[tools.VerifySome]] — one escape implementation, so an escaping fix
-  * lands in both tools at once (the round-1 bug this guards against: one
-  * unescaped control char in builder-authored SQL makes the driver's
-  * json.load fail and silently zeroes the round's correctness).
+/** The oracle_sql.json writer of [[Verify]] — one escape implementation
+  * (the bug this guards against: one unescaped control char in the
+  * oracle SQL makes a JSON reader fail and silently drops the whole
+  * correctness check). `tools/check_oracle.py` checks a subset of a
+  * Verify dump by query name.
   */
 object OracleJson {
 

@@ -241,6 +241,15 @@ object gcolumns {
   def dotp(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
+  /** The `nprobe` best IVF cells of a double-array column against a
+    * held centroid table (codegen'd; [[IvfCells]]). */
+  def ivf_cells(v: Column, cents: IvfCentroids, nprobe: Int): Column =
+    Bridge.column(IvfCells(Bridge.expression(v), cents, nprobe))
+
+  /** Centroid vector of a 0-based IVF cell-id column ([[IvfCentroid]]). */
+  def ivf_centroid(cell: Column, cents: IvfCentroids): Column =
+    Bridge.column(IvfCentroid(Bridge.expression(cell), cents))
+
   /** Intersection size of two sorted string-array columns (codegen'd
     * linear merge — the route tier's verification kernel). */
   def sorted_intersect_count(a: Column, b: Column): Column =

@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernels for the vector-math / shingling expressions; static so
@@ -58,6 +60,85 @@ object VectorTextImpl {
     var i = 0
     while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
     acc
+  }
+
+  /** [[dotDD]] against a driver-held double array: same accumulation
+    * order, so the same bits as a `dotDD` against that array as a literal.
+    */
+  private def dotDA(a: ArrayData, b: Array[Double]): Double = {
+    val n = math.min(a.numElements(), b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getDouble(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** The `nprobe` best IVF cells of `v`: cells ranked by dot(v, c) / |c|,
+    * highest first, as 0-based ids — the former `transform` /
+    * `array_sort` / `array_position` expression, decision for decision:
+    *  - output length min(nprobe, cells); a null `v` gives that many
+    *    nulls;
+    *  - a zero-norm centroid divides by zero as Spark's `/` does: an
+    *    error when `failOnDivZero` (ANSI), else a null score;
+    *  - null scores rank first (`array_sort` puts them last, the old
+    *    expression reversed it) and come out as null cells; then SQL
+    *    double order, descending (NaN above every number, -0.0 = 0.0);
+    *  - each ranked score maps to the FIRST cell with an equal score
+    *    (`array_position`), so tied cells collapse to one id, repeated.
+    * O(nprobe x cells) selection after the O(cells x dim) dots; with
+    * nprobe = 1 it is the plain first-index-wins argmax.
+    */
+  def ivfCells(v: ArrayData, c: IvfCentroids, nprobe: Int,
+               failOnDivZero: Boolean): ArrayData = {
+    val n = c.cents.length
+    val m = math.min(nprobe, n)
+    if (v == null) return new GenericArrayData(new Array[Any](m))
+    val s = new Array[Double](n)
+    val nul = new Array[Boolean](n)
+    var anyNull = false
+    var i = 0
+    while (i < n) {
+      if (c.norms(i) == 0.0) {
+        if (failOnDivZero) throw Bridge.divideByZeroError()
+        nul(i) = true; anyNull = true
+      } else s(i) = dotDA(v, c.cents(i)) / c.norms(i)
+      i += 1
+    }
+    val used = new Array[Boolean](n)
+    val out = new Array[Long](m)
+    val outNull = if (anyNull) new Array[Boolean](m) else null
+    var j = 0
+    while (j < m) {
+      // lowest index among the best unused: `before` is strict
+      var b = -1
+      i = 0
+      while (i < n) {
+        if (!used(i) && (b < 0 ||
+            (if (nul(i) || nul(b)) nul(i) && !nul(b)
+             else SQLOrderingUtil.compareDoubles(s(i), s(b)) > 0))) b = i
+        i += 1
+      }
+      used(b) = true
+      if (nul(b)) outNull(j) = true
+      else {
+        var f = 0
+        while (nul(f) || SQLOrderingUtil.compareDoubles(s(f), s(b)) != 0)
+          f += 1
+        out(j) = f
+      }
+      j += 1
+    }
+    if (!anyNull) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](m)(k =>
+      if (outNull(k)) null else out(k)))
+  }
+
+  /** Centroid vector of IVF cell `cell` (0-based). */
+  def ivfCentroid(cell: Long, c: IvfCentroids): ArrayData = {
+    val n = c.cents.length
+    if (cell < 0 || cell >= n)
+      throw Bridge.invalidElementAtIndexError((cell + 1).toInt, n)
+    c.vectors(cell.toInt)
   }
 
   /** Phrase-chain join of two ascending-sorted int position arrays: the
@@ -214,6 +295,104 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** A trained IVF centroid table, held BESIDE the expression tree by the
+  * [[IvfCells]] / [[IvfCentroid]] kernels instead of as a child literal:
+  * a plan, explain or AQE update renders it as `cells x dim @ hash`
+  * (e.g. `63x32@1f3a9c0e`), never as its doubles. Equality and hash are
+  * by content (the bits of every component), so semantically equal
+  * plans over the same centroids still match. Norms are computed once
+  * on the driver by sequential accumulation, the [[DotProduct]] order.
+  */
+final class IvfCentroids(rows: Seq[Seq[Double]]) extends Serializable {
+  require(rows.nonEmpty, "an IVF index has at least one cell")
+  val cents: Array[Array[Double]] = rows.map(_.toArray).toArray
+  val norms: Array[Double] =
+    cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
+  def size: Int = cents.length
+  def toSeq: Seq[Seq[Double]] = cents.map(_.toSeq).toSeq
+
+  /** Per-cell vectors as Catalyst arrays, built once per JVM. */
+  @transient lazy val vectors: Array[ArrayData] =
+    cents.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
+
+  override def equals(o: Any): Boolean = o match {
+    case that: IvfCentroids =>
+      hashCode == that.hashCode &&
+        java.util.Arrays.deepEquals(cents.asInstanceOf[Array[AnyRef]],
+          that.cents.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override lazy val hashCode: Int =
+    java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
+  override def toString: String =
+    f"${cents.length}x${cents.head.length}@$hashCode%08x"
+}
+
+/** The `nprobe` best IVF cells of a vector:
+  * `array<double> -> array<bigint>` ([[VectorTextImpl.ivfCells]]), the
+  * one cell-assignment kernel of the IVF family — probe-side `nprobe`
+  * cells and build-side argmax (`nprobe` = 1) alike. Codegen'd; the
+  * centroid table is a non-child argument ([[IvfCentroids]]), so the
+  * expression prints as `ivf_cells(qv, 63x32@1f3a9c0e, 5)`.
+  * `failOnError` is the session's ANSI flag at construction, as for
+  * Spark's own `Divide`.
+  */
+case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
+                    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+  require(nprobe >= 0, s"nprobe must be >= 0 (got $nprobe)")
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_cells"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, cents, nprobe)
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    VectorTextImpl.ivfCells(child.eval(input).asInstanceOf[ArrayData],
+      cents, nprobe, failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val ref = ctx.addReferenceObj("ivfCentroids", cents,
+      classOf[IvfCentroids].getName)
+    ev.copy(code = code"""
+      ${v.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.VectorTextImpl.ivfCells(
+          ${v.isNull} ? null : ${v.value}, $ref, $nprobe, $failOnError);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IvfCells =
+    copy(child = newChild)
+}
+
+/** Centroid of an IVF cell: `bigint -> array<double>`
+  * ([[VectorTextImpl.ivfCentroid]]; an id outside the table fails as
+  * ANSI `element_at` does). Codegen'd, with the same non-child centroid
+  * table as [[IvfCells]].
+  */
+case class IvfCentroid(child: Expression, cents: IvfCentroids)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(LongType)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "ivf_centroid"
+
+  override def nullSafeEval(cell: Any): Any =
+    VectorTextImpl.ivfCentroid(cell.asInstanceOf[Long], cents)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("ivfCentroids", cents,
+      classOf[IvfCentroids].getName)
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.VectorTextImpl.ivfCentroid($c, $ref)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IvfCentroid =
+    copy(child = newChild)
 }
 
 /** Phrase-chain join over sorted int position arrays:

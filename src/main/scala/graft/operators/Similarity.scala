@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.gcolumns.dotp
+import graft.functions.IvfCentroids
+import graft.functions.gcolumns.{dotp, ivf_cells, ivf_centroid}
 import graft.sources.{IndexCommit, StoredIndex}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -21,9 +22,10 @@ import graft.sources.{IndexCommit, StoredIndex}
   *    their own bucket plus every bucket within `maxFlips` sign flips
   *    (multiprobe raises recall without growing the index).
   *  - [[ivfTopK]]: inverted-file ANN with k-means-learned centroids. Cell
-  *    assignment is a pure column expression against a broadcast-literal
-  *    centroid table (argmax over O(cells) dot products — no join, no
-  *    window), so the corpus index is one narrow pass.
+  *    assignment is one codegen'd kernel ([[graft.functions.IvfCells]],
+  *    O(cells) dot products — no join, no window) holding the centroid
+  *    table beside the plan, so the corpus index is one narrow pass and
+  *    no plan ever prints the centroids.
   *
   * All dot products go through the codegen'd
   * [[graft.functions.DotProduct]] expression: sequential left-to-right
@@ -127,29 +129,10 @@ object Similarity {
   // IVF with k-means centroids
   // -------------------------------------------------------------------------
 
-  /** Top-`nprobe` cell ids for a vector against a literal centroid table:
-    * argmax of dot(v, c)/|c| via transform + sort_array — a pure column
-    * expression (the centroid table is a plan literal ≙ broadcast), no join
-    * and no window in the assignment at all.
-    */
-  private def bestCells(v: Column, cents: Seq[Seq[Double]],
-                        nprobe: Int): Column = {
-    val cLit = typedlit(cents)
-    // driver-side sequential norm — deterministic, matches dotp order
-    val cn = typedlit(cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))))
-    val scores = transform(sequence(lit(0), lit(cents.size - 1)), i =>
-      dotp(v, element_at(cLit, i + 1)) / element_at(cn, i + 1))
-    // top-nprobe cell ids: sort scores desc, map back to 0-based index.
-    // array_position takes the FIRST match, so exact score ties collapse to
-    // one cell (callers dedupe (probe, cell) — benign, ties are measure-zero)
-    transform(slice(reverse(array_sort(scores)), 1, nprobe),
-      s => array_position(scores, s) - 1)
-  }
-
   /** One live learned-centroid set (keyed like [[graft.Caches]]): k-means
     * training is probe-independent, so repeated queries reuse it.
     */
-  private var centroidCache: Option[(String, Seq[Seq[Double]])] = None
+  private var centroidCache: Option[(String, IvfCentroids)] = None
 
   /** Lloyd iterations on a bounded, deterministic training sample collected
     * to the driver (first `maxSample` vectors by id — one Spark job; at
@@ -158,10 +141,10 @@ object Similarity {
     * arithmetic is sequential driver-side double math — bit-reproducible
     * run to run, no partition-order dependence. Empty cells keep their
     * previous centroid. Same argmax (dot/|c|, lowest index on ties) as the
-    * distributed [[bestCells]] assignment.
+    * distributed [[graft.functions.IvfCells]] assignment.
     */
   private def kmeansCentroids(e: DataFrame, nCells: Int, iters: Int,
-                              maxSample: Int = 4096): Seq[Seq[Double]] =
+                              maxSample: Int = 4096): IvfCentroids =
     synchronized {
       val key = s"${e.queryExecution.analyzed.semanticHash()}|c=$nCells|i=$iters"
       centroidCache match {
@@ -197,46 +180,31 @@ object Similarity {
             cents = (0 until nCells).map(c =>
               if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
           }
-          val result: Seq[Seq[Double]] = cents.map(_.toIndexedSeq)
+          val result = new IvfCentroids(cents.map(_.toIndexedSeq))
           centroidCache = Some((key, result))
           result
       }
     }
 
-  /** Corpus-side IVF cell assignment: argmax as codegen'd per-cell dot
-    * columns + a when-chain (the transform/array_sort HOF form evaluates
-    * every dot interpreted — fine for the handful of probes, wasteful over
-    * the whole corpus). First index wins score ties, matching
-    * [[bestCells]]' array_position. (cell, nid, nv, nn, qerr) rows, with
-    * qerr = 1 - cos(v, assigned centroid) — the per-vector quantization
-    * error the drift statistics aggregate ([[ivfDriftStats]]).
+  /** Corpus-side IVF cell assignment: each vector's argmax cell through
+    * the same [[graft.functions.IvfCells]] kernel as the probe side
+    * (nprobe = 1: first index wins score ties). (cell, nid, nv, nn, qerr)
+    * rows, with qerr = 1 - cos(v, assigned centroid) from the chosen
+    * cell's own dot — the per-vector quantization error the drift
+    * statistics aggregate ([[ivfDriftStats]]). The centroid norm is
+    * re-derived per row by the same sequential sum the driver uses, so
+    * qerr keeps the bits of the kernel's score.
     */
   private def corpusCellsScored(e: DataFrame,
-                                cents: Seq[Seq[Double]]): DataFrame = {
-    val scoreCols = cents.indices.map { c =>
-      val cn = math.sqrt(cents(c).foldLeft(0.0)((a, x) => a + x * x))
-      (dotp(col("v"), typedlit(cents(c))) / lit(cn)).as(s"s$c")
-    }
-    val scored = e.select(
-      (Seq(col("vec_id").as("nid"), col("v").as("nv"), col("vn").as("nn"))
-        ++ scoreCols): _*)
-    // long-typed to match the probe side's array_position-derived cells;
-    // greatest() needs >= 2 args, so the degenerate one-cell index is a
-    // constant assignment
-    val mx =
-      if (cents.size == 1) col("s0")
-      else greatest(cents.indices.map(c => col(s"s$c")): _*)
-    val cell =
-      if (cents.size == 1) lit(0L)
-      else cents.indices.tail.foldLeft(
-          when(col("s0") === mx, lit(0L))) { (w, c) =>
-        w.when(col(s"s$c") === mx, lit(c.toLong))
-      }
-    scored.select(cell.as("cell"), col("nid"), col("nv"), col("nn"),
-      (lit(1.0) - mx / col("nn")).as("qerr"))
+                                cents: IvfCentroids): DataFrame = {
+    val cv = ivf_centroid(col("cell"), cents)
+    e.select(ivf_cells(col("v"), cents, 1).getItem(0).as("cell"),
+        col("vec_id").as("nid"), col("v").as("nv"), col("vn").as("nn"))
+      .withColumn("qerr",
+        lit(1.0) - dotp(col("nv"), cv) / sqrt(dotp(cv, cv)) / col("nn"))
   }
 
-  private def corpusCells(e: DataFrame, cents: Seq[Seq[Double]]): DataFrame =
+  private def corpusCells(e: DataFrame, cents: IvfCentroids): DataFrame =
     corpusCellsScored(e, cents).drop("qerr")
 
   /** IVF ANN top-k: corpus vectors index into their argmax cell (one narrow
@@ -254,7 +222,7 @@ object Similarity {
     val corpus = graft.Caches.cached("ivf-index", key)(corpusCells(e, cents))
     val probes = e.filter(probeFilter)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("vn").as("qn"),
-        explode(bestCells(col("v"), cents, nprobe)).as("cell"))
+        explode(ivf_cells(col("v"), cents, nprobe)).as("cell"))
       .dropDuplicates("qid", "cell")
     rankTopK(probes.join(corpus, "cell")
       .filter(col("qid") =!= col("nid"))
@@ -323,7 +291,7 @@ object Similarity {
     val embKey = emb.queryExecution.analyzed.semanticHash().toString
     val e = graft.Caches.cached("emb-vectors", embKey)(asDouble(emb))
     val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
-    cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+    cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
       .toDF("cell", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
     // two narrow passes over the CACHED vector frame: the lean postings
@@ -368,7 +336,7 @@ object Similarity {
     * geometry. The serving cost is one extra dot(q, centroid) per
     * (probe, cell) — probe-side, never per candidate ([[pqRoute]]).
     */
-  private def pqCodebooks(e: DataFrame, cents: Seq[Seq[Double]],
+  private def pqCodebooks(e: DataFrame, cents: IvfCentroids,
                           m: Int, ksub: Int, iters: Int,
                           maxSample: Int = 4096): Seq[Seq[Seq[Double]]] = {
     val sample = e.orderBy("vec_id").limit(maxSample)
@@ -376,20 +344,20 @@ object Similarity {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim is not divisible into $m subspaces")
     val sd = dim / m
-    val cnorms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
+    val (cv, cnorms) = (cents.cents, cents.norms)
     val residuals = sample.map { v =>
       var best = 0; var bestScore = Double.NegativeInfinity
       var c = 0
-      while (c < cents.size) {
+      while (c < cv.length) {
         var d = 0.0; var i = 0
-        while (i < dim) { d += v(i) * cents(c)(i); i += 1 }
+        while (i < dim) { d += v(i) * cv(c)(i); i += 1 }
         val s = d / cnorms(c)
         if (s > bestScore) { bestScore = s; best = c }
         c += 1
       }
       val r = new Array[Double](dim)
       var i = 0
-      while (i < dim) { r(i) = v(i) - cents(best)(i); i += 1 }
+      while (i < dim) { r(i) = v(i) - cv(best)(i); i += 1 }
       r
     }
     (0 until m).map { s =>
@@ -423,21 +391,20 @@ object Similarity {
 
   /** Add the `codes ARRAY<INT>` residual-PQ encoding of double-array
     * column `vCol` under coarse assignment column `cellCol`: the row's
-    * residual (v − centroid(cell), one zip_with against the cell-indexed
-    * centroid literal) splits into subspaces, and per subspace the
-    * argmin-L2 codeword is computed as codegen'd per-code score columns
-    * (dot(r, c) − |c|²/2, i.e. argmin L2 with the common |r|² term
-    * dropped) + a first-match when-chain, the [[corpusCellsScored]]
-    * argmax discipline. The expression is a pure function of (vector,
-    * cell, centroids, codebooks), so append-encoded rows are
-    * BIT-identical to a rebuild's encoding under the same quantizers.
+    * residual (v − centroid(cell), one zip_with against the cell's
+    * [[graft.functions.IvfCentroid]] vector) splits into subspaces, and
+    * per subspace the argmin-L2 codeword is computed as codegen'd
+    * per-code score columns (dot(r, c) − |c|²/2, i.e. argmin L2 with the
+    * common |r|² term dropped) + a first-match when-chain. The
+    * expression is a pure function of (vector, cell, centroids,
+    * codebooks), so append-encoded rows are BIT-identical to a rebuild's
+    * encoding under the same quantizers.
     */
   private def withCodes(df: DataFrame, vCol: String, cellCol: String,
-                        cents: Seq[Seq[Double]],
+                        cents: IvfCentroids,
                         cbs: Seq[Seq[Seq[Double]]]): DataFrame = {
     val sd = cbs.head.head.size
-    val res = zip_with(col(vCol),
-      element_at(typedlit(cents), col(cellCol).cast("int") + 1),
+    val res = zip_with(col(vCol), ivf_centroid(col(cellCol), cents),
       (x, c) => x - c)
     val withRes = df.withColumn("__res", res)
     val codeCols = cbs.indices.map { s =>
@@ -473,9 +440,10 @@ object Similarity {
 
   /** IVF-PQ serving (IVFADC with exact re-rank) — per arriving probe:
     *
-    *  1. COARSE probe: `nprobe` best cells via [[bestCells]] (identical
-    *     to [[annRoute]]); the batch's probed-cell set pushes as a
-    *     partition filter.
+    *  1. COARSE probe: `nprobe` best cells through the
+    *     [[graft.functions.IvfCells]] kernel (identical to [[annRoute]]);
+    *     the batch's probed-cell set ([[StoredIndex.distinctKeys]]: one
+    *     job, no exchange) pushes as a partition filter.
     *  2. ADC scan: the probe computes its m x ksub lookup table (one
     *     dot per (subspace, codeword) — O(dim x ksub) work per PROBE,
     *     once) and every candidate's approximate score is m table
@@ -569,22 +537,19 @@ object Similarity {
       array(cbs(s).map(c =>
         dotp(slice(col("qv"), s * sd + 1, sd), typedlit(c))): _*)
     }: _*)
+    val cells = explode(ivf_cells(col("qv"), cents, nprobeEff)).as("cell")
     val probes = probesV
-      .select(col("qid"), col("qv"), col("qn"), lut.as("lut"),
-        explode(bestCells(col("qv"), cents, nprobeEff)).as("cell"))
+      .select(col("qid"), col("qv"), col("qn"), lut.as("lut"), cells)
       .dropDuplicates("qid", "cell")
       .withColumn("centdot",
-        dotp(col("qv"),
-          element_at(typedlit(cents), col("cell").cast("int") + 1)))
+        dotp(col("qv"), ivf_centroid(col("cell"), cents)))
     // bounded collect (<= nCells values): the probed-cell partition
     // filter. Collected off a LUT-FREE plan: the probes frame above is
     // evaluated again by the ADC join, so collecting `wanted` through it
     // would build every probe's m x ksub lookup table twice per batch —
     // the keep-up residual ROUTEBENCH r14 attributed to the probe side
-    val wanted = probesV
-      .select(explode(bestCells(col("qv"), cents, nprobeEff)).as("cell"))
-      .distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val wanted = StoredIndex.distinctKeys(probesV.select(cells))
+      .map(_.getLong(0)).toSeq
     // ADC scan: codes + norm only — the narrow read is the whole point
     val codesTbl = graft.sources.StoredIndex.antiTombstoned(spark, indexDir,
       "ivf-tombstones",
@@ -644,14 +609,14 @@ object Similarity {
 
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             dir: String,
-                            asOf: Option[Int] = None): Seq[Seq[Double]] =
+                            asOf: Option[Int] = None): IvfCentroids =
     // commit-keyed driver memo: centroids change only through commits
     // (retrain/rebuild), and collecting them was one plan-time job per
     // annRoute/pqRoute serve (StoredIndex.memoByCommit doc)
     graft.sources.StoredIndex.memoByCommit("ivf-centroids", dir, asOf) {
-      graft.sources.StoredIndex.readTable(spark, s"$dir/centroids",
-          "cell BIGINT, cv ARRAY<DOUBLE>", asOf)
-        .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq
+      new IvfCentroids(graft.sources.StoredIndex.readTable(spark,
+          s"$dir/centroids", "cell BIGINT, cv ARRAY<DOUBLE>", asOf)
+        .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq)
     }
 
   private def readPostings(spark: org.apache.spark.sql.SparkSession,
@@ -864,7 +829,7 @@ object Similarity {
       val e = graft.Caches.cached("emb-vectors",
         eRaw.queryExecution.analyzed.semanticHash().toString)(eRaw)
       val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
-      cents.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+      cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
         .toDF("cell", "cv")
         .write.mode("overwrite").parquet(t.stage("centroids"))
       val scored = corpusCellsScored(e, cents)
@@ -930,12 +895,14 @@ object Similarity {
   /** Streaming ANN — the [[graft.operators.Dedup.minhashRoute]] analog for
     * vectors: each ARRIVING embedding retrieves its top-k approximate
     * neighbors from a stored [[ivfWriteIndex]] index. The centroid table
-    * is read once and folded into the plan as literals (exactly the batch
-    * [[bestCells]] expression — cell choice is bit-identical), so the
-    * per-arrival work is in-row dots + ONE stream-static equi-join against
-    * the cell-partitioned postings + the bounded-heap top-k. The batch's
-    * probed cells (at most nCells distinct values — one bounded driver
-    * collect per micro-batch) push onto the postings scan as PARTITION
+    * is read once per commit and held by the [[graft.functions.IvfCells]]
+    * kernel beside the plan (the batch [[ivfTopK]] kernel — cell choice
+    * is bit-identical; no plan, explain or AQE update renders the
+    * matrix), so the per-arrival work is in-row dots + ONE stream-static
+    * equi-join against the cell-partitioned postings + the bounded-heap
+    * top-k. The batch's probed cells (at most nCells distinct values —
+    * one driver collect per micro-batch, [[StoredIndex.distinctKeys]]:
+    * one job, no exchange) push onto the postings scan as PARTITION
     * FILTERS, so the scan reads only the probed cells' files — the
     * pruning that turns a 100 TB postings table into an O(probed cells)
     * read (SimilaritySpec asserts the filters are in the plan). No state
@@ -1000,17 +967,18 @@ object Similarity {
     val corpus = allowed.fold(corpus0)(a => corpus0.join(
       a.select(col(allowedIdCol).cast("long").as("nid")), Seq("nid"),
       "semi"))
-    val probes = arrivals
+    val probesV = arrivals
       .select(col(idCol).cast("long").as("qid"),
         transform(col(embCol), _.cast("double")).as("qv"))
       .withColumn("qn", sqrt(dotp(col("qv"), col("qv"))))
-      .select(col("qid"), col("qv"), col("qn"),
-        explode(bestCells(col("qv"), cents, nprobeEff)).as("cell"))
+    val cells = explode(ivf_cells(col("qv"), cents, nprobeEff)).as("cell")
+    // duplicate arrival ids (and tied cells) score each (qid, cell) once
+    val probes = probesV.select(col("qid"), col("qv"), col("qn"), cells)
       .dropDuplicates("qid", "cell")
     // the probed-cell set: bounded by nCells regardless of batch size,
     // collected once per batch and pushed as a partition filter
-    val wanted = probes.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val wanted = StoredIndex.distinctKeys(probesV.select(cells))
+      .map(_.getLong(0)).toSeq
     rankTopK(probes
       .join(corpus.filter(col("cell").isin(wanted: _*)), "cell")
       .filter(col("qid") =!= col("nid"))

@@ -942,12 +942,11 @@ object TextIndex {
     val nb = m0.nb
     // query text tokenizes through the INDEX's recorded tokenizer, so a
     // normalized index matches normalized query terms by construction
-    val probes = queries.select(col(idCol).cast("long").as("qid"),
+    val terms = queries.select(col(idCol).cast("long").as("qid"),
         explode(m0.tokenize(col(textCol))).as("term"))
-      .dropDuplicates("qid", "term")
-    val probed = probes
-      .select(col("term"), tbCol(nb).as("tb")).distinct()
-      .collect()
+    val probes = terms.dropDuplicates("qid", "term")
+    val probed = graft.sources.StoredIndex.distinctKeys(
+      terms.select(col("term"), tbCol(nb).as("tb")))
     val wanted = probed.map(_.getLong(1)).distinct.toSeq
     val batchTerms =
       if (termPushdownCap > 0 && probed.length <= termPushdownCap)
@@ -1401,12 +1400,13 @@ object TextIndex {
     require(m0.impF > 0 || budget > 0,
       s"budget must be positive on a fixed-block index (got $budget)")
     val effB = if (m0.impF > 0) 0 else budget
-    val probes = queries.select(col(idCol).cast("long").as("qid"),
+    val terms = queries.select(col(idCol).cast("long").as("qid"),
         explode(m0.tokenize(col(textCol))).as("term"))
-      .dropDuplicates("qid", "term")
+    val probes = terms.dropDuplicates("qid", "term")
     // bounded collect: the batch's probed buckets (<= nbuckets values)
-    val wanted = probes.select(tbCol(m0.nb).as("tb")).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val wanted = graft.sources.StoredIndex.distinctKeys(
+        terms.select(tbCol(m0.nb).as("tb")))
+      .map(_.getLong(0)).toSeq
     val (scored, cov) = scoredImpacts(spark, indexDir, probes, wanted, None,
       effB, asOf)
     val w = Window.partitionBy(col("qid"))
@@ -1590,7 +1590,8 @@ object TextIndex {
     val qterms = queries.select(col(idCol).cast("long").as("qid"),
       posexplode(m0.tokenize(col(textCol))).as(Seq("slot", "term")))
     // bounded collect: the batch's probed buckets (<= batch vocabulary)
-    val tbs = qterms.select(tbCol(nb).as("tb")).distinct().collect()
+    val tbs = graft.sources.StoredIndex.distinctKeys(
+        qterms.select(tbCol(nb).as("tb")))
       .map(_.getLong(0)).toSeq
     val post = antiDead(spark, indexDir,
       rawPostingsPos(spark, indexDir, asOf).filter(col("tb").isin(tbs: _*)),

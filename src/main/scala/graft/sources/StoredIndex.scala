@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One policy decision of a family's nightly-ops `maintain` entry point:
@@ -344,6 +344,20 @@ object StoredIndex {
                 keys: Seq[String], cnt: String,
                 asOf: Option[Int] = None): DataFrame =
     lsmSum(keys, cnt)(lsmSegments(spark, path, ddl, asOf))
+
+  /** The distinct rows of a route's partition-key frame (a batch's
+    * probed IVF cells, BM25 term buckets, LM bigram buckets), collected
+    * to the driver for a partition filter in ONE Spark job that adds no
+    * exchange: each partition dedups its own rows, the driver dedups the
+    * union. `df.distinct().collect()` plans an aggregate around a
+    * shuffle — two jobs under AQE, a plan-time floor every serve pays.
+    * Pass the frame BEFORE any per-query dedup (`dropDuplicates` is a
+    * shuffle of its own); the key set is the same. The collect runs
+    * outside a SQL execution (`Dataset.rdd`), so Spark renders no plan
+    * for it either.
+    */
+  def distinctKeys(df: DataFrame): Array[Row] =
+    df.rdd.mapPartitions(_.toSet.iterator).collect().distinct
 
   /** Whether the served version carries live tombstones — a driver-side
     * metadata check (pinned file list or directory walk), so the

@@ -57,6 +57,15 @@ object Bridge {
   def normalizeFloats(e: Expression): Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
 
+  /** Spark's DIVIDE_BY_ZERO error, as ANSI-mode `Divide` raises it. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
+  /** Spark's out-of-bounds error, as ANSI-mode `element_at` raises it. */
+  def invalidElementAtIndexError(index: Int, n: Int): RuntimeException =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .invalidElementAtIndexError(index, n, null)
+
   /** A DataFrame over an already-Catalyst-typed row RDD (no external-Row
     * round trip) — the internal sibling of `createDataFrame(rdd, schema)`,
     * for pinning iterative-loop state without per-row conversion.

@@ -387,9 +387,8 @@ class TextIndexSpec extends SparkSpec {
     val zdocs = graft.tools.SynthFixtures.zipfDocs(spark, 20000L)
     val dir = tmp()
     TextIndex.writeBm25Index(zdocs, dir, forward = true)
-    // head / mid / tail of the Zipf(1.1) df ladder (measured by the
-    // PrunedProbe run this spec pins): w000005 df=18820, w000500 df=411,
-    // w020123 df=9
+    // head / mid / tail of the Zipf(1.1) df ladder of this seeded 20k-doc
+    // fixture: w000005 df=18820, w000500 df=411, w020123 df=9
     val zterms = Seq("w000005", "w000500", "w020123")
     val headTb = TextIndex.termBucket("w000005", 16)
     val tailTb = TextIndex.termBucket("w020123", 16)
