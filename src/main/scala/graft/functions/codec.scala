@@ -242,9 +242,18 @@ object gcolumns {
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
   /** The `nprobe` best IVF cells of a double-array column against a
-    * held centroid table (codegen'd; [[IvfCells]]). */
+    * held centroid table (codegen'd; [[IvfCells]]): the probe side. */
   def ivf_cells(v: Column, cents: IvfCentroids, nprobe: Int): Column =
-    Bridge.column(IvfCells(Bridge.expression(v), cents, nprobe))
+    Bridge.column(IvfCells(Bridge.expression(v), cents, nprobe,
+      nullsFirst = true))
+
+  /** The argmax IVF cell of a double-array column, zero-norm cells
+    * last ([[IvfCells]] with nprobe = 1): the build side. A one-cell
+    * index assigns every row to cell 0, null vectors included. */
+  def ivf_cell(v: Column, cents: IvfCentroids): Column =
+    if (cents.size == 1) org.apache.spark.sql.functions.lit(0L)
+    else Bridge.column(IvfCells(Bridge.expression(v), cents, 1,
+      nullsFirst = false)).getItem(0)
 
   /** Centroid vector of a 0-based IVF cell-id column ([[IvfCentroid]]). */
   def ivf_centroid(cell: Column, cents: IvfCentroids): Column =

@@ -74,63 +74,88 @@ object VectorTextImpl {
   }
 
   /** The `nprobe` best IVF cells of `v`: cells ranked by dot(v, c) / |c|,
-    * highest first, as 0-based ids — the former `transform` /
-    * `array_sort` / `array_position` expression, decision for decision:
+    * highest first, as 0-based ids — decision for decision the two
+    * column formulas it replaced:
     *  - output length min(nprobe, cells); a null `v` gives that many
     *    nulls;
     *  - a zero-norm centroid divides by zero as Spark's `/` does: an
     *    error when `failOnDivZero` (ANSI), else a null score;
-    *  - null scores rank first (`array_sort` puts them last, the old
-    *    expression reversed it) and come out as null cells; then SQL
-    *    double order, descending (NaN above every number, -0.0 = 0.0);
+    *  - null scores rank first when `nullsFirst` (the probe side's
+    *    reversed `array_sort`) or last (the build side's `greatest`,
+    *    which skips them), and come out as null cells; the rest rank in
+    *    SQL double order, descending (NaN above every number,
+    *    -0.0 = 0.0);
     *  - each ranked score maps to the FIRST cell with an equal score
-    *    (`array_position`), so tied cells collapse to one id, repeated.
+    *    (`array_position` / the first-match `when` chain), so tied cells
+    *    collapse to one id, repeated.
     * O(nprobe x cells) selection after the O(cells x dim) dots; with
     * nprobe = 1 it is the plain first-index-wins argmax.
     */
   def ivfCells(v: ArrayData, c: IvfCentroids, nprobe: Int,
-               failOnDivZero: Boolean): ArrayData = {
-    val n = c.cents.length
+               nullsFirst: Boolean, failOnDivZero: Boolean): ArrayData = {
+    val n = c.size
     val m = math.min(nprobe, n)
     if (v == null) return new GenericArrayData(new Array[Any](m))
+    if (failOnDivZero && c.anyZeroNorm) throw Bridge.divideByZeroError()
     val s = new Array[Double](n)
-    val nul = new Array[Boolean](n)
-    var anyNull = false
     var i = 0
     while (i < n) {
-      if (c.norms(i) == 0.0) {
-        if (failOnDivZero) throw Bridge.divideByZeroError()
-        nul(i) = true; anyNull = true
-      } else s(i) = dotDA(v, c.cents(i)) / c.norms(i)
+      if (c.norms(i) != 0.0) s(i) = dotDA(v, c.cents(i)) / c.norms(i)
       i += 1
     }
+    val out = rankCells(s, c.norms, m, nullsFirst)
+    if (!c.anyZeroNorm) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(out.map(k => if (k < 0) null else k: Any))
+  }
+
+  /** The build-side cell of a driver-held vector: [[ivfCells]] with
+    * nprobe = 1 and null scores last, as sequential driver double math
+    * (the k-means and PQ training loops assign their samples with it).
+    * Cell 0 when every centroid is zero-norm.
+    */
+  def nearestCell(v: Array[Double], c: IvfCentroids): Int = {
+    val s = Array.tabulate(c.size) { i =>
+      val ci = c.cents(i)
+      val n = math.min(v.length, ci.length)
+      var acc = 0.0
+      var d = 0
+      while (d < n) { acc += v(d) * ci(d); d += 1 }
+      if (c.norms(i) != 0.0) acc / c.norms(i) else 0.0
+    }
+    math.max(0L, rankCells(s, c.norms, 1, nullsFirst = false)(0)).toInt
+  }
+
+  /** The `m` best cells of scores `s`, a zero-norm cell's score null
+    * (-1 in the output); see [[ivfCells]] for the order. */
+  private def rankCells(s: Array[Double], norms: Array[Double], m: Int,
+                        nullsFirst: Boolean): Array[Long] = {
+    val n = s.length
     val used = new Array[Boolean](n)
     val out = new Array[Long](m)
-    val outNull = if (anyNull) new Array[Boolean](m) else null
     var j = 0
     while (j < m) {
       // lowest index among the best unused: `before` is strict
       var b = -1
-      i = 0
+      var i = 0
       while (i < n) {
-        if (!used(i) && (b < 0 ||
-            (if (nul(i) || nul(b)) nul(i) && !nul(b)
-             else SQLOrderingUtil.compareDoubles(s(i), s(b)) > 0))) b = i
+        if (!used(i) && (b < 0 || {
+            val (ni, nb) = (norms(i) == 0.0, norms(b) == 0.0)
+            if (ni != nb) ni == nullsFirst
+            else !ni && SQLOrderingUtil.compareDoubles(s(i), s(b)) > 0
+          })) b = i
         i += 1
       }
       used(b) = true
-      if (nul(b)) outNull(j) = true
+      if (norms(b) == 0.0) out(j) = -1
       else {
         var f = 0
-        while (nul(f) || SQLOrderingUtil.compareDoubles(s(f), s(b)) != 0)
-          f += 1
+        while (norms(f) == 0.0 ||
+            SQLOrderingUtil.compareDoubles(s(f), s(b)) != 0) f += 1
         out(j) = f
       }
       j += 1
     }
-    if (!anyNull) UnsafeArrayData.fromPrimitiveArray(out)
-    else new GenericArrayData(Array.tabulate[Any](m)(k =>
-      if (outNull(k)) null else out(k)))
+    out
   }
 
   /** Centroid vector of IVF cell `cell` (0-based). */
@@ -311,6 +336,7 @@ final class IvfCentroids(rows: Seq[Seq[Double]]) extends Serializable {
   val norms: Array[Double] =
     cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
   def size: Int = cents.length
+  val anyZeroNorm: Boolean = norms.contains(0.0)
   def toSeq: Seq[Seq[Double]] = cents.map(_.toSeq).toSeq
 
   /** Per-cell vectors as Catalyst arrays, built once per JVM. */
@@ -333,13 +359,14 @@ final class IvfCentroids(rows: Seq[Seq[Double]]) extends Serializable {
 /** The `nprobe` best IVF cells of a vector:
   * `array<double> -> array<bigint>` ([[VectorTextImpl.ivfCells]]), the
   * one cell-assignment kernel of the IVF family — probe-side `nprobe`
-  * cells and build-side argmax (`nprobe` = 1) alike. Codegen'd; the
-  * centroid table is a non-child argument ([[IvfCentroids]]), so the
-  * expression prints as `ivf_cells(qv, 63x32@1f3a9c0e, 5)`.
-  * `failOnError` is the session's ANSI flag at construction, as for
-  * Spark's own `Divide`.
+  * cells (`nullsFirst`) and build-side argmax (`nprobe` = 1, null
+  * scores last) alike. Codegen'd; the centroid table is a non-child
+  * argument ([[IvfCentroids]]), so the expression prints as
+  * `ivf_cells(qv, 63x32@1f3a9c0e, 5, true)`. `failOnError` is the
+  * session's ANSI flag at construction, as for Spark's own `Divide`.
   */
 case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
+                    nullsFirst: Boolean,
                     failOnError: Boolean = SQLConf.get.ansiEnabled)
     extends UnaryExpression {
   require(nprobe >= 0, s"nprobe must be >= 0 (got $nprobe)")
@@ -347,11 +374,11 @@ case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
   override def nullable: Boolean = false
   override def prettyName: String = "ivf_cells"
   override protected def stringArgs: Iterator[Any] =
-    Iterator(child, cents, nprobe)
+    Iterator(child, cents, nprobe, nullsFirst)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     VectorTextImpl.ivfCells(child.eval(input).asInstanceOf[ArrayData],
-      cents, nprobe, failOnError)
+      cents, nprobe, nullsFirst, failOnError)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val v = child.genCode(ctx)
@@ -361,7 +388,8 @@ case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
       ${v.code}
       ${CodeGenerator.javaType(dataType)} ${ev.value} =
         graft.functions.VectorTextImpl.ivfCells(
-          ${v.isNull} ? null : ${v.value}, $ref, $nprobe, $failOnError);""",
+          ${v.isNull} ? null : ${v.value}, $ref, $nprobe, $nullsFirst,
+          $failOnError);""",
       isNull = FalseLiteral)
   }
 

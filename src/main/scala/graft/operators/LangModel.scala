@@ -121,19 +121,20 @@ object LangModel {
     * joins). OPTIMIZATION r18 (guide §1.2): the previous wanted-bucket
     * pass ran the FULL mapped n-gram construction (zip/transform explode
     * + 2–3 broadcast vocab joins) a second time just to hash its context
-    * columns; this pass explodes bare tokens, maps + hashes them through
-    * ONE broadcast join and collects the distinct buckets with
-    * [[StoredIndex.distinctKeys]] (one job, no shuffle).
+    * columns; this pass explodes bare tokens, collapses to the distinct
+    * set map-side (Zipf makes that tiny), and maps + hashes the
+    * distincts through ONE broadcast join.
     */
   private def probedBuckets(batch: DataFrame, vocab: DataFrame, nb: Int,
-                            textCol: String): Seq[Long] =
-    StoredIndex.distinctKeys(
-      batch.select(explode(split(col(textCol), " ")).as("tok"))
-        .join(broadcast(vocab.select(col("tok"), lit(1).as("inv"))),
-          Seq("tok"), "left")
-        .select(pmod(xxhash64(when(col("inv").isNotNull, col("tok"))
-          .otherwise(lit(Unk))), lit(nb.toLong)).as("wb")))
-      .map(_.getLong(0)).toSeq
+                            textCol: String): Seq[Long] = {
+    batch.select(explode(split(col(textCol), " ")).as("tok"))
+      .distinct()
+      .join(broadcast(vocab.select(col("tok"), lit(1).as("inv"))),
+        Seq("tok"), "left")
+      .select(pmod(xxhash64(when(col("inv").isNotNull, col("tok"))
+        .otherwise(lit(Unk))), lit(nb.toLong)).as("wb"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+  }
 
   /** (vocabTop, V, nBuckets, order) — `ordern` last so pre-r16 bigram
     * metas read it as null and default to order 2.

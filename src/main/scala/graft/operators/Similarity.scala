@@ -1,11 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.functions.IvfCentroids
-import graft.functions.gcolumns.{dotp, ivf_cells, ivf_centroid}
+import graft.functions.{IvfCentroids, VectorTextImpl}
+import graft.functions.gcolumns.{dotp, ivf_cell, ivf_cells, ivf_centroid}
 import graft.sources.{IndexCommit, StoredIndex}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -140,8 +144,9 @@ object Similarity {
     * distributed, so the training cost is O(sample), not O(corpus)). All
     * arithmetic is sequential driver-side double math — bit-reproducible
     * run to run, no partition-order dependence. Empty cells keep their
-    * previous centroid. Same argmax (dot/|c|, lowest index on ties) as the
-    * distributed [[graft.functions.IvfCells]] assignment.
+    * previous centroid. Samples assign through
+    * [[graft.functions.VectorTextImpl.nearestCell]], the driver form of
+    * the distributed build-side [[graft.functions.IvfCells]] argmax.
     */
   private def kmeansCentroids(e: DataFrame, nCells: Int, iters: Int,
                               maxSample: Int = 4096): IvfCentroids =
@@ -159,20 +164,9 @@ object Similarity {
           for (_ <- 1 to iters) {
             val sums = Array.fill(nCells, dim)(0.0)
             val counts = new Array[Int](nCells)
-            val norms = cents.map(c =>
-              math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
+            val held = new IvfCentroids(cents.map(_.toIndexedSeq))
             sample.foreach { v =>
-              var best = 0
-              var bestScore = Double.NegativeInfinity
-              var c = 0
-              while (c < nCells) {
-                var d = 0.0
-                var i = 0
-                while (i < dim) { d += v(i) * cents(c)(i); i += 1 }
-                val s = d / norms(c)
-                if (s > bestScore) { bestScore = s; best = c }
-                c += 1
-              }
+              val best = VectorTextImpl.nearestCell(v, held)
               var i = 0
               while (i < dim) { sums(best)(i) += v(i); i += 1 }
               counts(best) += 1
@@ -188,7 +182,8 @@ object Similarity {
 
   /** Corpus-side IVF cell assignment: each vector's argmax cell through
     * the same [[graft.functions.IvfCells]] kernel as the probe side
-    * (nprobe = 1: first index wins score ties). (cell, nid, nv, nn, qerr)
+    * (nprobe = 1: first index wins score ties; a zero-norm centroid's
+    * null score ranks last). (cell, nid, nv, nn, qerr)
     * rows, with qerr = 1 - cos(v, assigned centroid) from the chosen
     * cell's own dot — the per-vector quantization error the drift
     * statistics aggregate ([[ivfDriftStats]]). The centroid norm is
@@ -198,7 +193,7 @@ object Similarity {
   private def corpusCellsScored(e: DataFrame,
                                 cents: IvfCentroids): DataFrame = {
     val cv = ivf_centroid(col("cell"), cents)
-    e.select(ivf_cells(col("v"), cents, 1).getItem(0).as("cell"),
+    e.select(ivf_cell(col("v"), cents).as("cell"),
         col("vec_id").as("nid"), col("v").as("nv"), col("vn").as("nn"))
       .withColumn("qerr",
         lit(1.0) - dotp(col("nv"), cv) / sqrt(dotp(cv, cv)) / col("nn"))
@@ -323,8 +318,9 @@ object Similarity {
   // -------------------------------------------------------------------------
 
   /** Per-subspace PQ codebooks over coarse-assignment RESIDUALS: each
-    * bounded-sample vector assigns to its argmax cell (the
-    * [[kmeansCentroids]] inner loop), its residual v − centroid(cell) is
+    * bounded-sample vector assigns to its argmax cell
+    * ([[graft.functions.VectorTextImpl.nearestCell]], the cell the build
+    * stores it under), its residual v − centroid(cell) is
     * split into `m` contiguous subspaces, and each subspace k-means
     * (`ksub` codewords, L2) independently — sequential driver double
     * math, bit-reproducible, so a rebuild over an unchanged corpus
@@ -344,20 +340,11 @@ object Similarity {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim is not divisible into $m subspaces")
     val sd = dim / m
-    val (cv, cnorms) = (cents.cents, cents.norms)
     val residuals = sample.map { v =>
-      var best = 0; var bestScore = Double.NegativeInfinity
-      var c = 0
-      while (c < cv.length) {
-        var d = 0.0; var i = 0
-        while (i < dim) { d += v(i) * cv(c)(i); i += 1 }
-        val s = d / cnorms(c)
-        if (s > bestScore) { bestScore = s; best = c }
-        c += 1
-      }
+      val cv = cents.cents(VectorTextImpl.nearestCell(v, cents))
       val r = new Array[Double](dim)
       var i = 0
-      while (i < dim) { r(i) = v(i) - cv(best)(i); i += 1 }
+      while (i < dim) { r(i) = v(i) - cv(i); i += 1 }
       r
     }
     (0 until m).map { s =>
@@ -905,7 +892,12 @@ object Similarity {
     * one job, no exchange) push onto the postings scan as PARTITION
     * FILTERS, so the scan reads only the probed cells' files — the
     * pruning that turns a 100 TB postings table into an O(probed cells)
-    * read (SimilaritySpec asserts the filters are in the plan). No state
+    * read (SimilaritySpec asserts the filters are in the plan).
+    * Driver-held arrivals (a local relation — an interactive query) skip
+    * both Spark-side steps: the optimizer folds the probe projection into
+    * the relation, so the probes, their dedup and the probed cells come
+    * from the driver with no job, and the probe side joins as a local
+    * relation (IvfCellsSpec pins the same neighbors). No state
     * store, no stream-stream join, no corpus scan per batch; run under
     * `foreachBatch` like the other route operators. SimilaritySpec
     * replays corpus probes and proves route == batch [[ivfTopK]] exactly.
@@ -971,14 +963,35 @@ object Similarity {
       .select(col(idCol).cast("long").as("qid"),
         transform(col(embCol), _.cast("double")).as("qv"))
       .withColumn("qn", sqrt(dotp(col("qv"), col("qv"))))
-    val cells = explode(ivf_cells(col("qv"), cents, nprobeEff)).as("cell")
-    // duplicate arrival ids (and tied cells) score each (qid, cell) once
-    val probes = probesV.select(col("qid"), col("qv"), col("qn"), cells)
-      .dropDuplicates("qid", "cell")
-    // the probed-cell set: bounded by nCells regardless of batch size,
-    // collected once per batch and pushed as a partition filter
-    val wanted = StoredIndex.distinctKeys(probesV.select(cells))
-      .map(_.getLong(0)).toSeq
+    val cellArr = ivf_cells(col("qv"), cents, nprobeEff)
+    val withCells = probesV.select(col("qid"), col("qv"), col("qn"),
+      cellArr.as("cells"))
+    val (probes, wanted) = withCells.queryExecution.optimizedPlan match {
+      // driver-held arrivals (an interactive query): the optimizer folds
+      // the probe projection into the local relation, so the probes,
+      // their (qid, cell) dedup and the probed-cell set are computed on
+      // the driver with no Spark job, and the probe side joins as a local
+      // relation (no dedup exchange). Null cells never join; dropped here
+      case _: LocalRelation =>
+        val rows = withCells.collect().toSeq.flatMap(r =>
+          r.getSeq[java.lang.Long](3).filter(_ != null).map(c =>
+            Row(r.get(0), r.get(1), r.get(2), c.longValue)))
+          .distinctBy(r => (r.get(0), r.getLong(3)))
+        (spark.createDataFrame(rows.asJava, StructType(
+            withCells.schema.fields.take(3) :+
+              StructField("cell", LongType, nullable = false))),
+          rows.map(_.getLong(3)).distinct)
+      case _ =>
+        val cells = explode(cellArr).as("cell")
+        // duplicate arrival ids (and tied cells) score each (qid, cell)
+        // once; the probed-cell set (bounded by nCells regardless of batch
+        // size) is collected once per batch and pushed as a partition
+        // filter
+        (probesV.select(col("qid"), col("qv"), col("qn"), cells)
+          .dropDuplicates("qid", "cell"),
+          StoredIndex.distinctKeys(probesV.select(cells))
+            .map(_.getLong(0)).toSeq)
+    }
     rankTopK(probes
       .join(corpus.filter(col("cell").isin(wanted: _*)), "cell")
       .filter(col("qid") =!= col("nid"))

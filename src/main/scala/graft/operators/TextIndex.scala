@@ -942,11 +942,12 @@ object TextIndex {
     val nb = m0.nb
     // query text tokenizes through the INDEX's recorded tokenizer, so a
     // normalized index matches normalized query terms by construction
-    val terms = queries.select(col(idCol).cast("long").as("qid"),
+    val probes = queries.select(col(idCol).cast("long").as("qid"),
         explode(m0.tokenize(col(textCol))).as("term"))
-    val probes = terms.dropDuplicates("qid", "term")
-    val probed = graft.sources.StoredIndex.distinctKeys(
-      terms.select(col("term"), tbCol(nb).as("tb")))
+      .dropDuplicates("qid", "term")
+    val probed = probes
+      .select(col("term"), tbCol(nb).as("tb")).distinct()
+      .collect()
     val wanted = probed.map(_.getLong(1)).distinct.toSeq
     val batchTerms =
       if (termPushdownCap > 0 && probed.length <= termPushdownCap)
@@ -1400,13 +1401,12 @@ object TextIndex {
     require(m0.impF > 0 || budget > 0,
       s"budget must be positive on a fixed-block index (got $budget)")
     val effB = if (m0.impF > 0) 0 else budget
-    val terms = queries.select(col(idCol).cast("long").as("qid"),
+    val probes = queries.select(col(idCol).cast("long").as("qid"),
         explode(m0.tokenize(col(textCol))).as("term"))
-    val probes = terms.dropDuplicates("qid", "term")
+      .dropDuplicates("qid", "term")
     // bounded collect: the batch's probed buckets (<= nbuckets values)
-    val wanted = graft.sources.StoredIndex.distinctKeys(
-        terms.select(tbCol(m0.nb).as("tb")))
-      .map(_.getLong(0)).toSeq
+    val wanted = probes.select(tbCol(m0.nb).as("tb")).distinct()
+      .collect().map(_.getLong(0)).toSeq
     val (scored, cov) = scoredImpacts(spark, indexDir, probes, wanted, None,
       effB, asOf)
     val w = Window.partitionBy(col("qid"))

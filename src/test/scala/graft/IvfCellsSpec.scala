@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
-import graft.functions.IvfCentroids
-import graft.functions.gcolumns.{dotp, ivf_cells}
+import graft.functions.{IvfCentroids, VectorTextImpl}
+import graft.functions.gcolumns.{dotp, ivf_cell, ivf_cells}
 import graft.operators.Similarity
 import graft.sources.StoredIndex
 
@@ -19,8 +19,9 @@ import graft.sources.StoredIndex
   * the two column formulas it replaced, kept here as oracles: the probe
   * side's `transform` / `array_sort` / `array_position` over a centroid
   * literal and the build side's per-cell score columns + first-match
-  * `when` chain. Also: the routes' plans never print the centroids, and
-  * the probed-cell collect is one job with no exchange.
+  * `when` chain. Also: the routes' plans never print the centroids, the
+  * probed-cell collect is one job with no exchange, and driver-held
+  * arrivals serve with no plan-time job at all.
   */
 class IvfCellsSpec extends SparkSpec {
 
@@ -77,35 +78,61 @@ class IvfCellsSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
   }
 
-  /** Kernel vs oracle cells per row, the kernel both whole-stage
-    * codegen'd (a compile error fails instead of falling back) and
-    * interpreted. */
+  /** Each (name, kernel, oracle) column pair per row, the kernels both
+    * whole-stage codegen'd (a compile error fails instead of falling
+    * back) and interpreted. */
+  private def assertSame(vs: Seq[Seq[java.lang.Double]],
+                         pairs: Seq[(String, Column, Column)],
+                         kernelInPlan: Boolean = true): Unit = {
+    val df = vectors(vs)
+    def rows(cs: Seq[Column]): Map[Long, Seq[Any]] =
+      df.select(col("id") +: cs: _*).collect()
+        .map(r => r.getLong(0) -> cs.indices.map(i => r.get(i + 1))).toMap
+    val want = rows(pairs.map(_._3))
+    val kernels = pairs.map(_._2)
+    val codegen = withConf("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.fallback" -> "false") {
+      val plan = df.select(kernels: _*).queryExecution.executedPlan
+      assert(!kernelInPlan || plan.collect {
+          case w: WholeStageCodegenExec => w
+        }.exists(_.toString.contains("ivf_cells")),
+        s"ivf_cells must run whole-stage codegen'd:\n$plan")
+      rows(kernels)
+    }
+    val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(rows(kernels))
+    for ((mode, got) <- Seq("codegen" -> codegen, "interpreted" -> interpreted);
+         (id, w) <- want; i <- pairs.indices)
+      assert(got(id)(i) == w(i), s"$mode, vector $id, ${pairs(i)._1}: " +
+        s"kernel ${got(id)(i)}, formula ${w(i)}")
+  }
+
+  /** Probe side: the kernel's cells vs the former probe-side formula. */
   private def assertSameCells(vs: Seq[Seq[java.lang.Double]],
                               cents: Seq[Seq[Double]],
                               nprobes: Seq[Int]): Unit = {
     val held = new IvfCentroids(cents)
-    val df = vectors(vs)
-    def cells(f: Int => Column): Map[Long, Seq[Seq[Any]]] =
-      df.select(col("id") +: nprobes.map(f): _*).collect()
-        .map(r => r.getLong(0) -> nprobes.indices.map(i => r.getSeq[Any](i + 1)))
-        .toMap
-    val want = cells(p => oracleCells(col("v"), cents, p))
-    val kernel = (p: Int) => ivf_cells(col("v"), held, p)
-    val codegen = withConf("spark.sql.codegen.wholeStage" -> "true",
-        "spark.sql.codegen.fallback" -> "false") {
-      val plan = df.select(nprobes.map(kernel): _*)
-        .queryExecution.executedPlan
-      assert(plan.collect { case w: WholeStageCodegenExec => w }
-        .exists(_.toString.contains("ivf_cells")),
-        s"ivf_cells must run whole-stage codegen'd:\n$plan")
-      cells(kernel)
+    assertSame(vs, nprobes.map(p => (s"nprobe $p",
+      ivf_cells(col("v"), held, p), oracleCells(col("v"), cents, p))))
+  }
+
+  /** Build side: the kernel's argmax and the driver training loops'
+    * [[VectorTextImpl.nearestCell]] vs the former when-chain. */
+  private def assertSameArgmax(vs: Seq[Seq[java.lang.Double]],
+                               cents: Seq[Seq[Double]]): Unit = {
+    val held = new IvfCentroids(cents)
+    val want = oracleArgmax(col("v"), lit(1.0), cents)._1
+    // a one-cell index is a constant assignment, no kernel
+    assertSame(vs, Seq(("argmax", ivf_cell(col("v"), held), want)),
+      kernelInPlan = cents.size > 1)
+    val oracle = vectors(vs).select(col("id"), want).collect()
+      .map(r => r.getLong(0) -> r.get(1)).toMap
+    for ((v, id) <- vs.zipWithIndex if v != null) {
+      val got = VectorTextImpl.nearestCell(v.map(_.doubleValue).toArray, held)
+      // no cell scores (every centroid zero-norm): the driver takes cell 0
+      val exp = Option(oracle(id.toLong)).getOrElse(0L)
+      assert(got.toLong == exp, s"driver, vector $id: $got, formula $exp")
     }
-    val interpreted = withConf("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(cells(kernel))
-    for ((mode, got) <- Seq("codegen" -> codegen, "interpreted" -> interpreted);
-         (id, w) <- want; i <- nprobes.indices)
-      assert(got(id)(i) == w(i), s"$mode, vector $id, nprobe " +
-        s"${nprobes(i)}: kernel ${got(id)(i)}, formula ${w(i)}")
   }
 
   private def boxed(v: Seq[Double]): Seq[java.lang.Double] =
@@ -126,17 +153,21 @@ class IvfCellsSpec extends SparkSpec {
       boxed(cents(5)), boxed(cents(5).map(_ * -1.0)),
       boxed(Seq(1.0) ++ Seq.fill(dim - 1)(0.0)))
     assertSameCells(random ++ edge, cents, Seq(1, 3, 16, 40))
+    assertSameArgmax(random ++ edge, cents)
     // duplicate centroids tie exactly: first index wins, and a probe
     // ranking both keeps the first id twice
     val dup = cents.updated(9, cents(2)).updated(12, cents(2))
     assertSameCells(random.take(20) ++ edge ++ Seq(boxed(cents(2))), dup,
       Seq(1, 2, 3, 5, 20))
+    assertSameArgmax(random.take(20) ++ edge ++ Seq(boxed(cents(2))), dup)
     // a one-cell index
     assertSameCells(random.take(10) ++ edge, Seq(cents.head), Seq(1, 5))
+    assertSameArgmax(random.take(10) ++ edge, Seq(cents.head))
   }
 
-  test("a zero-norm centroid fails as the formula's division by zero " +
-      "does under ANSI, and ranks like its null score otherwise") {
+  test("a zero-norm centroid fails as the formulas' division by zero " +
+      "does under ANSI, and ranks like their null score otherwise: " +
+      "first on the probe side, last on the build side") {
     val rnd = new scala.util.Random(23)
     val cents = Seq.fill(6)(Seq.fill(4)(rnd.nextGaussian()))
       .updated(3, Seq.fill(4)(0.0))
@@ -144,7 +175,9 @@ class IvfCellsSpec extends SparkSpec {
     withConf("spark.sql.ansi.enabled" -> "true") {
       val held = new IvfCentroids(cents)
       for (c <- Seq(ivf_cells(col("v"), held, 2),
-                    oracleCells(col("v"), cents, 2))) {
+                    oracleCells(col("v"), cents, 2),
+                    ivf_cell(col("v"), held),
+                    oracleArgmax(col("v"), lit(1.0), cents)._1)) {
         val e = intercept[Exception](vectors(vs).select(c).collect())
         val causes = Iterator.iterate[Throwable](e)(_.getCause)
           .takeWhile(_ != null).toSeq
@@ -156,6 +189,11 @@ class IvfCellsSpec extends SparkSpec {
     }
     withConf("spark.sql.ansi.enabled" -> "false") {
       assertSameCells(vs, cents, Seq(1, 2, 6))
+      assertSameArgmax(vs, cents)
+      // every centroid zero-norm: no cell scores, so no cell
+      val zero = Seq.fill(3)(Seq.fill(4)(0.0))
+      assertSameCells(vs, zero, Seq(1, 3))
+      assertSameArgmax(vs, zero)
     }
   }
 
@@ -272,5 +310,29 @@ class IvfCellsSpec extends SparkSpec {
     val kjobs = jobsOf { got = StoredIndex.distinctKeys(keys) }
     assert(kjobs.map(_._2) == Seq(1), s"distinctKeys jobs: $kjobs")
     assert(got.toSet == keys.distinct().collect().toSet && got.length == 37)
+  }
+
+  test("driver-held arrivals serve with no plan-time job and no dedup " +
+      "exchange, and return the distributed path's neighbors") {
+    val dir = tmp("graft-ivfcells-local")
+    Similarity.ivfWriteIndex(emb, dir)
+    val picked = emb.filter(col("vec_id") < 12).collect().toSeq
+    // a duplicate arrival id scores each (qid, cell) once on both paths
+    val local = spark.createDataFrame((picked :+ picked.head).asJava,
+      emb.schema)
+    val spread = local.repartition(3)
+    val dedupExchange = "hashpartitioning\\(qid#\\d+L?, cell#".r
+    def serve(arrivals: DataFrame): (Set[Row], String) = {
+      val routed = Similarity.annRoute(arrivals, dir, k = 5)
+      (routed.collect().toSet, routed.queryExecution.executedPlan.toString)
+    }
+    val (want, spreadPlan) = serve(spread)
+    assert(dedupExchange.findFirstIn(spreadPlan).isDefined, spreadPlan)
+    val (got, localPlan) = serve(local)
+    assert(got == want)
+    assert(dedupExchange.findFirstIn(localPlan).isEmpty, localPlan)
+    assert(!localPlan.contains("ivf_cells("), localPlan)
+    val jobs = jobsOf { Similarity.annRoute(local, dir, k = 5) }
+    assert(jobs.isEmpty, s"plan-time jobs: $jobs")
   }
 }
