@@ -242,22 +242,24 @@ object gcolumns {
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
 
   /** The `nprobe` best IVF cells of a double-array column against a
-    * held centroid table (codegen'd; [[IvfCells]]): the probe side. */
-  def ivf_cells(v: Column, cents: IvfCentroids, nprobe: Int): Column =
+    * held centroid table (codegen'd; [[IvfCells]]): the probe side. With
+    * `l2`, the nearest rows by squared L2 (PQ encoding). */
+  def ivf_cells(v: Column, cents: HeldMatrix, nprobe: Int,
+                l2: Boolean = false): Column =
     Bridge.column(IvfCells(Bridge.expression(v), cents, nprobe,
-      nullsFirst = true))
+      nullsFirst = true, l2 = l2))
 
   /** The argmax IVF cell of a double-array column, zero-norm cells
     * last ([[IvfCells]] with nprobe = 1): the build side. A one-cell
     * index assigns every row to cell 0, null vectors included. */
-  def ivf_cell(v: Column, cents: IvfCentroids): Column =
+  def ivf_cell(v: Column, cents: HeldMatrix): Column =
     if (cents.size == 1) org.apache.spark.sql.functions.lit(0L)
     else Bridge.column(IvfCells(Bridge.expression(v), cents, 1,
       nullsFirst = false)).getItem(0)
 
-  /** Centroid vector of a 0-based IVF cell-id column ([[IvfCentroid]]). */
-  def ivf_centroid(cell: Column, cents: IvfCentroids): Column =
-    Bridge.column(IvfCentroid(Bridge.expression(cell), cents))
+  /** Row of a held matrix by a 0-based row-id column ([[IvfCentroid]]). */
+  def ivf_centroid(cell: Column, held: HeldMatrix): Column =
+    Bridge.column(IvfCentroid(Bridge.expression(cell), held))
 
   /** Intersection size of two sorted string-array columns (codegen'd
     * linear merge — the route tier's verification kernel). */

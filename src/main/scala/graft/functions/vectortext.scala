@@ -73,13 +73,15 @@ object VectorTextImpl {
     acc
   }
 
-  /** The `nprobe` best IVF cells of `v`: cells ranked by dot(v, c) / |c|,
-    * highest first, as 0-based ids — decision for decision the two
-    * column formulas it replaced:
+  /** The `nprobe` best IVF cells of `v`: cells ranked by dot(v, c) / |c|
+    * (cosine) or, when `l2`, by dot(v, c) − |c|²/2 (nearest by squared
+    * L2, the common |v|² term dropped), highest first, as 0-based ids —
+    * decision for decision the column formulas it replaced:
     *  - output length min(nprobe, cells); a null `v` gives that many
     *    nulls;
     *  - a zero-norm centroid divides by zero as Spark's `/` does: an
-    *    error when `failOnDivZero` (ANSI), else a null score;
+    *    error when `failOnDivZero` (ANSI), else a null score; in `l2`
+    *    mode nothing divides, so a zero row is an ordinary row;
     *  - null scores rank first when `nullsFirst` (the probe side's
     *    reversed `array_sort`) or last (the build side's `greatest`,
     *    which skips them), and come out as null cells; the rest rank in
@@ -91,20 +93,24 @@ object VectorTextImpl {
     * O(nprobe x cells) selection after the O(cells x dim) dots; with
     * nprobe = 1 it is the plain first-index-wins argmax.
     */
-  def ivfCells(v: ArrayData, c: IvfCentroids, nprobe: Int,
-               nullsFirst: Boolean, failOnDivZero: Boolean): ArrayData = {
+  def ivfCells(v: ArrayData, c: HeldMatrix, nprobe: Int,
+               nullsFirst: Boolean, l2: Boolean,
+               failOnDivZero: Boolean): ArrayData = {
     val n = c.size
     val m = math.min(nprobe, n)
     if (v == null) return new GenericArrayData(new Array[Any](m))
-    if (failOnDivZero && c.anyZeroNorm) throw Bridge.divideByZeroError()
+    val nulls = !l2 && c.anyZeroNorm
+    if (failOnDivZero && nulls) throw Bridge.divideByZeroError()
     val s = new Array[Double](n)
     var i = 0
     while (i < n) {
-      if (c.norms(i) != 0.0) s(i) = dotDA(v, c.cents(i)) / c.norms(i)
+      if (l2) s(i) = dotDA(v, c.rows(i)) - c.halfSq(i)
+      else if (c.norms(i) != 0.0) s(i) = dotDA(v, c.rows(i)) / c.norms(i)
       i += 1
     }
-    val out = rankCells(s, c.norms, m, nullsFirst)
-    if (!c.anyZeroNorm) UnsafeArrayData.fromPrimitiveArray(out)
+    val out = rankCells(s, if (l2) new Array(n) else c.zeroNorm, m,
+      nullsFirst)
+    if (!nulls) UnsafeArrayData.fromPrimitiveArray(out)
     else new GenericArrayData(out.map(k => if (k < 0) null else k: Any))
   }
 
@@ -113,21 +119,21 @@ object VectorTextImpl {
     * (the k-means and PQ training loops assign their samples with it).
     * Cell 0 when every centroid is zero-norm.
     */
-  def nearestCell(v: Array[Double], c: IvfCentroids): Int = {
+  def nearestCell(v: Array[Double], c: HeldMatrix): Int = {
     val s = Array.tabulate(c.size) { i =>
-      val ci = c.cents(i)
+      val ci = c.rows(i)
       val n = math.min(v.length, ci.length)
       var acc = 0.0
       var d = 0
       while (d < n) { acc += v(d) * ci(d); d += 1 }
       if (c.norms(i) != 0.0) acc / c.norms(i) else 0.0
     }
-    math.max(0L, rankCells(s, c.norms, 1, nullsFirst = false)(0)).toInt
+    math.max(0L, rankCells(s, c.zeroNorm, 1, nullsFirst = false)(0)).toInt
   }
 
-  /** The `m` best cells of scores `s`, a zero-norm cell's score null
+  /** The `m` best cells of scores `s`, a `nulls` cell's score null
     * (-1 in the output); see [[ivfCells]] for the order. */
-  private def rankCells(s: Array[Double], norms: Array[Double], m: Int,
+  private def rankCells(s: Array[Double], nulls: Array[Boolean], m: Int,
                         nullsFirst: Boolean): Array[Long] = {
     val n = s.length
     val used = new Array[Boolean](n)
@@ -139,17 +145,17 @@ object VectorTextImpl {
       var i = 0
       while (i < n) {
         if (!used(i) && (b < 0 || {
-            val (ni, nb) = (norms(i) == 0.0, norms(b) == 0.0)
+            val (ni, nb) = (nulls(i), nulls(b))
             if (ni != nb) ni == nullsFirst
             else !ni && SQLOrderingUtil.compareDoubles(s(i), s(b)) > 0
           })) b = i
         i += 1
       }
       used(b) = true
-      if (norms(b) == 0.0) out(j) = -1
+      if (nulls(b)) out(j) = -1
       else {
         var f = 0
-        while (norms(f) == 0.0 ||
+        while (nulls(f) ||
             SQLOrderingUtil.compareDoubles(s(f), s(b)) != 0) f += 1
         out(j) = f
       }
@@ -158,9 +164,9 @@ object VectorTextImpl {
     out
   }
 
-  /** Centroid vector of IVF cell `cell` (0-based). */
-  def ivfCentroid(cell: Long, c: IvfCentroids): ArrayData = {
-    val n = c.cents.length
+  /** Row `cell` (0-based) of a held matrix. */
+  def ivfCentroid(cell: Long, c: HeldMatrix): ArrayData = {
+    val n = c.size
     if (cell < 0 || cell >= n)
       throw Bridge.invalidElementAtIndexError((cell + 1).toInt, n)
     c.vectors(cell.toInt)
@@ -322,51 +328,57 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** A trained IVF centroid table, held BESIDE the expression tree by the
+/** A constant double matrix (IVF centroids, PQ codebooks, LSH
+  * hyperplanes, cluster centers) held BESIDE the expression tree by the
   * [[IvfCells]] / [[IvfCentroid]] kernels instead of as a child literal:
-  * a plan, explain or AQE update renders it as `cells x dim @ hash`
+  * a plan, explain or AQE update renders it as `rows x dim @ hash`
   * (e.g. `63x32@1f3a9c0e`), never as its doubles. Equality and hash are
   * by content (the bits of every component), so semantically equal
-  * plans over the same centroids still match. Norms are computed once
-  * on the driver by sequential accumulation, the [[DotProduct]] order.
+  * plans over the same matrix still match. Squared norms are computed
+  * once on the driver by sequential accumulation, the [[DotProduct]]
+  * order.
   */
-final class IvfCentroids(rows: Seq[Seq[Double]]) extends Serializable {
-  require(rows.nonEmpty, "an IVF index has at least one cell")
-  val cents: Array[Array[Double]] = rows.map(_.toArray).toArray
-  val norms: Array[Double] =
-    cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
-  def size: Int = cents.length
-  val anyZeroNorm: Boolean = norms.contains(0.0)
-  def toSeq: Seq[Seq[Double]] = cents.map(_.toSeq).toSeq
+final class HeldMatrix(data: Seq[Seq[Double]]) extends Serializable {
+  require(data.nonEmpty, "a held matrix has at least one row")
+  val rows: Array[Array[Double]] = data.map(_.toArray).toArray
+  private val sumSq: Array[Double] =
+    rows.map(_.foldLeft(0.0)((a, x) => a + x * x))
+  val norms: Array[Double] = sumSq.map(math.sqrt)
+  val halfSq: Array[Double] = sumSq.map(_ / 2.0)
+  val zeroNorm: Array[Boolean] = norms.map(_ == 0.0)
+  val anyZeroNorm: Boolean = zeroNorm.contains(true)
+  def size: Int = rows.length
+  def dim: Int = rows.head.length
+  def toSeq: Seq[Seq[Double]] = rows.map(_.toSeq).toSeq
 
-  /** Per-cell vectors as Catalyst arrays, built once per JVM. */
+  /** Rows as Catalyst arrays, built once per JVM. */
   @transient lazy val vectors: Array[ArrayData] =
-    cents.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
+    rows.map(c => UnsafeArrayData.fromPrimitiveArray(c): ArrayData)
 
   override def equals(o: Any): Boolean = o match {
-    case that: IvfCentroids =>
+    case that: HeldMatrix =>
       hashCode == that.hashCode &&
-        java.util.Arrays.deepEquals(cents.asInstanceOf[Array[AnyRef]],
-          that.cents.asInstanceOf[Array[AnyRef]])
+        java.util.Arrays.deepEquals(rows.asInstanceOf[Array[AnyRef]],
+          that.rows.asInstanceOf[Array[AnyRef]])
     case _ => false
   }
   override lazy val hashCode: Int =
-    java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
-  override def toString: String =
-    f"${cents.length}x${cents.head.length}@$hashCode%08x"
+    java.util.Arrays.deepHashCode(rows.asInstanceOf[Array[AnyRef]])
+  override def toString: String = f"$size%dx$dim%d@$hashCode%08x"
 }
 
-/** The `nprobe` best IVF cells of a vector:
+/** The `nprobe` best rows of a vector against a held matrix:
   * `array<double> -> array<bigint>` ([[VectorTextImpl.ivfCells]]), the
-  * one cell-assignment kernel of the IVF family — probe-side `nprobe`
-  * cells (`nullsFirst`) and build-side argmax (`nprobe` = 1, null
-  * scores last) alike. Codegen'd; the centroid table is a non-child
-  * argument ([[IvfCentroids]]), so the expression prints as
-  * `ivf_cells(qv, 63x32@1f3a9c0e, 5, true)`. `failOnError` is the
-  * session's ANSI flag at construction, as for Spark's own `Divide`.
+  * one argmax kernel of the vector family — IVF probe-side `nprobe`
+  * cells (`nullsFirst`), IVF build-side argmax (`nprobe` = 1, null
+  * scores last) and PQ encoding (`l2`: nearest codeword by squared L2)
+  * alike. Codegen'd; the matrix is a non-child argument
+  * ([[HeldMatrix]]), so the expression prints as
+  * `ivf_cells(qv, 63x32@1f3a9c0e, 5, true, false)`. `failOnError` is
+  * the session's ANSI flag at construction, as for Spark's own `Divide`.
   */
-case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
-                    nullsFirst: Boolean,
+case class IvfCells(child: Expression, held: HeldMatrix, nprobe: Int,
+                    nullsFirst: Boolean, l2: Boolean = false,
                     failOnError: Boolean = SQLConf.get.ansiEnabled)
     extends UnaryExpression {
   require(nprobe >= 0, s"nprobe must be >= 0 (got $nprobe)")
@@ -374,22 +386,22 @@ case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
   override def nullable: Boolean = false
   override def prettyName: String = "ivf_cells"
   override protected def stringArgs: Iterator[Any] =
-    Iterator(child, cents, nprobe, nullsFirst)
+    Iterator(child, held, nprobe, nullsFirst, l2)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     VectorTextImpl.ivfCells(child.eval(input).asInstanceOf[ArrayData],
-      cents, nprobe, nullsFirst, failOnError)
+      held, nprobe, nullsFirst, l2, failOnError)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val v = child.genCode(ctx)
-    val ref = ctx.addReferenceObj("ivfCentroids", cents,
-      classOf[IvfCentroids].getName)
+    val ref = ctx.addReferenceObj("heldMatrix", held,
+      classOf[HeldMatrix].getName)
     ev.copy(code = code"""
       ${v.code}
       ${CodeGenerator.javaType(dataType)} ${ev.value} =
         graft.functions.VectorTextImpl.ivfCells(
           ${v.isNull} ? null : ${v.value}, $ref, $nprobe, $nullsFirst,
-          $failOnError);""",
+          $l2, $failOnError);""",
       isNull = FalseLiteral)
   }
 
@@ -397,24 +409,26 @@ case class IvfCells(child: Expression, cents: IvfCentroids, nprobe: Int,
     copy(child = newChild)
 }
 
-/** Centroid of an IVF cell: `bigint -> array<double>`
-  * ([[VectorTextImpl.ivfCentroid]]; an id outside the table fails as
-  * ANSI `element_at` does). Codegen'd, with the same non-child centroid
-  * table as [[IvfCells]].
+/** Row of a held matrix: `bigint -> array<double>`
+  * ([[VectorTextImpl.ivfCentroid]]; an id outside the matrix fails as
+  * ANSI `element_at` does). Codegen'd, with the same non-child
+  * [[HeldMatrix]] as [[IvfCells]]. Never foldable: constant folding
+  * would put a literal row id's row back into the plan as a literal.
   */
-case class IvfCentroid(child: Expression, cents: IvfCentroids)
+case class IvfCentroid(child: Expression, held: HeldMatrix)
     extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullIntolerant: Boolean = true
+  override def foldable: Boolean = false
   override def prettyName: String = "ivf_centroid"
 
   override def nullSafeEval(cell: Any): Any =
-    VectorTextImpl.ivfCentroid(cell.asInstanceOf[Long], cents)
+    VectorTextImpl.ivfCentroid(cell.asInstanceOf[Long], held)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfCentroids", cents,
-      classOf[IvfCentroids].getName)
+    val ref = ctx.addReferenceObj("heldMatrix", held,
+      classOf[HeldMatrix].getName)
     defineCodeGen(ctx, ev,
       c => s"graft.functions.VectorTextImpl.ivfCentroid($c, $ref)")
   }

@@ -481,10 +481,6 @@ object Dedup {
         "id BIGINT, sa ARRAY<STRING>, n BIGINT, pid BIGINT", asOf), asOf)
       .select("id", "sa", "n")
 
-  private[operators] def tombstonesNonEmpty(
-      dir: String, asOf: Option[Int] = None): Boolean =
-    graft.sources.StoredIndex.hasTombstones(dir, asOf)
-
   private[operators] def tombstoneIds(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       asOf: Option[Int] = None): DataFrame =

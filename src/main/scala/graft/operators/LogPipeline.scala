@@ -122,26 +122,6 @@ object LogPipeline {
 
   private val userJsonType = MapType(StringType, StringType)
 
-  /** JSON-branch guard replicating `JSON.parse` + `checkLogError` reachability
-    * (shipper.js:71-85 and the SURVEY.md §2.1 hidden edge case): the JSON
-    * branch survives iff the message parses as a JSON *object* and contains a
-    * *string-valued* `message` key — anything else (scalar/array JSON, object
-    * without `message`, non-string `message`) throws inside the reference's
-    * try block (`log.message.match` on a non-string) and falls through to the
-    * structured/raw path.
-    *
-    * The string-valuedness test is a real type probe on the PARSED value
-    * (variant: `schema_of_variant(variant_get(try_parse_json(msg),
-    * '$.message')) = 'STRING'`), not a regex over the raw text — a raw-text
-    * regex misfires on a nested object's own `"message":"x"` key when the
-    * outer `message` is non-string, and misses unicode-escaped keys
-    * (`message`), both of which JSON.parse resolves correctly.
-    */
-  def isJsonLog(msg: Column): Column = {
-    val v = variantOf(msg)
-    v.try_cast(userJsonType).isNotNull && messageType(v) === "STRING"
-  }
-
   /** The message parsed as a variant (null for invalid JSON) — the ONE JSON
     * parse in the pipeline: the user map is a cast of this variant (same
     * stringify-nested-values semantics as `from_json` to map<string,string>;
@@ -159,24 +139,6 @@ object LogPipeline {
     call_function("schema_of_variant",
       call_function("variant_get", v, lit("$.message")))
 
-  /** Parse one log-event message into the doc fields, given the
-    * already-derived enrichment columns. Produces a struct with the closed
-    * schema of [[docColumns]]; null for dropped platform messages.
-    *
-    * Inlines the variant parse once per use site; prefer [[parseStaged]] in
-    * real pipelines — it materializes the variant + map in lower projections
-    * so the generated code contains ONE parse instead of several (runtime
-    * CSE already dedupes the work, but the duplicated code bodies made
-    * Janino compilation a measurable startup cost).
-    */
-  def parseLog(functionName: Column, functionVersion: Column, msg: Column,
-               region: Column): Column = {
-    val v = variantOf(msg)
-    val parsed = v.try_cast(userJsonType)
-    docFromParsed(functionName, functionVersion, msg, parsed,
-      branchOf(msg, v, parsed), region)
-  }
-
   /** Staged parse over a frame: adds the variant + parsed-map projections,
     * then the doc column built from them. Extra input columns pass through
     * untouched.
@@ -191,9 +153,20 @@ object LogPipeline {
       .drop("__v", "__jmap", "__branch")
 
   /** Parse-branch discriminant, evaluated ONCE per row:
-    * 0 = platform drop, 1 = JSON, 2 = structured, 3 = raw. The JSON guard
-    * is the same as [[isJsonLog]]: object-shaped (map cast non-null) AND
-    * string-valued message (type probe on the parsed variant).
+    * 0 = platform drop, 1 = JSON, 2 = structured, 3 = raw.
+    *
+    * The JSON guard replicates `JSON.parse` + `checkLogError` reachability
+    * (shipper.js:71-85 and the SURVEY.md §2.1 hidden edge case): the JSON
+    * branch survives iff the message parses as a JSON *object* (map cast
+    * non-null) and contains a *string-valued* `message` key — anything
+    * else (scalar/array JSON, object without `message`, non-string
+    * `message`) throws inside the reference's try block
+    * (`log.message.match` on a non-string) and falls through to the
+    * structured/raw path. The string-valuedness test is a real type probe
+    * on the PARSED value, not a regex over the raw text — a raw-text regex
+    * misfires on a nested object's own `"message":"x"` key when the outer
+    * `message` is non-string, and misses unicode-escaped keys
+    * (`message`), both of which JSON.parse resolves correctly.
     */
   private def branchOf(msg: Column, v: Column, parsed: Column): Column =
     when(isPlatformMessage(msg), 0)

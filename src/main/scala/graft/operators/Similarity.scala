@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.functions.{IvfCentroids, VectorTextImpl}
+import graft.functions.{HeldMatrix, VectorTextImpl}
 import graft.functions.gcolumns.{dotp, ivf_cell, ivf_cells, ivf_centroid}
 import graft.sources.{IndexCommit, StoredIndex}
 
@@ -57,7 +57,7 @@ object Similarity {
     * so plans are reproducible run-to-run (a requirement both for the
     * driver's hash-compare and for incremental recomputation at scale).
     */
-  private def planeComponent(t: Int, p: Int, d: Int): Double = {
+  private[graft] def planeComponent(t: Int, p: Int, d: Int): Double = {
     val h = org.apache.spark.sql.catalyst.expressions.XXH64
       .hashLong(((t.toLong * 131071 + p) << 20) + d, 2024L)
     h.toDouble / Long.MaxValue.toDouble
@@ -133,51 +133,54 @@ object Similarity {
   // IVF with k-means centroids
   // -------------------------------------------------------------------------
 
-  /** One live learned-centroid set (keyed like [[graft.Caches]]): k-means
-    * training is probe-independent, so repeated queries reuse it.
+  /** The quantizers' bounded, deterministic training sample: the first
+    * 4096 vectors by id, one Spark job. At 100 TB training runs on such a
+    * sample while ASSIGNMENT stays distributed.
     */
-  private var centroidCache: Option[(String, IvfCentroids)] = None
+  private def trainingSample(e: DataFrame): Array[Array[Double]] =
+    e.orderBy("vec_id").limit(4096)
+      .select("v").collect().map(_.getSeq[Double](0).toArray)
 
-  /** Lloyd iterations on a bounded, deterministic training sample collected
-    * to the driver (first `maxSample` vectors by id — one Spark job; at
-    * 100 TB k-means trains on exactly such a sample while ASSIGNMENT stays
-    * distributed, so the training cost is O(sample), not O(corpus)). All
-    * arithmetic is sequential driver-side double math — bit-reproducible
-    * run to run, no partition-order dependence. Empty cells keep their
-    * previous centroid. Samples assign through
-    * [[graft.functions.VectorTextImpl.nearestCell]], the driver form of
-    * the distributed build-side [[graft.functions.IvfCells]] argmax.
+  /** Lloyd iterations over driver-held points, shared by the coarse
+    * quantizer and the PQ codebooks: `k` stride-sampled initial centroids,
+    * then `iters` rounds of `assign(round's centroids)` + per-centroid
+    * mean; an empty centroid keeps its value. Sequential driver double
+    * math — bit-reproducible run to run, no partition-order dependence.
     */
-  private def kmeansCentroids(e: DataFrame, nCells: Int, iters: Int,
-                              maxSample: Int = 4096): IvfCentroids =
-    synchronized {
-      val key = s"${e.queryExecution.analyzed.semanticHash()}|c=$nCells|i=$iters"
-      centroidCache match {
-        case Some((k, c)) if k == key => c
-        case _ =>
-          val sample = e.orderBy("vec_id").limit(maxSample)
-            .select("v").collect().map(_.getSeq[Double](0).toArray)
-          val dim = sample.head.length
-          val stride = math.max(1, sample.length / nCells)
-          var cents: IndexedSeq[Array[Double]] = (0 until nCells)
-            .map(i => sample(math.min(i * stride, sample.length - 1)).clone())
-          for (_ <- 1 to iters) {
-            val sums = Array.fill(nCells, dim)(0.0)
-            val counts = new Array[Int](nCells)
-            val held = new IvfCentroids(cents.map(_.toIndexedSeq))
-            sample.foreach { v =>
-              val best = VectorTextImpl.nearestCell(v, held)
-              var i = 0
-              while (i < dim) { sums(best)(i) += v(i); i += 1 }
-              counts(best) += 1
-            }
-            cents = (0 until nCells).map(c =>
-              if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
-          }
-          val result = new IvfCentroids(cents.map(_.toIndexedSeq))
-          centroidCache = Some((key, result))
-          result
+  private def lloyd(points: Array[Array[Double]], k: Int, iters: Int)
+                   (assign: HeldMatrix => Array[Double] => Int): HeldMatrix = {
+    val dim = points.head.length
+    val stride = math.max(1, points.length / k)
+    var cents = new HeldMatrix((0 until k)
+      .map(i => points(math.min(i * stride, points.length - 1)).toSeq))
+    for (_ <- 1 to iters) {
+      val nearest = assign(cents)
+      val sums = Array.fill(k, dim)(0.0)
+      val counts = new Array[Int](k)
+      points.foreach { v =>
+        val best = nearest(v)
+        var i = 0
+        while (i < dim) { sums(best)(i) += v(i); i += 1 }
+        counts(best) += 1
       }
+      cents = new HeldMatrix((0 until k).map(c =>
+        if (counts(c) == 0) cents.rows(c).toSeq
+        else sums(c).map(_ / counts(c)).toSeq))
+    }
+    cents
+  }
+
+  /** The IVF coarse quantizer: [[lloyd]] on the [[trainingSample]], each
+    * sample assigned by [[graft.functions.VectorTextImpl.nearestCell]]
+    * (the driver form of the build-side [[graft.functions.IvfCells]]
+    * argmax). Memoized per (corpus, cells, iters) across queries.
+    */
+  private def kmeansCentroids(e: DataFrame, nCells: Int,
+                              iters: Int): HeldMatrix =
+    graft.Caches.memo("ivf-kmeans",
+        s"${e.queryExecution.analyzed.semanticHash()}|c=$nCells|i=$iters") {
+      lloyd(trainingSample(e), nCells, iters)(cents =>
+        v => VectorTextImpl.nearestCell(v, cents))
     }
 
   /** Corpus-side IVF cell assignment: each vector's argmax cell through
@@ -191,7 +194,7 @@ object Similarity {
     * qerr keeps the bits of the kernel's score.
     */
   private def corpusCellsScored(e: DataFrame,
-                                cents: IvfCentroids): DataFrame = {
+                                cents: HeldMatrix): DataFrame = {
     val cv = ivf_centroid(col("cell"), cents)
     e.select(ivf_cell(col("v"), cents).as("cell"),
         col("vec_id").as("nid"), col("v").as("nv"), col("vn").as("nn"))
@@ -199,7 +202,7 @@ object Similarity {
         lit(1.0) - dotp(col("nv"), cv) / sqrt(dotp(cv, cv)) / col("nn"))
   }
 
-  private def corpusCells(e: DataFrame, cents: IvfCentroids): DataFrame =
+  private def corpusCells(e: DataFrame, cents: HeldMatrix): DataFrame =
     corpusCellsScored(e, cents).drop("qerr")
 
   /** IVF ANN top-k: corpus vectors index into their argmax cell (one narrow
@@ -296,10 +299,7 @@ object Similarity {
       if (pqM <= 0) scored.drop("qerr")
       else {
         val cbs = pqCodebooks(e, cents, pqM, pqK, iters)
-        cbs.zipWithIndex.flatMap { case (cb, s) =>
-          cb.zipWithIndex.map { case (c, i) => (s, i, c) } }
-          .toDF("sub", "code", "cv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+        writeCodebooks(spark, cbs, s"$dir/codebooks")
         withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
       }
     // postings and the gen-0 stats baseline are independent writes over
@@ -318,61 +318,44 @@ object Similarity {
   // -------------------------------------------------------------------------
 
   /** Per-subspace PQ codebooks over coarse-assignment RESIDUALS: each
-    * bounded-sample vector assigns to its argmax cell
+    * [[trainingSample]] vector assigns to its argmax cell
     * ([[graft.functions.VectorTextImpl.nearestCell]], the cell the build
-    * stores it under), its residual v − centroid(cell) is
-    * split into `m` contiguous subspaces, and each subspace k-means
-    * (`ksub` codewords, L2) independently — sequential driver double
-    * math, bit-reproducible, so a rebuild over an unchanged corpus
-    * retrains identical codebooks. RESIDUAL encoding is the standard
-    * IVFADC choice for a reason that the clustered fixture makes
-    * falsifiable: raw-vector codes collapse a tight cluster to one code
-    * word (ADC then cannot rank within the cluster at all — exactly
-    * where the neighbors are), while residuals ARE the within-cell
-    * geometry. The serving cost is one extra dot(q, centroid) per
-    * (probe, cell) — probe-side, never per candidate ([[pqRoute]]).
+    * stores it under), its residual v − centroid(cell) splits into `m`
+    * contiguous subspaces, and each subspace runs [[lloyd]] (`ksub`
+    * codewords, assignment by squared-L2 `<`) independently — so a
+    * rebuild over an unchanged corpus retrains identical codebooks.
+    * RESIDUAL encoding is the standard IVFADC choice for a reason that
+    * the clustered fixture makes falsifiable: raw-vector codes collapse a
+    * tight cluster to one code word (ADC then cannot rank within the
+    * cluster at all — exactly where the neighbors are), while residuals
+    * ARE the within-cell geometry. The serving cost is one extra
+    * dot(q, centroid) per (probe, cell) — probe-side, never per
+    * candidate ([[pqRoute]]).
     */
-  private def pqCodebooks(e: DataFrame, cents: IvfCentroids,
-                          m: Int, ksub: Int, iters: Int,
-                          maxSample: Int = 4096): Seq[Seq[Seq[Double]]] = {
-    val sample = e.orderBy("vec_id").limit(maxSample)
-      .select("v").collect().map(_.getSeq[Double](0).toArray)
+  private def pqCodebooks(e: DataFrame, cents: HeldMatrix,
+                          m: Int, ksub: Int, iters: Int): Seq[HeldMatrix] = {
+    val sample = trainingSample(e)
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim is not divisible into $m subspaces")
     val sd = dim / m
     val residuals = sample.map { v =>
-      val cv = cents.cents(VectorTextImpl.nearestCell(v, cents))
-      val r = new Array[Double](dim)
-      var i = 0
-      while (i < dim) { r(i) = v(i) - cv(i); i += 1 }
-      r
+      val cv = cents.rows(VectorTextImpl.nearestCell(v, cents))
+      Array.tabulate(dim)(i => v(i) - cv(i))
     }
     (0 until m).map { s =>
       val sub = residuals.map(v =>
         java.util.Arrays.copyOfRange(v, s * sd, (s + 1) * sd))
-      val stride = math.max(1, sub.length / ksub)
-      var cents: IndexedSeq[Array[Double]] = (0 until ksub)
-        .map(i => sub(math.min(i * stride, sub.length - 1)).clone())
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(ksub, sd)(0.0)
-        val counts = new Array[Int](ksub)
-        sub.foreach { v =>
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < ksub) {
-            var d = 0.0; var i = 0
-            while (i < sd) { val t = v(i) - cents(c)(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          var i = 0
-          while (i < sd) { sums(best)(i) += v(i); i += 1 }
-          counts(best) += 1
+      lloyd(sub, ksub, iters) { cents => v =>
+        var best = 0; var bestD = Double.MaxValue
+        var c = 0
+        while (c < ksub) {
+          var d = 0.0; var i = 0
+          while (i < sd) { val t = v(i) - cents.rows(c)(i); d += t * t; i += 1 }
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
         }
-        cents = (0 until ksub).map(c =>
-          if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
+        best
       }
-      cents.map(c => c.toIndexedSeq: Seq[Double]): Seq[Seq[Double]]
     }
   }
 
@@ -380,41 +363,56 @@ object Similarity {
     * column `vCol` under coarse assignment column `cellCol`: the row's
     * residual (v − centroid(cell), one zip_with against the cell's
     * [[graft.functions.IvfCentroid]] vector) splits into subspaces, and
-    * per subspace the argmin-L2 codeword is computed as codegen'd
-    * per-code score columns (dot(r, c) − |c|²/2, i.e. argmin L2 with the
-    * common |r|² term dropped) + a first-match when-chain. The
-    * expression is a pure function of (vector, cell, centroids,
-    * codebooks), so append-encoded rows are BIT-identical to a rebuild's
-    * encoding under the same quantizers.
+    * each subspace's code is its nearest codeword by squared L2 through
+    * the codegen'd [[graft.functions.IvfCells]] argmax (`l2` mode:
+    * scores dot(r, c) − |c|²/2, the common |r|² term dropped; first
+    * index wins ties). The expression is a pure function of (vector,
+    * cell, centroids, codebooks), so append-encoded rows are
+    * BIT-identical to a rebuild's encoding under the same quantizers.
     */
-  private def withCodes(df: DataFrame, vCol: String, cellCol: String,
-                        cents: IvfCentroids,
-                        cbs: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val sd = cbs.head.head.size
+  private[graft] def withCodes(df: DataFrame, vCol: String, cellCol: String,
+                               cents: HeldMatrix,
+                               cbs: Seq[HeldMatrix]): DataFrame = {
+    val sd = cbs.head.dim
     val res = zip_with(col(vCol), ivf_centroid(col(cellCol), cents),
       (x, c) => x - c)
-    val withRes = df.withColumn("__res", res)
-    val codeCols = cbs.indices.map { s =>
-      val sub = slice(col("__res"), s * sd + 1, sd)
-      val scores = cbs(s).map { c =>
-        val halfSq = c.foldLeft(0.0)((a, x) => a + x * x) / 2.0
-        dotp(sub, typedlit(c)) - lit(halfSq)
-      }
-      val mx = if (scores.size == 1) scores.head else greatest(scores: _*)
-      scores.indices.tail.foldLeft(when(scores(0) === mx, lit(0))) {
-        (w, cc) => w.when(scores(cc) === mx, lit(cc))
-      }.cast("int")
-    }
-    withRes.withColumn("codes", array(codeCols: _*)).drop("__res")
+    val codeCols = cbs.indices.map(s => ivf_cells(
+      slice(col("__res"), s * sd + 1, sd), cbs(s), 1, l2 = true)(0).cast("int"))
+    df.withColumn("__res", res)
+      .withColumn("codes", array(codeCols: _*)).drop("__res")
   }
 
-  /** Stored codebooks as cbs(sub)(code) = codeword vector; empty when the
+  /** The `codebooks` table: one (sub, code, cv) row per codeword. */
+  private def writeCodebooks(spark: org.apache.spark.sql.SparkSession,
+                             cbs: Seq[HeldMatrix], path: String): Unit = {
+    import spark.implicits._
+    cbs.zipWithIndex.flatMap { case (cb, s) =>
+      cb.toSeq.zipWithIndex.map { case (c, i) => (s, i, c) } }
+      .toDF("sub", "code", "cv")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  /** The ADC lookup table lut(s)(c) = dot(qv_s, cbs(s)(c)) as m x ksub
+    * CODEGEN'D dotp columns over held codewords ([[signatures]]' shape: a
+    * transform-over-literal HOF evaluates every dot interpreted, the
+    * probe-side bottleneck of ROUTEBENCH r14).
+    */
+  private[graft] def lookupTable(qv: Column, cbs: Seq[HeldMatrix]): Column = {
+    val sd = cbs.head.dim
+    array(cbs.indices.map { s =>
+      array((0 until cbs(s).size).map(c =>
+        dotp(slice(qv, s * sd + 1, sd),
+          ivf_centroid(lit(c.toLong), cbs(s)))): _*)
+    }: _*)
+  }
+
+  /** Stored codebooks, one held matrix per subspace; empty when the
     * index was built without PQ (the presence check every lifecycle op
     * keys off — no meta flag needed).
     */
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
                             dir: String,
-                            asOf: Option[Int] = None): Seq[Seq[Seq[Double]]] =
+                            asOf: Option[Int] = None): Seq[HeldMatrix] =
     // commit-keyed driver memo, same contract as readCentroids
     graft.sources.StoredIndex.memoByCommit("ivf-codebooks", dir, asOf) {
       graft.sources.StoredIndex.readTable(spark, s"$dir/codebooks",
@@ -422,7 +420,7 @@ object Similarity {
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
         .groupBy(_._1).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_._2).map(_._3).toSeq)
+        .map(sub => new HeldMatrix(sub._2.sortBy(_._2).map(_._3).toSeq))
     }
 
   /** IVF-PQ serving (IVFADC with exact re-rank) — per arriving probe:
@@ -506,7 +504,6 @@ object Similarity {
     require(cbs.nonEmpty,
       s"pq serving needs a PQ-enabled index under $indexDir " +
         "(ivfWriteIndex(..., pqM > 0))")
-    val sd = cbs.head.head.size
     val probesV = arrivals
       .select(col(idCol).cast("long").as("qid"),
         transform(col(embCol), _.cast("double")).as("qv"))
@@ -515,15 +512,8 @@ object Similarity {
     // over the RESIDUAL codebooks; dot(q, x̂) then decomposes as
     // dot(q, centroid(cell)) + Σ_s lut(s)(codes_s) — the centroid term is
     // per (probe, cell), computed on the exploded probe side, NEVER per
-    // candidate, so the per-candidate cost stays m table lookups.
-    // Built as m x ksub CODEGEN'D per-codeword dotp columns (the
-    // signatures()/withCodes discipline) — the transform-over-literal HOF
-    // form evaluates every dot interpreted and made the probe side the
-    // route tier's bottleneck (ROUTEBENCH r14)
-    val lut = array(cbs.indices.map { s =>
-      array(cbs(s).map(c =>
-        dotp(slice(col("qv"), s * sd + 1, sd), typedlit(c))): _*)
-    }: _*)
+    // candidate, so the per-candidate cost stays m table lookups
+    val lut = lookupTable(col("qv"), cbs)
     val cells = explode(ivf_cells(col("qv"), cents, nprobeEff)).as("cell")
     val probes = probesV
       .select(col("qid"), col("qv"), col("qn"), lut.as("lut"), cells)
@@ -596,12 +586,12 @@ object Similarity {
 
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             dir: String,
-                            asOf: Option[Int] = None): IvfCentroids =
+                            asOf: Option[Int] = None): HeldMatrix =
     // commit-keyed driver memo: centroids change only through commits
     // (retrain/rebuild), and collecting them was one plan-time job per
     // annRoute/pqRoute serve (StoredIndex.memoByCommit doc)
     graft.sources.StoredIndex.memoByCommit("ivf-centroids", dir, asOf) {
-      new IvfCentroids(graft.sources.StoredIndex.readTable(spark,
+      new HeldMatrix(graft.sources.StoredIndex.readTable(spark,
           s"$dir/centroids", "cell BIGINT, cv ARRAY<DOUBLE>", asOf)
         .orderBy("cell").collect().map(_.getSeq[Double](1).toSeq).toSeq)
     }
@@ -828,11 +818,7 @@ object Similarity {
         if (oldCbs.isEmpty) scored.drop("qerr")
         else {
           val cbs = pqCodebooks(e, cents, oldCbs.size, oldCbs.head.size, iters)
-          cbs.zipWithIndex.flatMap { case (cb, s) =>
-            cb.zipWithIndex.map { case (c, i) => (s, i, c) } }
-            .toDF("sub", "code", "cv")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(t.stage("codebooks"))
+          writeCodebooks(spark, cbs, t.stage("codebooks"))
           withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
         }
       StoredIndex.writeByPart(post, "cell", t.stage("postings"))
@@ -1121,25 +1107,18 @@ object Similarity {
   // -------------------------------------------------------------------------
 
   /** Per-table LSH signatures of a vector: one array<long> of `tables`
-    * entries, each packing `planes` sign bits.
-    *
-    * Codegen note: each plane is its own `dotp(v, <array literal>)` column
-    * — one Literal node per plane (round 1 inlined tables*planes*dim SCALAR
-    * literals, which exploded the generated code; round 2 folded everything
-    * into one matrix literal + a `transform` HOF, which evaluates the dot
-    * products INTERPRETED and made the index build lose to the codegen'd
-    * brute-force scan it exists to beat). The per-plane columns keep the
-    * whole signature computation inside whole-stage codegen; bit packing is
-    * plain integer arithmetic (identical signature values to the HOF form:
-    * first plane = MSB).
+    * entries, each packing `planes` sign bits (first plane = MSB). Each
+    * plane is its own codegen'd `dotp` column over a row of one held
+    * hyperplane matrix: a `transform` HOF over the matrix evaluates the
+    * dots interpreted, which lost the index build to the brute-force scan.
     */
-  private def signatures(v: Column, planes: Int, tables: Int,
-                         dim: Int): Column = {
-    val bit = (i: Int) => {
-      val plane = typedlit((0 until dim)
-        .map(d => planeComponent(i / planes, i % planes, d)))
-      when(dotp(v, plane) >= 0, lit(1L)).otherwise(lit(0L))
-    }
+  private[graft] def signatures(v: Column, planes: Int, tables: Int,
+                                dim: Int): Column = {
+    val hyper = new HeldMatrix((0 until tables * planes).map(i =>
+      (0 until dim).map(d => planeComponent(i / planes, i % planes, d))))
+    val bit = (i: Int) =>
+      when(dotp(v, ivf_centroid(lit(i.toLong), hyper)) >= 0, lit(1L))
+        .otherwise(lit(0L))
     array((0 until tables).map { t =>
       (0 until planes).map(j => bit(t * planes + j) * (1L << (planes - 1 - j)))
         .reduce(_ + _)

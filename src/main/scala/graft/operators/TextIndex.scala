@@ -393,10 +393,6 @@ object TextIndex {
         .groupBy("term", "doc_id").agg(count(lit(1)).as("tf")))
       .withColumn("tb", tbCol(nBuckets))
 
-  private def doclensOf(tok: DataFrame, dlRange: Long): DataFrame =
-    tok.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      .withColumn("dr", expr(s"doc_id div ${dlRange}L"))
-
   /** One `termdf` delta segment over a batch: per-(term, tb) df plus the
     * batch's score envelope (max tf, min dl) — O(batch vocabulary) rows.
     */
@@ -921,21 +917,14 @@ object TextIndex {
     * still metadata-sized: a 10k-query batch of 3-term queries probes
     * <= 30k terms worst case, a few hundred KB; the bucket set pushes as
     * a `tb IN (...)` PARTITION filter (TextIndexSpec asserts the pruning
-    * at nbuckets = 1024) and — when `termPushdownCap` > 0 and the batch
-    * vocabulary is under it — the term set pushes as a DATA filter too,
-    * for row-group stats/dictionary pruning where postings files carry
-    * many row groups (the 100 TB layout). Default OFF: measured on the
-    * single-row-group local fixtures, the per-row string-set filter costs
-    * more than it saves (375 -> 305 decisions/s on the 50k-doc Zipf
-    * corpus) because the equi-join already discards non-query terms; the
-    * knob exists for deployments whose scan actually prunes. Batches
-    * whose vocabulary exceeds the cap fall back to the correct
-    * full-disjunction scan — the cap bounds the pushed literal list, not
-    * correctness.
+    * at nbuckets = 1024). The term set is not pushed as a data filter:
+    * the equi-join on (term) already discards non-query terms, and on
+    * single-row-group postings files the per-row string-set filter cost
+    * more than it saved (375 -> 305 decisions/s on the 50k-doc Zipf
+    * corpus).
     */
   def bm25Route(queries: DataFrame, indexDir: String, k: Int = 20,
                 idCol: String = "qid", textCol: String = "qtext",
-                termPushdownCap: Int = 0,
                 asOf: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
     val m0 = metaFull(spark, indexDir)
@@ -945,16 +934,9 @@ object TextIndex {
     val probes = queries.select(col(idCol).cast("long").as("qid"),
         explode(m0.tokenize(col(textCol))).as("term"))
       .dropDuplicates("qid", "term")
-    val probed = probes
-      .select(col("term"), tbCol(nb).as("tb")).distinct()
-      .collect()
-    val wanted = probed.map(_.getLong(1)).distinct.toSeq
-    val batchTerms =
-      if (termPushdownCap > 0 && probed.length <= termPushdownCap)
-        Some(probed.map(_.getString(0)).distinct.toSeq)
-      else None
-    val scored = scoredTerms(spark, indexDir, probes, wanted, batchTerms,
-        asOf)
+    val wanted = probes.select(tbCol(nb).as("tb")).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    val scored = scoredTerms(spark, indexDir, probes, wanted, None, asOf)
       .groupBy("qid", "doc_id").agg(sum(col("tscore")).as("score"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("doc_id"))

@@ -324,7 +324,7 @@ object BulkSink {
     * a bulk-less batch dir, not a pre-probe. The r8 limit-1 `isEmpty`
     * pre-probe was a second execution of the decode plane per batch and
     * measured ~0.4 s of the per-batch constant at 1 s triggers
-    * (StreamProbe r10: full-sink 91 µs/row vs one-pass 75 µs/row at 10k
+    * (STREAMBENCH_r10.json: full-sink 91 µs/row vs one-pass 75 µs/row at 10k
     * rows) — a quiet tick now costs one empty write job plus a driver-side
     * directory check, and a busy tick pays NOTHING extra. The cleanup
     * keeps the r8 guard's invariant: no empty `batch=<id>` dirs accumulate
@@ -337,7 +337,7 @@ object BulkSink {
     * One pass matters at small triggers: the previous persist +
     * `isEmpty`-probe + cached-write shape executed the decode plane into
     * the block cache and read it back, pushing a 10 k-row batch past a 1 s
-    * trigger budget (StreamProbe attribution, round 7: two-pass ~1.9 s vs
+    * trigger budget (STREAMBENCH_r07.json attribution: two-pass ~1.9 s vs
     * single-pass ~0.83 s on identical input) — the death-spiral threshold.
     * Single execution also keeps the `observe()` counters exact with no
     * cache to protect them.

@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HeldMatrix
+import graft.functions.gcolumns.ivf_centroid
+
 /** Deterministic SYNTHETIC bench fixtures (VERDICT r12 items #1 and #5).
   *
   * The driver testdata's `documents` table has a ~31-word vocabulary with
@@ -123,10 +126,10 @@ object SynthFixtures {
       val norm = math.sqrt(v.map(x => x * x).sum)
       v.map(_ / norm).toSeq
     }
-    val cLit = typedlit(centers)
+    val center = ivf_centroid(pmod(id, lit(clusters.toLong)),
+      new HeldMatrix(centers))
     transform(sequence(lit(1), lit(dim)), d =>
-      (element_at(element_at(cLit,
-          (pmod(id, lit(clusters.toLong)) + 1).cast("int")), d) +
+      (element_at(center, d) +
         (u01(id, d, seed) - lit(0.5)) * lit(2.0 * noise))
         .cast("float"))
   }

@@ -40,15 +40,13 @@ object SynthProbe {
     println(f"query-term df: avg=${qTermDf.getDouble(0)}%.1f " +
       s"median=${qTermDf.get(2)} max=${qTermDf.getLong(1)} (corpus $n)")
 
-    val cap = args.drop(2).headOption.map(_.toInt).getOrElse(30000)
     val dir = java.nio.file.Files.createTempDirectory("graft-synthprobe")
       .toString
     val t0 = System.nanoTime()
     graft.operators.TextIndex.writeBm25Index(docs, dir, nBuckets = 64)
     val tBuild = (System.nanoTime() - t0) / 1e9
     def route(): Long =
-      graft.operators.TextIndex.bm25Route(qs, dir, k = 10,
-        termPushdownCap = cap).count()
+      graft.operators.TextIndex.bm25Route(qs, dir, k = 10).count()
     route() // warm
     val times = (1 to 3).map { _ =>
       val t = System.nanoTime(); route(); (System.nanoTime() - t) / 1e9

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
-import graft.functions.{IvfCentroids, VectorTextImpl}
+import graft.functions.{HeldMatrix, VectorTextImpl}
 import graft.functions.gcolumns.{dotp, ivf_cell, ivf_cells}
 import graft.operators.Similarity
 import graft.sources.StoredIndex
@@ -88,7 +88,7 @@ class IvfCellsSpec extends SparkSpec {
     def rows(cs: Seq[Column]): Map[Long, Seq[Any]] =
       df.select(col("id") +: cs: _*).collect()
         .map(r => r.getLong(0) -> cs.indices.map(i => r.get(i + 1))).toMap
-    val want = rows(pairs.map(_._3))
+    val want = PlanLiteralGuard.allowing(rows(pairs.map(_._3)))
     val kernels = pairs.map(_._2)
     val codegen = withConf("spark.sql.codegen.wholeStage" -> "true",
         "spark.sql.codegen.fallback" -> "false") {
@@ -111,7 +111,7 @@ class IvfCellsSpec extends SparkSpec {
   private def assertSameCells(vs: Seq[Seq[java.lang.Double]],
                               cents: Seq[Seq[Double]],
                               nprobes: Seq[Int]): Unit = {
-    val held = new IvfCentroids(cents)
+    val held = new HeldMatrix(cents)
     assertSame(vs, nprobes.map(p => (s"nprobe $p",
       ivf_cells(col("v"), held, p), oracleCells(col("v"), cents, p))))
   }
@@ -120,12 +120,13 @@ class IvfCellsSpec extends SparkSpec {
     * [[VectorTextImpl.nearestCell]] vs the former when-chain. */
   private def assertSameArgmax(vs: Seq[Seq[java.lang.Double]],
                                cents: Seq[Seq[Double]]): Unit = {
-    val held = new IvfCentroids(cents)
+    val held = new HeldMatrix(cents)
     val want = oracleArgmax(col("v"), lit(1.0), cents)._1
     // a one-cell index is a constant assignment, no kernel
     assertSame(vs, Seq(("argmax", ivf_cell(col("v"), held), want)),
       kernelInPlan = cents.size > 1)
-    val oracle = vectors(vs).select(col("id"), want).collect()
+    val oracle = PlanLiteralGuard.allowing(
+        vectors(vs).select(col("id"), want).collect())
       .map(r => r.getLong(0) -> r.get(1)).toMap
     for ((v, id) <- vs.zipWithIndex if v != null) {
       val got = VectorTextImpl.nearestCell(v.map(_.doubleValue).toArray, held)
@@ -173,7 +174,7 @@ class IvfCellsSpec extends SparkSpec {
       .updated(3, Seq.fill(4)(0.0))
     val vs = Seq.fill(12)(boxed(Seq.fill(4)(rnd.nextGaussian()))) :+ null
     withConf("spark.sql.ansi.enabled" -> "true") {
-      val held = new IvfCentroids(cents)
+      val held = new HeldMatrix(cents)
       for (c <- Seq(ivf_cells(col("v"), held, 2),
                     oracleCells(col("v"), cents, 2),
                     ivf_cell(col("v"), held),
@@ -209,9 +210,9 @@ class IvfCellsSpec extends SparkSpec {
           transform(col("embedding"), _.cast("double")).as("v"))
         .withColumn("vn", sqrt(dotp(col("v"), col("v"))))
       val (cell, qerr) = oracleArgmax(col("v"), col("vn"), cents)
-      val want = vecs.select(col("nid"), cell.as("cell"), qerr.as("qerr"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-        .toMap
+      val want = PlanLiteralGuard.allowing(
+          vecs.select(col("nid"), cell.as("cell"), qerr.as("qerr")).collect())
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
       val got = StoredIndex.readTable(spark, s"$dir/postings",
           "nid BIGINT, cell BIGINT").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap

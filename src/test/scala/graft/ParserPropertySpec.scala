@@ -41,9 +41,8 @@ class ParserPropertySpec extends SparkSpec {
   test("parser total-function property: <=1 doc per message, no throw") {
     import spark.implicits._
     val msgs = sample(500)
-    val df = msgs.toDF("msg")
-      .withColumn("doc", LogPipeline.parseLog(lit("fn"), lit("v"),
-        col("msg"), lit("r")))
+    val df = LogPipeline.parseStaged(msgs.toDF("msg"), lit("fn"), lit("v"),
+        col("msg"), lit("r"))
     val out = df.select(col("msg"), col("doc")).collect() // must not throw
     assert(out.length == msgs.size)
     // dropped iff platform prefix
@@ -90,9 +89,8 @@ class ParserPropertySpec extends SparkSpec {
     } yield (s"""{"$k":"$v","message":"$mv"}""", mv)
     val cases = (0 until 200).flatMap(i => gen.apply(params, Seed(1000L + i)))
     assert(cases.nonEmpty)
-    val got = cases.toDF("msg", "mv")
-      .withColumn("doc", LogPipeline.parseLog(lit("fn"), lit("v"),
-        col("msg"), lit("r")))
+    val got = LogPipeline.parseStaged(cases.toDF("msg", "mv"), lit("fn"),
+        lit("v"), col("msg"), lit("r"))
       .collect()
     got.foreach { r =>
       assert(!r.isNullAt(2), s"dropped: ${r.getString(0)}")

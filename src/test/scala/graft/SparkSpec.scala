@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+/** Shared local session for all suites (one JVM-wide session, lazy),
+  * built once with the [[PlanLiteralGuard]] extension.
+  */
 object SparkSpec {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -12,6 +14,7 @@ object SparkSpec {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+    .withExtensions(new PlanLiteralGuard)
     .getOrCreate()
 }
 
