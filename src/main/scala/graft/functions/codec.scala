@@ -227,6 +227,20 @@ object gcolumns {
   /** Gzip-compress a binary column. */
   def gzip(c: Column): Column = Bridge.column(Gzip(Bridge.expression(c)))
 
+  /** The reference's `error.type` of a message column, or null
+    * (codegen'd, ASCII-only case fold; [[ErrorType]]). */
+  def error_type(c: Column): Column = Bridge.column(ErrorType(Bridge.expression(c)))
+
+  /** Whether a string column's first non-whitespace byte is `{`
+    * ([[JsonObjectLead]]). */
+  def json_object_lead(c: Column): Column =
+    Bridge.column(JsonObjectLead(Bridge.expression(c)))
+
+  /** A string map column without the keys of a string array column
+    * (codegen'd; [[MapWithout]]). */
+  def map_without(m: Column, keys: Column): Column =
+    Bridge.column(MapWithout(Bridge.expression(m), Bridge.expression(keys)))
+
   /** 64-bit SimHash of a token array column. */
   def simhash64(c: Column): Column = Bridge.column(SimHash64(Bridge.expression(c)))
 

@@ -4,16 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.gcolumns.gunzip
+import graft.functions.gcolumns.{error_type, gunzip, json_object_lead, map_without}
 
 /** The reference data plane (`/root/reference/shipper.js`) re-expressed as a
   * narrow, shuffle-free Spark column pipeline.
   *
   * Every operator below is a pure `Column` transform, so the whole
-  * decode -> parse -> classify -> enrich path fuses into a single
-  * whole-stage-codegen stage with no Exchange — the property that lets it
-  * scale linearly across executors at 100 TB (parallelism = input splits,
-  * exactly like the reference's parallelism = Kinesis shards).
+  * decode -> parse -> classify -> enrich path is one stage with no
+  * Exchange, and every operator of it but the decode projection
+  * (`from_json` evaluates interpreted) fuses into whole-stage codegen — the
+  * property that lets it scale linearly across executors at 100 TB
+  * (parallelism = input splits, exactly like the reference's parallelism =
+  * Kinesis shards).
   *
   * Semantics are bit-for-bit those of the reference where observable:
   *  - S6 lambdaName        (shipper.js:28)  last `/`-segment of logGroup
@@ -91,30 +93,28 @@ object LogPipeline {
   val structuredLogPattern: String =
     "[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[1-2][0-9]|3[0-1])T(2[0-3]|[01][0-9]):[0-5][0-9]:[0-5][0-9].[0-9][0-9][0-9]Z([ \t])[a-zA-Z0-9]{8}-[a-zA-Z0-9]{4}-[a-zA-Z0-9]{4}-[a-zA-Z0-9]{4}-[a-zA-Z0-9]{12}([ \t])(.*)"
 
-  /** S11: first-match-wins severity classifier (shipper.js:31-49).
-    *
-    * Returns `error.type` or null. The patterns are literal substrings
-    * compiled with the `i` flag in the reference (shipper.js:23-25), so
-    * case-insensitive `contains` (codegen'd, no regex engine) is equivalent
-    * and faster. Branch order is load-bearing: "module initialization error"
-    * contains "error", so it classifies as *runtime*, never configuration —
-    * the configuration branch is only reachable via "unable to import module".
+  /** S11: first-match-wins classifier (shipper.js:31-49): `error.type` or
+    * null, one codegen'd scan of the message's UTF-8 bytes
+    * ([[graft.functions.ErrorType]]). The patterns are literal substrings
+    * compiled with the `i` flag and no `u` flag (shipper.js:23-25), which
+    * folds case only within ASCII: "TASK TIMED OUT" spelled with U+212A
+    * KELVIN SIGN does not match, as in node, where a Unicode `lower()`
+    * would fold it to `k`. Branch order is load-bearing: "module
+    * initialization error" contains "error", so it classifies as
+    * *runtime*, never configuration — the configuration branch is only
+    * reachable via "unable to import module".
     */
-  def errorType(msg: Column): Column = {
-    val m = lower(msg)
-    when(m.contains("error"), "runtime")
-      .when(m.contains("module initialization error") ||
-        m.contains("unable to import module"), "configuration")
-      .when(m.contains("task timed out") ||
-        m.contains("process exited before completing"), "timeout")
-  }
+  def errorType(msg: Column): Column = error_type(msg)
 
   /** S11: severity = 'error' iff any classifier branch hit, else the 'debug'
     * default installed by enrichment (shipper.js:83,33,38,44). Null-safe:
     * null message stays debug (declared deviation — see class doc).
     */
-  def severity(msg: Column): Column =
-    when(errorType(msg).isNotNull, "error").otherwise("debug")
+  def severity(msg: Column): Column = severityOf(errorType(msg))
+
+  /** Severity from an already classified `error_type` column. */
+  private def severityOf(errorType: Column): Column =
+    when(errorType.isNotNull, "error").otherwise("debug")
 
   // ---------------------------------------------------------------------------
   // S10: 3-way parse dispatch (JSON -> structured -> raw), shipper.js:62-112
@@ -127,10 +127,12 @@ object LogPipeline {
     * stringify-nested-values semantics as `from_json` to map<string,string>;
     * only map key order differs, sorted vs insertion — irrelevant to the
     * open-schema attrs semantics) and the type probe reads its `$.message`
-    * subtree. Round 1 parsed every message twice (from_json + the guard).
+    * subtree. Only a text whose first byte after JSON whitespace is `{` can
+    * be the JSON *object* the JSON branch needs, so every other message
+    * skips the parser (and the error it would build for a non-JSON text).
     */
   private def variantOf(msg: Column): Column =
-    call_function("try_parse_json", msg)
+    when(json_object_lead(msg), call_function("try_parse_json", msg))
 
   /** Variant type of the parsed `$.message` value: 'STRING' for a JSON
     * object with a string message, other type names / VOID / null otherwise.
@@ -140,17 +142,48 @@ object LogPipeline {
       call_function("variant_get", v, lit("$.message")))
 
   /** Staged parse over a frame: adds the variant + parsed-map projections,
-    * then the doc column built from them. Extra input columns pass through
-    * untouched.
+    * the branch, the branch-selected message and its one classification,
+    * then the doc column built from them (null for a platform message).
+    * Extra input columns pass through untouched.
     */
   def parseStaged(df: DataFrame, functionName: Column, functionVersion: Column,
-                  msg: Column, region: Column): DataFrame =
+                  msg: Column, region: Column): DataFrame = {
+    // shipper.js:50-57: JS split('\t', 3) TRUNCATES — "a\tb\tc\td" gives
+    // [a,b,c], dropping everything after the third field. Spark's limit-3
+    // split instead keeps the tail inside element 3 ("c\td"), so we take
+    // element 3 of the UNLIMITED split, which is exactly the JS third field
+    // (cut at the next tab). try_element_at: a regex hit with <3 tab parts
+    // (e.g. space-separated columns) yields null fields — the declared
+    // row-level-containment deviation (the reference would throw out of
+    // checkLogError and poison the whole batch, shipper.js:91).
+    val parts = split(msg, "\t")
+    val (jmap, b) = (col("__jmap"), col("__branch"))
+    // shipper.js:74: requestId/timestamp are destructured OUT of the spread;
+    // message stays in parsedMessage and becomes doc.message.
+    def field(jsonKey: String, part: Int): Column =
+      when(b === 1, element_at(jmap, jsonKey))
+        .when(b === 2, try_element_at(parts, lit(part)))
     df.withColumn("__v", variantOf(msg))
       .withColumn("__jmap", col("__v").try_cast(userJsonType))
-      .withColumn("__branch", branchOf(msg, col("__v"), col("__jmap")))
-      .withColumn("doc", docFromParsed(functionName, functionVersion, msg,
-        col("__jmap"), col("__branch"), region))
-      .drop("__v", "__jmap", "__branch")
+      .withColumn("__branch", branchOf(msg, col("__v"), jmap))
+      .withColumn("__msg", field("message", 3).otherwise(msg))
+      .withColumn("__et", errorType(col("__msg")))
+      // null on the platform test itself, not on `b === 0`: the optimizer
+      // then pushes a consumer's `doc IS NOT NULL` filter below the parse
+      .withColumn("doc", when(isPlatformMessage(msg), lit(null)).otherwise(struct(
+        functionName.as("function_name"),
+        functionVersion.as("function_version"),
+        field("timestamp", 1).cast(StringType).as("timestamp"),
+        field("requestId", 2).cast(StringType).as("request_id"),
+        col("__msg").as("message"),
+        when(b === 1,
+            map_without(jmap, typedlit(Seq("timestamp", "requestId", "message"))))
+          .otherwise(map().cast(userJsonType)).as("attrs"),
+        region.as("region"), lit("lambda").as("type"),
+        severityOf(col("__et")).as("severity"),
+        col("__et").as("error_type"))))
+      .drop("__v", "__jmap", "__branch", "__msg", "__et")
+  }
 
   /** Parse-branch discriminant, evaluated ONCE per row:
     * 0 = platform drop, 1 = JSON, 2 = structured, 3 = raw.
@@ -174,85 +207,55 @@ object LogPipeline {
       .when(msg.rlike(structuredLogPattern), 2)
       .otherwise(3)
 
-  /** Doc construction as per-FIELD branch selects over the staged
-    * discriminant — the branch predicates (regex, variant probe) run once
-    * per row in [[branchOf]], the classifier runs once on the
-    * branch-selected message (round 1 built three whole doc structs with a
-    * classifier chain per struct; the generated code was the dominant
-    * Janino compile + eval cost of the pipeline).
-    */
-  private def docFromParsed(functionName: Column, functionVersion: Column,
-                            msg: Column, parsed: Column, b: Column,
-                            region: Column): Column = {
-    val emptyAttrs = map().cast(userJsonType)
-    // shipper.js:50-57: JS split('\t', 3) TRUNCATES — "a\tb\tc\td" gives
-    // [a,b,c], dropping everything after the third field. Spark's limit-3
-    // split instead keeps the tail inside element 3 ("c\td"), so we take
-    // element 3 of the UNLIMITED split, which is exactly the JS third field
-    // (cut at the next tab). try_element_at: a regex hit with <3 tab parts
-    // (e.g. space-separated columns) yields null fields — the declared
-    // row-level-containment deviation (the reference would throw out of
-    // checkLogError and poison the whole batch, shipper.js:91).
-    val parts = split(msg, "\t")
-    // shipper.js:74: requestId/timestamp are destructured OUT of the spread;
-    // message stays in parsedMessage and becomes doc.message.
-    val ts = when(b === 1, element_at(parsed, "timestamp"))
-      .when(b === 2, try_element_at(parts, lit(1)))
-    val rid = when(b === 1, element_at(parsed, "requestId"))
-      .when(b === 2, try_element_at(parts, lit(2)))
-    val m = when(b === 1, element_at(parsed, "message"))
-      .when(b === 2, try_element_at(parts, lit(3)))
-      .otherwise(msg)
-    val attrs = when(b === 1, map_filter(parsed, (k, _) =>
-      !k.isin("timestamp", "requestId", "message"))).otherwise(emptyAttrs)
-    val doc = struct(
-      functionName.as("function_name"),
-      functionVersion.as("function_version"),
-      ts.cast(StringType).as("timestamp"),
-      rid.cast(StringType).as("request_id"),
-      m.as("message"),
-      attrs.as("attrs"),
-      region.as("region"), lit("lambda").as("type"),
-      severity(m).as("severity"),
-      errorType(m).as("error_type"))
-    when(b === 0, lit(null)).otherwise(doc)
-  }
-
   // ---------------------------------------------------------------------------
   // Whole pipeline: Kinesis-shaped records -> parsed docs
   // ---------------------------------------------------------------------------
 
-  /** Decode one Kinesis record (S2 base64 -> S3 gunzip -> S4 from_json), drop
-    * control messages (S5). Input columns: `data` (base64 string), `region`.
-    * Output: `payload` struct + `region`, control records removed.
+  /** S2-S4: the CloudWatch payload of one base64'd gzip record. */
+  private def payloadOf(data: Column): Column =
+    from_json(gunzip(unbase64(data)).cast(StringType), payloadSchema)
+
+  /** S5: the payload is not a control message. */
+  private def isData(payload: Column): Column =
+    payload("messageType") =!= "CONTROL_MESSAGE"
+
+  /** Decode Kinesis records (S2 base64 -> S3 gunzip -> S4 from_json) and
+    * drop control messages (S5). Input columns: `data` (base64 string),
+    * `region`. Output: `payload` struct + `region`, control records removed.
+    * Each record is decoded once: the drop is an explode of a one-element
+    * array, because a Filter would be pushed below the decode projection
+    * and decode every record again.
     */
   def decodeRecords(df: DataFrame, dataCol: String = "data",
                     regionCol: String = "region"): DataFrame =
-    df.withColumn("payload",
-        from_json(gunzip(unbase64(col(dataCol))).cast(StringType), payloadSchema))
-      .filter(col("payload.messageType") =!= "CONTROL_MESSAGE")
-      .select(col("payload"), col(regionCol).as("region"))
+    df.select(payloadOf(col(dataCol)).as("payload"), col(regionCol).as("region"))
+      .select(explode(when(isData(col("payload")), array(col("payload"))))
+        .as("payload"), col("region"))
 
-  /** S6-S12 over decoded payloads: derive enrichment, explode logEvents (S8),
-    * drop platform messages, parse + classify. One output row per shipped doc,
-    * flattened to [[docColumns]].
+  /** S2-S8: one row per log event of the data records — `function_name`,
+    * `function_version` (S6, S7), `region` and the `logEvent` struct.
     */
-  def parsedDocs(decoded: DataFrame): DataFrame = {
-    val exploded = decoded
+  def logEvents(records: DataFrame, dataCol: String = "data",
+                regionCol: String = "region"): DataFrame =
+    decodeRecords(records, dataCol, regionCol)
       .withColumn("function_name", lambdaName(col("payload.logGroup")))
       .withColumn("function_version", lambdaVersion(col("payload.logStream")))
       .select(col("function_name"), col("function_version"), col("region"),
         explode(col("payload.logEvents")).as("logEvent"))
-    parseStaged(exploded, col("function_name"), col("function_version"),
+
+  /** S9-S12 over [[logEvents]] rows: drop platform messages, parse +
+    * classify. One output row per shipped doc: `keep`, then [[docColumns]].
+    */
+  def parsedDocs(events: DataFrame, keep: Column*): DataFrame =
+    parseStaged(events, col("function_name"), col("function_version"),
         col("logEvent.message"), col("region"))
       .filter(col("doc").isNotNull)
-      .select(col("doc.*"))
-  }
+      .select(keep :+ col("doc.*"): _*)
 
   /** Full data plane: raw Kinesis-shaped records to shipped docs. */
   def pipeline(records: DataFrame, dataCol: String = "data",
                regionCol: String = "region"): DataFrame =
-    parsedDocs(decodeRecords(records, dataCol, regionCol))
+    parsedDocs(logEvents(records, dataCol, regionCol))
 
   /** Reproduce the exact wire document of the reference sink (dotted keys,
     * user fields spread at top level, pipeline literals winning over user
@@ -265,20 +268,19 @@ object LogPipeline {
     * equivalent-at-the-sink deviation.
     */
   def wireJson(doc: DataFrame): Column = {
-    val closed = map_filter(
-      map(
-        lit("function.name"), col("function_name"),
-        lit("function.version"), col("function_version"),
-        lit("@timestamp"), col("timestamp"),
-        lit("function.request.id"), col("request_id"),
-        lit("message"), col("message"),
-        lit("region"), col("region"),
-        lit("type"), col("type"),
-        lit("severity"), col("severity"),
-        lit("error.type"), col("error_type")),
-      (_, v) => v.isNotNull)
+    val fields = Seq(
+      "function.name" -> "function_name", "function.version" -> "function_version",
+      "@timestamp" -> "timestamp", "function.request.id" -> "request_id",
+      "message" -> "message", "region" -> "region", "type" -> "type",
+      "severity" -> "severity", "error.type" -> "error_type")
+    def keysWhere(p: Column => Column): Column =
+      array(fields.map { case (k, c) => when(p(col(c)), lit(k)) }: _*)
+    // the non-null closed fields, in this order
+    val closed = map_without(
+      map(fields.flatMap { case (k, c) => Seq(lit(k), col(c)) }: _*),
+      keysWhere(_.isNull))
     // user attrs first, closed fields second => closed keys win on conflict,
     // matching the spread order of shipper.js:80-83 for region/type/severity.
-    to_json(map_concat(map_filter(col("attrs"), (k, _) => !map_contains_key(closed, k)), closed))
+    to_json(map_concat(map_without(col("attrs"), keysWhere(_.isNotNull)), closed))
   }
 }

@@ -170,16 +170,17 @@ object Similarity {
     cents
   }
 
-  /** The IVF coarse quantizer: [[lloyd]] on the [[trainingSample]], each
-    * sample assigned by [[graft.functions.VectorTextImpl.nearestCell]]
-    * (the driver form of the build-side [[graft.functions.IvfCells]]
-    * argmax). Memoized per (corpus, cells, iters) across queries.
+  /** The IVF coarse quantizer: [[lloyd]] on the [[trainingSample]] of `e`
+    * (`sample`, evaluated only on a memo miss), each sample assigned by
+    * [[graft.functions.VectorTextImpl.nearestCell]] (the driver form of the
+    * build-side [[graft.functions.IvfCells]] argmax). Memoized per
+    * (corpus, cells, iters) across queries.
     */
-  private def kmeansCentroids(e: DataFrame, nCells: Int,
-                              iters: Int): HeldMatrix =
+  private def kmeansCentroids(e: DataFrame, nCells: Int, iters: Int,
+                              sample: => Array[Array[Double]]): HeldMatrix =
     graft.Caches.memo("ivf-kmeans",
         s"${e.queryExecution.analyzed.semanticHash()}|c=$nCells|i=$iters") {
-      lloyd(trainingSample(e), nCells, iters)(cents =>
+      lloyd(sample, nCells, iters)(cents =>
         v => VectorTextImpl.nearestCell(v, cents))
     }
 
@@ -216,7 +217,7 @@ object Similarity {
     val key = s"$embKey|c=$nCells|i=$iters"
     // shared with annLsh/bruteForce callers — one vector cache per corpus
     val e = graft.Caches.cached("emb-vectors", embKey)(asDouble(emb))
-    val cents = kmeansCentroids(e, nCells, iters)
+    val cents = kmeansCentroids(e, nCells, iters, trainingSample(e))
     val corpus = graft.Caches.cached("ivf-index", key)(corpusCells(e, cents))
     val probes = e.filter(probeFilter)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("vn").as("qn"),
@@ -288,7 +289,9 @@ object Similarity {
     graft.sources.IndexCommit.deleteTree(java.nio.file.Paths.get(dir))
     val embKey = emb.queryExecution.analyzed.semanticHash().toString
     val e = graft.Caches.cached("emb-vectors", embKey)(asDouble(emb))
-    val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
+    // one sample collect serves both quantizers
+    lazy val sample = trainingSample(e)
+    val cents = kmeansCentroids(e, resolveCells(e, nCells), iters, sample)
     cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
       .toDF("cell", "cv")
       .write.mode("overwrite").parquet(s"$dir/centroids")
@@ -298,7 +301,7 @@ object Similarity {
     val post =
       if (pqM <= 0) scored.drop("qerr")
       else {
-        val cbs = pqCodebooks(e, cents, pqM, pqK, iters)
+        val cbs = pqCodebooks(sample, cents, pqM, pqK, iters)
         writeCodebooks(spark, cbs, s"$dir/codebooks")
         withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
       }
@@ -318,7 +321,7 @@ object Similarity {
   // -------------------------------------------------------------------------
 
   /** Per-subspace PQ codebooks over coarse-assignment RESIDUALS: each
-    * [[trainingSample]] vector assigns to its argmax cell
+    * [[trainingSample]] vector (`sample`) assigns to its argmax cell
     * ([[graft.functions.VectorTextImpl.nearestCell]], the cell the build
     * stores it under), its residual v − centroid(cell) splits into `m`
     * contiguous subspaces, and each subspace runs [[lloyd]] (`ksub`
@@ -332,9 +335,8 @@ object Similarity {
     * dot(q, centroid) per (probe, cell) — probe-side, never per
     * candidate ([[pqRoute]]).
     */
-  private def pqCodebooks(e: DataFrame, cents: HeldMatrix,
+  private def pqCodebooks(sample: Array[Array[Double]], cents: HeldMatrix,
                           m: Int, ksub: Int, iters: Int): Seq[HeldMatrix] = {
-    val sample = trainingSample(e)
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim is not divisible into $m subspaces")
     val sd = dim / m
@@ -805,7 +807,8 @@ object Similarity {
         .select(col("nid").as("vec_id"), col("nv").as("v"), col("nn").as("vn"))
       val e = graft.Caches.cached("emb-vectors",
         eRaw.queryExecution.analyzed.semanticHash().toString)(eRaw)
-      val cents = kmeansCentroids(e, resolveCells(e, nCells), iters)
+      lazy val sample = trainingSample(e)
+      val cents = kmeansCentroids(e, resolveCells(e, nCells), iters, sample)
       cents.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
         .toDF("cell", "cv")
         .write.mode("overwrite").parquet(t.stage("centroids"))
@@ -817,7 +820,8 @@ object Similarity {
       val post =
         if (oldCbs.isEmpty) scored.drop("qerr")
         else {
-          val cbs = pqCodebooks(e, cents, oldCbs.size, oldCbs.head.size, iters)
+          val cbs = pqCodebooks(sample, cents, oldCbs.size, oldCbs.head.size,
+            iters)
           writeCodebooks(spark, cbs, t.stage("codebooks"))
           withCodes(scored.drop("qerr"), "nv", "cell", cents, cbs)
         }

@@ -666,6 +666,7 @@ object TextIndex {
       def dlsChain(): Unit = {
         writeByPart(doclensFromPostings(newDocs, post, m.dlr), "dr",
           t.stage("doclens"))
+        IndexCommit.hit("bm25-append-doclens")
         val dls = StoredIndex.readDirTable(spark, t.stage("doclens"),
           "doc_id BIGINT, dl BIGINT, dr BIGINT")
         StoredIndex.parallelStages(
@@ -678,7 +679,10 @@ object TextIndex {
       }
       StoredIndex.parallelStages(Seq(
         () => dlsChain(),
-        () => writeByPart(termStatsOfPost(post), "tb", t.stage("termdf")))
+        () => {
+          writeByPart(termStatsOfPost(post), "tb", t.stage("termdf"))
+          IndexCommit.hit("bm25-append-termdf")
+        })
         ++ (if (m.fwd)
               Seq(() => writeByPart(fwdOf(post, m.dlr), "dr", t.stage("fwd")))
             else Nil))

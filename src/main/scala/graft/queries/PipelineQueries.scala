@@ -96,8 +96,9 @@ object PipelineQueries {
 
   /** S1-S12 end-to-end: events batched per user into CloudWatch payloads,
     * JSON-encoded, gzipped (custom Catalyst expression), base64'd — then fed
-    * through the full decode pipeline (S2 unbase64, S3 gunzip, S4 from_json,
-    * S5 control-message filter, S8 explode) and parsed back. The oracle
+    * through `LogPipeline.pipeline`'s own decode path (S2 unbase64, S3
+    * gunzip, S4 from_json, S5 control-message drop, S8 explode) and parsed
+    * back, keeping each event's id. The oracle
     * never sees the envelope: a hash match proves the codec round-trip.
     * Batches of users with user_id % 10 == 0 are marked CONTROL_MESSAGE and
     * must vanish (shipper.js:125).
@@ -122,16 +123,8 @@ object PipelineQueries {
       base64(gzip(encode(col("payload_json"), "UTF-8"))).as("data"),
       lit(LogCorpus.Region).as("region"))
 
-    val decoded = LogPipeline.decodeRecords(records)
-    val exploded = decoded
-      .withColumn("function_name", LogPipeline.lambdaName(col("payload.logGroup")))
-      .withColumn("function_version", LogPipeline.lambdaVersion(col("payload.logStream")))
-      .select(col("function_name"), col("function_version"), col("region"),
-        explode(col("payload.logEvents")).as("ev"))
-    val parsed = LogPipeline.parseStaged(exploded, col("function_name"),
-        col("function_version"), col("ev.message"), col("region"))
-      .filter(col("doc").isNotNull)
-      .select(col("ev.id").cast("long").as("event_id"), col("doc.*"))
+    val parsed = LogPipeline.parsedDocs(LogPipeline.logEvents(records),
+      col("logEvent.id").cast("long").as("event_id"))
     docOutput(parsed).orderBy("event_id")
   }
 

@@ -360,6 +360,14 @@ final class IndexTxn private (root: String, val dir: String,
       Files.deleteIfExists(p)
       Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
     }
+    dropStages()
+  }
+
+  /** Deletion of leftover stage dirs + emptied dirs: all a FAILED
+    * transaction cleans up — its retired files are still served, and the
+    * files it moved in are unpinned extras the next vacuum removes.
+    */
+  private[sources] def dropStages(): Unit = {
     val s = Files.walk(rootP)
     val stages = try s.iterator().asScala.toSeq
         .filter(p => Files.isDirectory(p) &&

@@ -108,39 +108,40 @@ object StoredIndex {
     * shared read-back parquet is immutable). Job-group/description
     * properties are inherited by the pool threads (SparkContext local
     * properties are InheritableThreadLocal), so bench attribution is
-    * unchanged. Exceptions propagate unwrapped; remaining stages are
-    * awaited so no write outlives the call.
+    * unchanged. The first failure propagates unwrapped, after every
+    * started stage has finished, so no write outlives the call and races
+    * the caller's stage cleanup; stages not yet started then never start.
     */
   def parallelStages(stages: Seq[() => Unit]): Unit =
     if (stages.sizeIs <= 1) stages.foreach(_.apply())
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
+      import java.util.concurrent.{Callable, CancellationException, ExecutionException, Executors, TimeUnit}
+      val pool = Executors.newFixedThreadPool(stages.size)
       try {
-        val futs = stages.map(s => pool.submit(new java.util.concurrent.Callable[Unit] {
+        val futs = stages.map(s => pool.submit(new Callable[Unit] {
           def call(): Unit = s()
         }))
         var firstErr: Throwable = null
         futs.foreach { f =>
           try f.get()
           catch {
-            case e: java.util.concurrent.ExecutionException =>
-              if (firstErr == null) {
-                firstErr = e.getCause
-                // first failure: cancel stages not yet started (queued
-                // futures) so a doomed build stops fanning out writes —
-                // in-flight siblings are still awaited below so no write
-                // outlives the call (ADVICE r18: siblings used to run to
-                // completion and tear extra stage dirs on append paths)
-                futs.foreach(_.cancel(false))
-              }
+            case _: CancellationException => // not started: cancelled below
             case e: Throwable => if (firstErr == null) {
-              firstErr = e
+              firstErr = e match {
+                case x: ExecutionException => x.getCause
+                case x => x
+              }
               futs.foreach(_.cancel(false))
             }
           }
         }
         if (firstErr != null) throw firstErr
-      } finally pool.shutdown()
+      } finally {
+        // cancel(false) leaves a running stage running (its get() returns
+        // at once), so wait for the pool to drain
+        pool.shutdown()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
     }
 
   /** Driver memo of values derived from ONE committed state: per-serve
@@ -441,10 +442,11 @@ object StoredIndex {
     * `body`, fires the `<failpoint>-before-commit` failpoint (plain
     * `before-commit` for an empty prefix), commits only when the
     * transaction added or retired a file, and cleans up. A body that
-    * throws leaves everything to the next call's vacuum — exactly a
-    * crash. Under a `parent` transaction (a nested index mutated inside
-    * its composite root's change) it only runs `body` on the parent's
-    * transaction scoped to `dir`; the parent commits both together.
+    * throws drops its stage dirs and leaves the rest to the next call's
+    * vacuum — as after a crash. Under a `parent` transaction (a nested
+    * index mutated inside its composite root's change) it only runs
+    * `body` on the parent's transaction scoped to `dir`; the parent
+    * commits both together.
     */
   def mutate[T](dir: String, failpoint: String,
                 parent: Option[IndexTxn] = None)(body: IndexTxn => T): T =
@@ -453,9 +455,12 @@ object StoredIndex {
       case None =>
         IndexCommit.vacuum(dir)
         val t = new IndexTxn(dir)
-        val out = body(t)
-        IndexCommit.hit(
-          if (failpoint.isEmpty) "before-commit" else s"$failpoint-before-commit")
+        val out = try {
+          val out = body(t)
+          IndexCommit.hit(
+            if (failpoint.isEmpty) "before-commit" else s"$failpoint-before-commit")
+          out
+        } catch { case e: Throwable => t.dropStages(); throw e }
         if (t.changed) t.commit()
         t.cleanup()
         out

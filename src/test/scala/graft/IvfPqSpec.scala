@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.graftspec.ListenerBus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.Similarity
 
@@ -182,5 +185,27 @@ class IvfPqSpec extends SparkSpec {
       // were wrong, ADC ordering for/among them would be noise
       assert(apndRecall >= 0.8, s"appended-probe recall too low: $apndRecall")
     } finally all.unpersist()
+  }
+
+  test("a PQ build and a PQ rebuild each collect the training sample once") {
+    val samples = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("TakeOrderedAndProject(limit=4096"))
+          samples.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a corpus no other test trains on, so the centroid memo misses
+    val dir = tmp()
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.ivfWriteIndex(emb.filter(col("vec_id") % 3 =!= 1), dir,
+        nCells = 8, pqM = 8, pqK = 16)
+      ListenerBus.drain(spark.sparkContext)
+      assert(samples.get == 1)
+      Similarity.rebuildIvfIndex(spark, dir, nCells = 6)
+      ListenerBus.drain(spark.sparkContext)
+      assert(samples.get == 2)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

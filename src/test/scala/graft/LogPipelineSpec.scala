@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType}
 
 import graft.functions.GzipCodec
 import graft.operators.LogPipeline
@@ -176,5 +177,111 @@ class LogPipelineSpec extends SparkSpec {
     assert(json.contains("\"custom\":\"c\""))
     assert(json.contains("\"function.name\":\"my-fn\""))
     assert(!json.contains("@timestamp"))  // absent fields omitted from wire doc
+  }
+
+  /** The former classifier and parse, kept as oracles: `lower()` +
+    * `contains`, and an unguarded `try_parse_json` on every message.
+    */
+  private object Unguarded {
+    private val userJsonType = MapType(StringType, StringType)
+
+    def errorType(msg: Column): Column = {
+      val m = lower(msg)
+      when(m.contains("error"), "runtime")
+        .when(m.contains("module initialization error") ||
+          m.contains("unable to import module"), "configuration")
+        .when(m.contains("task timed out") ||
+          m.contains("process exited before completing"), "timeout")
+    }
+
+    /** The doc `LogPipeline.parseStaged` builds with fn "fn", version "v"
+      * and region "r". */
+    def doc(msg: Column): Column = {
+      val v = call_function("try_parse_json", msg)
+      val parsed = v.try_cast(userJsonType)
+      val b = when(LogPipeline.isPlatformMessage(msg), 0)
+        .when(parsed.isNotNull && call_function("schema_of_variant",
+          call_function("variant_get", v, lit("$.message"))) === "STRING", 1)
+        .when(msg.rlike(LogPipeline.structuredLogPattern), 2)
+        .otherwise(3)
+      val parts = split(msg, "\t")
+      def field(key: String, part: Int): Column =
+        when(b === 1, element_at(parsed, key))
+          .when(b === 2, try_element_at(parts, lit(part)))
+      val m = field("message", 3).otherwise(msg)
+      when(b === 0, lit(null)).otherwise(struct(
+        lit("fn").as("function_name"), lit("v").as("function_version"),
+        field("timestamp", 1).cast(StringType).as("timestamp"),
+        field("requestId", 2).cast(StringType).as("request_id"),
+        m.as("message"),
+        when(b === 1, map_filter(parsed, (k, _) =>
+          !k.isin("timestamp", "requestId", "message")))
+          .otherwise(map().cast(userJsonType)).as("attrs"),
+        lit("r").as("region"), lit("lambda").as("type"),
+        when(errorType(m).isNotNull, "error").otherwise("debug").as("severity"),
+        errorType(m).as("error_type")))
+    }
+  }
+
+  /** (message, doc, the [[Unguarded]] doc) for each message. */
+  private def againstUnguarded(msgs: Seq[String]): Seq[(String, Row, Row)] = {
+    import spark.implicits._
+    LogPipeline.parseStaged(msgs.toDF("msg"), lit("fn"), lit("v"), col("msg"),
+        lit("r"))
+      .select(col("msg"), col("doc"), Unguarded.doc(col("msg")))
+      .collect().toSeq.map(r => (r.getString(0), r.getStruct(1), r.getStruct(2)))
+  }
+
+  test("KELVIN SIGN 'TASK TIMED OUT' is not a timeout: the fold is ASCII-only (JS /i without u)") {
+    val kelvin = "TAS\u212A TIMED OUT after 3.00 seconds"
+    val d = doc(ship(kelvin).head)
+    assert(d("error_type") == null)
+    assert(d("severity") == "debug")
+    // the Unicode lower() folds U+212A to 'k'; ASCII spellings
+    // still classify as both formulas do
+    val Seq((_, got, oracle), (_, ascii, asciiOracle)) =
+      againstUnguarded(Seq(kelvin, "TASK TIMED OUT after 3.00 seconds"))
+    assert(oracle.getAs[String]("error_type") == "timeout")
+    assert(got == Row.fromSeq(oracle.toSeq.dropRight(2) ++ Seq("debug", null)))
+    assert(ascii.getAs[String]("error_type") == "timeout" && ascii == asciiOracle)
+  }
+
+  test("a non-ASCII message containing 'Error' is runtime") {
+    val msg = "Überprüfung fehlgeschlagen: Error — 失败 ✗"
+    val d = doc(ship(msg).head)
+    assert(d("error_type") == "runtime")
+    assert(d("severity") == "error")
+    val Seq((_, got, oracle)) = againstUnguarded(Seq(msg))
+    assert(got == oracle)
+  }
+
+  test("leading JSON whitespace before '{' still takes the JSON branch") {
+    val obj = """{"message":"hi error","requestId":"r","k":"1"}"""
+    val msgs = Seq(" ", "\t", "\n", "\r", " \t\n\r ").map(_ + obj)
+    againstUnguarded(msgs).foreach { case (m, got, oracle) =>
+      assert(got.getAs[String]("message") == "hi error", s"not JSON: $m")
+      assert(got.getAs[String]("request_id") == "r")
+      assert(got.getAs[Map[String, String]]("attrs") == Map("k" -> "1"))
+      assert(got == oracle, s"differs from the unguarded parse: $m")
+    }
+  }
+
+  test("a leading BOM, JSON scalars and a JSON array take the unguarded parse's branch") {
+    val msgs = Seq("\uFEFF{\"message\":\"x\"}", "\f{\"message\":\"x\"}",
+      "\"message\"", "5", "true", "null", "[{\"message\":\"x\"}]",
+      " [1, 2]", "")
+    againstUnguarded(msgs).foreach { case (m, got, oracle) =>
+      assert(got.getAs[String]("message") == m, s"not raw: $m")
+      assert(got == oracle, s"differs from the unguarded parse: $m")
+    }
+  }
+
+  test("over the parser property generator the guarded parse equals the unguarded one") {
+    val msgs = ParserPropertySpec.sample(500)
+    val out = againstUnguarded(msgs)
+    assert(out.size == msgs.size)
+    out.foreach { case (m, got, oracle) =>
+      assert(got == oracle, s"differs from the unguarded parse: $m")
+    }
   }
 }

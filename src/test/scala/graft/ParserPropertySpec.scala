@@ -11,32 +11,7 @@ import graft.operators.LogPipeline
   * classifier is first-match-wins.
   */
 class ParserPropertySpec extends SparkSpec {
-
-  private val messageGen: Gen[String] = Gen.oneOf(
-    Gen.asciiPrintableStr,
-    Gen.alphaNumStr,
-    // JSON-ish objects, valid and broken
-    for (k <- Gen.alphaLowerStr; v <- Gen.alphaNumStr)
-      yield s"""{"$k":"$v","message":"$v"}""",
-    for (v <- Gen.alphaNumStr) yield s"""{"message":$v""", // broken json
-    Gen.const("{}"), Gen.const("[1,2,3]"), Gen.const("null"), Gen.const("5"),
-    // non-string message + nested decoy, unicode-escaped key
-    Gen.const("""{"message":5,"inner":{"message":"x"}}"""),
-    Gen.const("{\"\\u006dessage\":\"hi\"}"),
-    Gen.const("""{"message":["a"],"x":1}"""),
-    Gen.const("""{"message":null}"""),
-    Gen.const("START RequestId: x"),
-    Gen.const("2019-03-08T15:58:45.736Z\taaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee\tok"),
-    // structured-looking but malformed tails
-    Gen.const("2019-03-08T15:58:45.736Z aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee spaces"),
-    Gen.asciiStr.map(s => s"error $s"),
-    Gen.const(""))
-
-  private def sample(n: Int): Seq[String] = {
-    val params = Gen.Parameters.default
-    (0 until n).flatMap(i =>
-      messageGen.apply(params, Seed(i.toLong)))
-  }
+  import ParserPropertySpec.sample
 
   test("parser total-function property: <=1 doc per message, no throw") {
     import spark.implicits._
@@ -109,5 +84,34 @@ class ParserPropertySpec extends SparkSpec {
         |""".stripMargin).head()
     assert(row.getLong(0) != 0L)
     assert(row.getString(2) == "roundtrip")
+  }
+}
+
+object ParserPropertySpec {
+  private val messageGen: Gen[String] = Gen.oneOf(
+    Gen.asciiPrintableStr,
+    Gen.alphaNumStr,
+    // JSON-ish objects, valid and broken
+    for (k <- Gen.alphaLowerStr; v <- Gen.alphaNumStr)
+      yield s"""{"$k":"$v","message":"$v"}""",
+    for (v <- Gen.alphaNumStr) yield s"""{"message":$v""", // broken json
+    Gen.const("{}"), Gen.const("[1,2,3]"), Gen.const("null"), Gen.const("5"),
+    // non-string message + nested decoy, unicode-escaped key
+    Gen.const("""{"message":5,"inner":{"message":"x"}}"""),
+    Gen.const("{\"\\u006dessage\":\"hi\"}"),
+    Gen.const("""{"message":["a"],"x":1}"""),
+    Gen.const("""{"message":null}"""),
+    Gen.const("START RequestId: x"),
+    Gen.const("2019-03-08T15:58:45.736Z\taaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee\tok"),
+    // structured-looking but malformed tails
+    Gen.const("2019-03-08T15:58:45.736Z aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee spaces"),
+    Gen.asciiStr.map(s => s"error $s"),
+    Gen.const(""))
+
+  /** `n` seeded messages of [[messageGen]] (ASCII only). */
+  def sample(n: Int): Seq[String] = {
+    val params = Gen.Parameters.default
+    (0 until n).flatMap(i =>
+      messageGen.apply(params, Seed(i.toLong)))
   }
 }

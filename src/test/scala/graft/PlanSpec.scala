@@ -1,9 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{LogCorpus, LogPipeline}
+import graft.streaming.BulkSink
 import graft.queries.{JoinQueries, RelationalQueries}
 
 /** Plan-shape assertions (SURVEY.md §5.5): the properties that make these
@@ -302,5 +308,74 @@ class PlanSpec extends SparkSpec {
     assert(p.linesIterator.exists(l => l.contains("BroadcastHashJoin") &&
         l.contains("s_suppkey")),
       s"expected the supplier dim broadcast:\n$p")
+  }
+
+  /** Projects and Filters of a physical plan outside every whole-stage
+    * codegen span (a span runs from a `WholeStageCodegenExec` down to its
+    * `InputAdapter`s). */
+  private def interpretedOps(p: SparkPlan, inSpan: Boolean = false): Seq[SparkPlan] =
+    p match {
+      case w: WholeStageCodegenExec => interpretedOps(w.child, inSpan = true)
+      case i: InputAdapter => interpretedOps(i.child, inSpan = false)
+      case _ =>
+        (if (!inSpan && (p.isInstanceOf[ProjectExec] || p.isInstanceOf[FilterExec]))
+           Seq(p) else Nil) ++ p.children.flatMap(interpretedOps(_, inSpan))
+    }
+
+  /** Operators evaluating a `from_json`, with the number each evaluates. */
+  private def decodes(p: SparkPlan): Seq[(SparkPlan, Int)] =
+    p.collect { case n => n -> n.expressions.map(_.collect {
+        case j: JsonToStructs => j }.size).sum }
+      .filter(_._2 > 0)
+
+  test("shipper data plane: one decode, one classifier, codegen'd but for the decode") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-plan-ship")
+    val events = Seq("""{"message":"hi error","k":"v"}""", "plain",
+      "START RequestId: 1", "Task timed out")
+      .zipWithIndex.map { case (m, i) =>
+        val quoted = "\"" + m.replace("\"", "\\\"") + "\""
+        s"""{"id":"$i","timestamp":1,"message":$quoted}""" }
+    def record(messageType: String): String = {
+      val payload = s"""{"messageType":"$messageType","logGroup":"/aws/lambda/f",""" +
+        s""""logStream":"s/[1]x","logEvents":${events.mkString("[", ",", "]")}}"""
+      java.util.Base64.getEncoder.encodeToString(
+        graft.functions.GzipCodec.gzip(payload.getBytes("UTF-8")))
+    }
+    Seq((record("DATA_MESSAGE"), "r"), (record("CONTROL_MESSAGE"), "r"))
+      .toDF("data", "region").write.json(base.resolve("in").toString)
+    // the stream's own source shape: JSON-lines records
+    val records = spark.read.schema(graft.streaming.ShipperStream.recordSchema)
+      .json(base.resolve("in").toString)
+    val docs = LogPipeline.pipeline(records)
+    assert(docs.collect().length == 3)
+    val optimized = docs.queryExecution.optimizedPlan.toString
+    val executed = docs.queryExecution.executedPlan
+    def check(p: SparkPlan): Unit = {
+      val text = p.toString
+      assert(!text.contains("lower(") && !text.contains("lambdafunction"), text)
+      val ds = decodes(p)
+      assert(ds.map(_._2) == Seq(1), s"from_json must run in one operator, once:\n$text")
+      assert(interpretedOps(p) == Seq(ds.head._1),
+        s"only the decode projection may run outside codegen:\n$text")
+    }
+    assert(!optimized.contains("lower(") && !optimized.contains("lambdafunction"))
+    check(executed)
+
+    // BulkSink.ship's wire select: the plan of the bulk-file write
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      BulkSink.ship(docs, base.resolve("out").toString, 0L, bulkSize = 10)
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val write = plans.asScala.filter(_.toString.contains("StructsToJson"))
+    assert(write.size == 1, plans.asScala.mkString("\n"))
+    check(write.head)
   }
 }
