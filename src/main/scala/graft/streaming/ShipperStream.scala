@@ -334,6 +334,14 @@ object BulkSink {
     * exactly-once at the file sink; HTTP delivery is at-least-once across
     * retries, same as the reference).
     *
+    * The per-batch constants around this call, p50 of a traced perfbench
+    * `ship` run (seed 7, 4-core host, 375 docs per batch, 1.5 s triggers):
+    * trigger 338 ms, of which query planning 28 ms, the file source's
+    * `latest_offset` listing 10 ms, and the checkpoint's offsets WAL write
+    * and commit 1 ms each. The last two were 24 ms each while Hadoop's
+    * stock `file:` filesystem started a `chmod` per written file and two
+    * `readlink`s per rename (see [[graft.fs.NioLocalFileSystem]]).
+    *
     * One pass matters at small triggers: the previous persist +
     * `isEmpty`-probe + cached-write shape executed the decode plane into
     * the block cache and read it back, pushing a 10 k-row batch past a 1 s

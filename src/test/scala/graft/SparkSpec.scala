@@ -13,7 +13,6 @@ object SparkSpec {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     .withExtensions(new PlanLiteralGuard)
     .getOrCreate()
 }

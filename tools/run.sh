@@ -1,9 +1,11 @@
 #!/bin/bash
 # Run a graft main class directly (no sbt JVM/launch overhead).
 # Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# The Scala library comes from the Spark jar directory (the version build.sbt
+# compiles with); core-site.xml (graft's file: filesystem) from the resources,
+# which `sbt compile` alone does not copy into the classes directory.
 MAIN="$1"; shift
-SCALA_LIB=$(ls "$HOME"/.cache/coursier/v1/https/*/org/scala-lang/scala-library/2.13*/scala-library-2.13*.jar 2>/dev/null | head -1)
-[ -z "$SCALA_LIB" ] && SCALA_LIB=$(find / -name 'scala-library-2.13*.jar' 2>/dev/null | head -1)
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
@@ -17,5 +19,5 @@ done
 exec java $ADD_OPENS -Xms256m -Xmx${SPARK_DRIVER_MEM:-8g} -XX:+UseSerialGC \
   -Dspark.buffer.pageSize=4m $JAVA_EXTRA \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:$SCALA_LIB:/opt/spark/jars/*" \
+  -cp "${GRAFT_CLASSES:-$REPO/target/scala-2.13/classes}:$REPO/src/main/resources:/opt/spark/jars/*" \
   "$MAIN" "$@"
